@@ -396,7 +396,7 @@ def main() -> None:
     # All runs recorded per N (VERDICT r7 task 7). The 64-point gets
     # min-of-THREE (VERDICT r10 task 1): its per-run distribution is
     # wide and bimodal-ish — 8 identical fresh-process runs measured
-    # 9.7-18.3 s with no warming trend (tools/many_job_probe.py), so
+    # 9.7-18.3 s with no warming trend (fresh-process repeats), so
     # min-of-2 under-samples the fast mode and round-over-round deltas
     # at min-of-2 were sampling noise, not scheduler regressions
     # (r9's 8.70 vs r10's 14.39 were draws from the SAME distribution:

@@ -625,9 +625,11 @@ def ivf_refresh(
     (n_cells rows — broadcast), Voronoi-assign ONLY the new batch
     (:func:`ivf_assign`, O(batch x n_cells) work), and APPEND the new
     postings into the partitioned posting table's cell directories.
-    The existing postings are never read, never rewritten, never even
-    listed beyond the directory append — a 100 TB posting table costs
-    a refresh nothing but its own batch. Because assignment against
+    The existing postings are never read or rewritten: the append
+    publishes a hard-link clone of the table plus the new files
+    (``Catalog.write_partitioned``), so beyond its own batch a refresh
+    costs one directory entry per existing file (~16 us each on a
+    local disk, ~0.13 s at 8k files). Because assignment against
     the same centroids is deterministic, the refreshed index is
     bit-identical to assigning the MERGED corpus against those stored
     centroids in one monolithic pass (NOT to a fresh

@@ -90,8 +90,11 @@ class Pipeline:
     # -- constructors ---------------------------------------------------
     @classmethod
     def from_table(cls, catalog: Catalog, name: str, app: str = "app") -> "Pipeline":
+        # the leaf's version is the commit id: it changes only in the
+        # rename that publishes new data, and never repeats, even after
+        # rm + re-put
         info = catalog.info(name)
-        dag = PlanNode.leaf("scan", table=name, version=info.version)
+        dag = PlanNode.leaf("scan", table=name, version=info.commit)
         return cls(catalog.spark, catalog.get(name), dag, app=app)
 
     @classmethod
@@ -339,7 +342,7 @@ class Pipeline:
             step = chain[i]
             df = step.rebuild(df) if step.rebuild is not None else step.df
             promoted = step.staged or sightings.get(i, 0) >= 2
-            if promoted and i < n and not cache.peek(step.dag.fingerprint()):
+            if promoted and not cache.peek(step.dag.fingerprint()):
                 # write-through: downstream reads the parquet copy, so
                 # the tail plan is flat and the next sharer hits
                 df = cache.materialize(step.dag.fingerprint(), df)

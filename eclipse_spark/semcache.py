@@ -12,9 +12,9 @@ client skips the map function entirely (hit path
 Spark reuses shuffle files only within a job; cross-job reuse needs
 engine code. This module is that code:
 
-- cache key = op-DAG fingerprint (plans/dag.py) + input snapshot
-  versions — strictly finer than Eclipse's (app, file) key, so an
-  edited operator or mutated input can never serve a stale hit (the
+- cache key = op-DAG fingerprint (plans/dag.py) + input commit ids
+  — strictly finer than Eclipse's (app, file) key, so an edited
+  operator or mutated input can never serve a stale hit (the
   risk-register item in SURVEY §7).
 - hit  -> read the materialized parquet, skip the whole compute
   subtree (the map-skip analogue, but for arbitrary plans).
@@ -38,10 +38,13 @@ shuffles or Python UDF stages.
 
 TWO KEY REGIMES — pick deliberately. The never-stale guarantee above
 belongs to the *fingerprint* regime: `Pipeline.run()` keys entries by
-the op-DAG fingerprint whose scan leaves embed the input SNAPSHOT
-VERSION (``pipeline.py:94``, ``plans/dag.py:124``), so a version bump
-changes the key and the next run MISSES — stale results are
-unreachable by construction. `get_or_compute` itself, though, caches
+the op-DAG fingerprint whose scan leaves embed the input's COMMIT ID
+(``pipeline.py:97``, ``plans/dag.py:124``). The catalog publishes a
+table's data and its commit record in one rename and never reuses a
+commit id — not after ``rm`` + re-put, not across ``Catalog`` objects
+or processes on one root, not across a crash — so any commit changes
+the key and the next run MISSES: stale results are unreachable by
+construction. `get_or_compute` itself, though, caches
 under whatever string the caller passes; a caller that passes a stable
 NAME (e.g. an app id) opts into the *identity-stable* regime: the key
 survives input mutation, hits keep serving the result built against
@@ -125,6 +128,15 @@ class SemanticCache:
         by us or a peer — is not resurrected); our upserts win on
         conflict, which is benign because the only mutable field,
         recency, lives in touch files, not here."""
+        self._merge_disk_manifest()
+        tmp = self._manifest_path() + f".tmp.{os.getpid()}"
+        with open(tmp, "w") as f:
+            json.dump(self._entries, f)
+        os.replace(tmp, self._manifest_path())
+
+    def _merge_disk_manifest(self) -> None:
+        """Fold peers' on-disk entries into ours (the merge half of
+        :meth:`_save_manifest`)."""
         disk = self._read_disk_manifest()
         merged = {
             fp: e
@@ -133,10 +145,6 @@ class SemanticCache:
         }
         merged.update(self._entries)
         self._entries = merged
-        tmp = self._manifest_path() + f".tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(merged, f)
-        os.replace(tmp, self._manifest_path())
 
     def _entry_path(self, fp: str) -> str:
         return os.path.join(self.root, f"{fp}.parquet")
@@ -229,8 +237,8 @@ class SemanticCache:
             "last_access": time.time(),
         }
         self._touch(fingerprint)
-        self._save_manifest()  # merge-write BEFORE evicting: the LRU
-        self._evict(keep=fingerprint)  # scan must see peers' entries
+        self._merge_disk_manifest()  # the LRU scan must see peers' entries
+        self._evict(keep=fingerprint)
         self._save_manifest()
         return self.spark.read.parquet(path)
 

@@ -19,6 +19,22 @@ directory; the unit of parallelism is the parquet row-group/partition,
 not the whole file — that alone is the main 100 TB upgrade over the
 reference's one-map-task-per-file granularity
 (``src/master/dht/master.cc:750-771``).
+
+Commit protocol. Eclipse keys cached results on immutable DHT files
+(``fileserver.hh:354-359``), so a cache key can never name changed
+data. Here every mutation — put, append, merge, compaction, the
+sorted/z-order/bucketed layouts, branch/promote and ``put_many`` —
+stages the table's next copy in ``<name>.parquet.tmp`` (appends and
+branches start from a hard-link clone of the current copy), writes a
+``_commit.json`` record into it (the next version, a fresh random
+commit id and the caller's marker), and renames it over the current
+copy (:meth:`Catalog._replace_current`). Data and version become
+visible in one filesystem operation; a crash before that rename
+leaves the old copy with its old record. :meth:`Catalog.info` reads
+the record from disk, so every ``Catalog`` object on a root sees
+every other's commits. Versions count consecutively per table and
+restart after :meth:`Catalog.rm`; the commit id never repeats, so it
+is what semantic-cache keys embed (``Pipeline.from_table``).
 """
 
 from __future__ import annotations
@@ -26,10 +42,10 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import time
+import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql.functions import array as F_array
 from pyspark.sql.functions import col as F_col
 from pyspark.sql.functions import explode as F_explode
@@ -42,8 +58,9 @@ from pyspark.sql.functions import when as F_when
 class TableInfo:
     name: str
     path: str
-    version: int  # bumped on every write; feeds semantic-cache keys
+    version: int  # from the commit record; without one, newest snapshot + 1, or 0
     mtime: float
+    commit: str  # the commit record's unique id; feeds semantic-cache keys
 
 
 class Catalog:
@@ -52,47 +69,29 @@ class Catalog:
     Table versioning exists so the semantic cache (semcache.py) can key
     cached results on *input snapshot identity*, mirroring how Eclipse
     keys its Icache on immutable DHT files (``fileserver.hh:354-359``).
+    The version lives in each table copy's commit record (see the
+    module docstring), never in this object.
     """
 
-    _MANIFEST = "_eclipse_catalog.json"
+    _RECORD = "_commit.json"
 
     def __init__(self, spark: SparkSession, root: str, retain_versions: int = 0):
-        """``retain_versions > 0`` turns on time travel: every
-        overwrite RETIRES the current table copy (a directory rename —
-        no data copy) instead of deleting it, keeping the newest
+        """``retain_versions > 0`` turns on time travel: every commit
+        RETIRES the current table copy (a directory rename — no data
+        copy) instead of deleting it, keeping the newest
         ``retain_versions`` snapshots readable via ``get(name,
         version=...)``. Retired copies live at ``<name>.parquet.v<N>``,
         invisible to :meth:`ls`/:meth:`path_of` (which key on the bare
         ``.parquet`` suffix). This is the poor-parquet's Delta/Iceberg
         snapshot log: rename-cheap, scan-compatible, and enough for
-        audit reads and rollback; appends (:meth:`write`) mutate the
-        current copy in place and are not snapshotted."""
+        audit reads and rollback; an append (:meth:`write`) retires the
+        pre-append copy like any other commit, sharing its files with
+        the new copy through hard links."""
         self.spark = spark
         self.root = root
         self.retain_versions = retain_versions
         os.makedirs(root, exist_ok=True)
-        self._versions: dict[str, int] = {}
-        self._load_manifest()
         self.recover_pending()  # roll forward any interrupted put_many
-
-    # -- manifest -------------------------------------------------------
-    def _manifest_path(self) -> str:
-        return os.path.join(self.root, self._MANIFEST)
-
-    def _load_manifest(self) -> None:
-        try:
-            with open(self._manifest_path()) as f:
-                self._versions = {k: int(v) for k, v in json.load(f).items()}
-        except (OSError, ValueError):
-            self._versions = {}
-
-    def _save_manifest(self) -> None:
-        with open(self._manifest_path(), "w") as f:
-            json.dump(self._versions, f)
-
-    def _bump(self, name: str) -> None:
-        self._versions[name] = self._versions.get(name, 0) + 1
-        self._save_manifest()
 
     # -- paths ----------------------------------------------------------
     def path_of(self, name: str) -> str:
@@ -101,26 +100,43 @@ class Catalog:
     def exists(self, name: str) -> bool:
         return os.path.exists(self.path_of(name))
 
+    def _record(self, name: str) -> dict:
+        """The current copy's commit record, or {} when it has none."""
+        try:
+            with open(os.path.join(self.path_of(name), self._RECORD)) as fh:
+                rec = json.load(fh)
+        except (OSError, ValueError):
+            return {}
+        # a record without a commit id predates commit records: it is
+        # the bare marker, and the version lived outside the copy
+        return rec if "commit" in rec else {"marker": rec}
+
     def info(self, name: str) -> TableInfo:
         p = self.path_of(name)
+        rec = self._record(name)
+        if "version" in rec:
+            version = int(rec["version"])
+        else:  # no version recorded: one past the newest retained snapshot
+            version = max(self.history(name), default=-1) + 1
         return TableInfo(
             name=name,
             path=p,
-            version=self._versions.get(name, 0),
+            version=version,
             mtime=os.path.getmtime(p) if os.path.exists(p) else 0.0,
+            commit=str(rec.get("commit", "")),
         )
 
     # -- time travel ----------------------------------------------------
     def _version_path(self, name: str, version: int) -> str:
         return os.path.join(self.root, f"{name}.parquet.v{version}")
 
-    def _retire_current(self, name: str) -> None:
-        """Rename the current copy aside as the just-ended version's
-        snapshot, then prune snapshots beyond the retention budget.
-        No-op when retention is off or the table doesn't exist yet."""
+    def _retire_current(self, name: str, cur: int) -> None:
+        """Rename the current copy (version ``cur``) aside as that
+        version's snapshot, then prune snapshots beyond the retention
+        budget. No-op when retention is off or the table doesn't exist
+        yet."""
         if self.retain_versions <= 0 or not self.exists(name):
             return
-        cur = self._versions.get(name, 0)
         dst = self._version_path(name, cur)
         # dst may already exist as a get_many pin (hard-link clone of
         # this very copy) — the rename REPLACES it with the
@@ -156,11 +172,12 @@ class Catalog:
         reader can hold a version-pinned DataFrame that survives later
         commits — the missing half of snapshot reads (ADVICE r8: a
         live-path read only pins at plan time). No-op when the
-        snapshot already exists; the next write's retirement replaces
+        snapshot already exists; the next commit's retirement replaces
         the clone with the authoritative copy (same file names and
-        contents — appends between pin and retirement only ADD files,
-        so pinned readers keep resolving). Returns the pinned version."""
-        cur = self._versions.get(name, 0)
+        contents — commits replace the current copy wholesale and never
+        edit its files, so pinned readers keep resolving). Returns the
+        pinned version."""
+        cur = self.info(name).version
         dst = self._version_path(name, cur)
         if os.path.exists(dst):
             return cur
@@ -215,6 +232,68 @@ class Catalog:
                 removed += 1
         return removed
 
+    # -- the one publish path -------------------------------------------
+    def _stage(self, name: str, clone: str | None = None) -> str:
+        """Empty staging directory for ``name``'s next copy; with
+        ``clone``, seeded with a hard-link clone of that table's
+        current copy (appends, branch, promote). A copy that an earlier
+        crash left retired or parked is restored first (:meth:`recover`),
+        so an append clones the last published rows."""
+        self.recover(name)
+        tmp = self.path_of(name) + ".tmp"
+        shutil.rmtree(tmp, ignore_errors=True)
+        if clone is not None and self.exists(clone):
+            self._clone_dir(self.path_of(clone), tmp)
+        return tmp
+
+    def _replace_current(
+        self, name: str, tmp: str, marker: dict | None = None
+    ) -> str:
+        """Publish the staged copy ``tmp`` as ``name``'s current copy —
+        the one path every mutation takes to disk. Writes the commit
+        record (next version, fresh commit id, ``marker``) into ``tmp``,
+        then swaps it in. With retention on, the current copy retires
+        as a snapshot (``_retire_current``); with retention OFF it is
+        parked aside and deleted only after the rename — ``os.rename``
+        onto an existing non-empty parquet directory raises ENOTEMPTY,
+        and for ``put_many`` that failure would land AFTER the journal
+        commit point, making ``recover_pending`` re-raise on every
+        ``Catalog.__init__`` until manual cleanup. The park-aside keeps
+        every crash window roll-forward-safe: tmp still present ->
+        re-apply re-runs this swap; tmp gone but ``.old`` leaked ->
+        garbage swept by :meth:`recover_pending`. Restores a crashed
+        commit's retired or parked copy first, as :meth:`_stage` does
+        (``put_many``'s roll-forward stages nothing), so the next
+        version counts from the last one published."""
+        self.recover(name)
+        cur = self.info(name).version
+        rec = os.path.join(tmp, self._RECORD)
+        with open(rec + ".w", "w") as fh:
+            json.dump(
+                {"version": cur + 1, "commit": uuid.uuid4().hex, "marker": marker},
+                fh,
+            )
+        # replace, never rewrite in place: in a hard-link clone the
+        # staged record is still the current copy's file
+        os.replace(rec + ".w", rec)
+        path = self.path_of(name)
+        old = path + ".old"
+        self._retire_current(name, cur)
+        if os.path.exists(path):
+            shutil.rmtree(old, ignore_errors=True)
+            os.rename(path, old)
+        os.rename(tmp, path)
+        shutil.rmtree(old, ignore_errors=True)
+        return path
+
+    def _append(self, name: str, writer: DataFrameWriter) -> str:
+        """Append ``writer``'s rows as new files in a hard-link clone of
+        the current copy and publish it; the committed marker carries
+        over (an append is not a new batch of an idempotent sink)."""
+        tmp = self._stage(name, clone=name)
+        writer.parquet(tmp)
+        return self._replace_current(name, tmp, self.read_marker(name))
+
     def compact(
         self,
         name: str,
@@ -223,10 +302,9 @@ class Catalog:
     ) -> tuple[int, int]:
         """Small-file compaction (Delta OPTIMIZE's role over the
         rename-snapshot log): rewrite the current copy into
-        size-targeted files and publish the rewrite through the same
-        staged tmp + park-aside + rename path as a versioned put, so a
-        crash at any point leaves either the old layout or the new one,
-        never a half-compacted table.
+        size-targeted files and publish the rewrite as a :meth:`put`,
+        so a crash at any point leaves either the old layout or the new
+        one, never a half-compacted table.
 
         Streaming ingest and high-parallelism writes leave a table as
         hundreds of KB-sized part files; at warehouse scale that means
@@ -282,94 +360,54 @@ class Catalog:
             part_cols = [c for c in df.columns if c not in leaf_cols]
         else:
             part_cols = []
-        tmp = path + ".tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
         sized = (
             df.repartition(int(n_target))
             if n_target > len(before)
             else df.coalesce(int(n_target))
         )
-        writer = sized.write.mode("overwrite")
-        if part_cols:
-            writer = writer.partitionBy(*part_cols)
-        writer.parquet(tmp)
-        marker = self.read_marker(name)
-        if marker is not None:
-            # a compaction is a layout rewrite, not a logical write:
-            # carry the committed marker so idempotent sinks keyed on
-            # it (streaming IVM) don't mistake the rewrite for a replay
-            with open(os.path.join(tmp, "_commit.json"), "w") as fh:
-                json.dump(marker, fh)
-        self._replace_current(name, tmp)
-        self._bump(name)
+        # a compaction is a layout rewrite, not a logical write: carry
+        # the committed marker so idempotent sinks keyed on it
+        # (streaming IVM) don't mistake the rewrite for a replay
+        self.put(name, sized, part_cols, marker=self.read_marker(name))
         return len(before), len(_parts(path))
-
-    def _replace_current(self, name: str, tmp: str) -> None:
-        """Swap staged data in as the current copy. With retention on,
-        the current copy retires as a snapshot (``_retire_current``);
-        with retention OFF it is parked aside and deleted only after
-        the rename — ``os.rename`` onto an existing non-empty parquet
-        directory raises ENOTEMPTY, and for ``put_many`` that failure
-        would land AFTER the journal commit point, making
-        ``recover_pending`` re-raise on every ``Catalog.__init__``
-        until manual cleanup. The park-aside keeps every crash window
-        roll-forward-safe: tmp still present -> re-apply re-runs this
-        swap; tmp gone but ``.old`` leaked -> garbage swept by
-        :meth:`recover_pending`."""
-        path = self.path_of(name)
-        old = path + ".old"
-        self._retire_current(name)
-        if os.path.exists(path):
-            shutil.rmtree(old, ignore_errors=True)
-            os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old, ignore_errors=True)
 
     def branch(self, src: str, dst: str) -> str:
         """Zero-copy table branch (Delta SHALLOW CLONE / Iceberg branch
         in spirit): publish ``src``'s CURRENT copy as a new independent
         table ``dst`` via a hard-link clone — no data bytes move, just
         directory entries. Safe because every mutation path in this
-        catalog is copy-on-write at file granularity (puts/compactions
-        stage whole new part files and rename; appends only ADD files;
-        nothing ever edits a shared file in place), so the two tables
-        share immutable files until either side writes, then diverge
-        naturally. The experimentation workflow this exists for:
-        branch the production table, run a cleanup/backfill against
-        the branch, diff, then merge or drop — without 2x storage or a
-        long copy. The branch starts its own version history (bump to
-        v1 of ``dst``); it does NOT inherit src's retained snapshots."""
+        catalog is copy-on-write at file granularity (every commit
+        stages whole new part files, or a hard-link clone plus new
+        files, and renames; nothing ever edits a shared file in place),
+        so the two tables share immutable files until either side
+        writes, then diverge naturally. The experimentation workflow
+        this exists for: branch the production table, run a
+        cleanup/backfill against the branch, diff, then merge or drop —
+        without 2x storage or a long copy. The branch starts its own
+        version history (v1 of ``dst``) and carries ``src``'s marker; it
+        does NOT inherit src's retained snapshots."""
         if not self.exists(src):
             raise FileNotFoundError(f"branch: no such table {src!r}")
         if self.exists(dst):
             raise ValueError(f"branch: target table {dst!r} already exists")
-        tmp = self.path_of(dst) + ".tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        self._clone_dir(self.path_of(src), tmp)
-        os.rename(tmp, self.path_of(dst))
-        self._bump(dst)
-        return self.path_of(dst)
+        tmp = self._stage(dst, clone=src)
+        return self._replace_current(dst, tmp, self.read_marker(src))
 
     def promote(self, branch: str, into: str) -> str:
         """Publish ``branch``'s current copy as the new current version
         of ``into`` — the fast-forward merge-back completing the
         :meth:`branch` workflow (branch → backfill → diff → PROMOTE).
-        Hard-link clone staged as tmp and swapped through
-        :meth:`_replace_current`, so the publish is crash-safe like any
-        versioned put and, with retention on, ``into``'s previous copy
-        retires as a snapshot (rollback stays one :meth:`restore`
-        away). The branch itself is untouched; drop it with
-        :meth:`rm` when done."""
+        Hard-link clone staged and published like any commit, so the
+        publish is crash-safe and, with retention on, ``into``'s
+        previous copy retires as a snapshot (rollback stays one
+        :meth:`restore` away). The branch itself is untouched; drop it
+        with :meth:`rm` when done."""
         if not self.exists(branch):
             raise FileNotFoundError(f"promote: no such table {branch!r}")
         if not self.exists(into):
             raise FileNotFoundError(f"promote: no such table {into!r}")
-        tmp = self.path_of(into) + ".tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        self._clone_dir(self.path_of(branch), tmp)
-        self._replace_current(into, tmp)
-        self._bump(into)
-        return self.path_of(into)
+        tmp = self._stage(into, clone=branch)
+        return self._replace_current(into, tmp, self.read_marker(branch))
 
     def restore(self, name: str, version: int) -> str:
         """Roll a table back to a retained snapshot: the snapshot data
@@ -391,35 +429,20 @@ class Catalog:
         at scan time — the declarative replacement for DHT placement.
 
         ``marker``: small JSON committed ATOMICALLY with the data — it
-        is written as ``_commit.json`` INSIDE the staged directory
-        before the final rename, so the data and the marker become
-        visible in the same filesystem operation (underscore-prefixed
-        files are invisible to Spark's input discovery). Readers use
-        :meth:`read_marker`; idempotent writers (the streaming IVM
-        sink) key replay detection on it instead of the manifest
-        version, which is bumped in a separate, non-atomic step. A
-        marker put always stages through the tmp+rename path, even for
-        a first write."""
+        rides in the staged copy's commit record, so the data, the new
+        version and the marker become visible in the same rename
+        (underscore-prefixed files are invisible to Spark's input
+        discovery). Readers use :meth:`read_marker`; idempotent writers
+        (the streaming IVM sink) key replay detection on it."""
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        path = self.path_of(name)
-        stage = (self.retain_versions > 0 and self.exists(name)) or marker is not None
-        if stage:
-            # write first, retire + rename after: the source `df` may
-            # read from the current copy, and a crash mid-way must not
-            # lose the only copy.
-            tmp = path + ".tmp"
-            shutil.rmtree(tmp, ignore_errors=True)
-            writer.parquet(tmp)
-            if marker is not None:
-                with open(os.path.join(tmp, "_commit.json"), "w") as fh:
-                    json.dump(marker, fh)
-            self._replace_current(name, tmp)
-        else:
-            writer.parquet(path)
-        self._bump(name)
-        return path
+        # write first, retire + rename after: the source `df` may read
+        # from the current copy, and a crash mid-way must not lose the
+        # only copy.
+        tmp = self._stage(name)
+        writer.parquet(tmp)
+        return self._replace_current(name, tmp, marker)
 
     # -- multi-table atomic publish (roll-forward journal) --------------
     def _journal_path(self) -> str:
@@ -433,12 +456,11 @@ class Catalog:
         1. every DataFrame stages into ``<name>.parquet.tmp`` (no
            visibility change; a crash here leaks only tmps, cleaned by
            the next staging);
-        2. a journal listing the staged tables and their expected
-           post-commit versions is written atomically — the COMMIT
-           POINT: before it, nothing happened; after it, the commit is
-           guaranteed to complete;
-        3. each table is retired + renamed in, versions bump, and the
-           journal is removed.
+        2. a journal listing the staged tables is written atomically —
+           the COMMIT POINT: before it, nothing happened; after it, the
+           commit is guaranteed to complete;
+        3. each staged table is published (:meth:`_replace_current`:
+           commit record + rename), and the journal is removed.
 
         A crash after (2) is completed by :meth:`recover_pending`
         (called from ``__init__``, so the next session rolls the
@@ -446,28 +468,21 @@ class Catalog:
         entry IS the commit, data files follow). This gives crash
         ATOMICITY, not reader isolation: a concurrent reader mid-(3)
         can see table A new and table B old for a moment — the
-        single-filesystem-rename limit; version-pinned reads
-        (``get(name, version=...)``) sidestep it."""
-        staged = {}
+        single-filesystem-rename limit; :meth:`get_many` and
+        version-pinned reads (``get(name, version=...)``) sidestep it."""
         for name, df in tables.items():
-            tmp = self.path_of(name) + ".tmp"
-            shutil.rmtree(tmp, ignore_errors=True)
-            df.write.mode("overwrite").parquet(tmp)
-            staged[name] = self._versions.get(name, 0) + 1
+            df.write.mode("overwrite").parquet(self._stage(name))
         jtmp = self._journal_path() + f".tmp.{os.getpid()}"
         with open(jtmp, "w") as fh:
-            json.dump(staged, fh)
+            json.dump(sorted(tables), fh)
         os.replace(jtmp, self._journal_path())  # <- commit point
-        self._apply_journal(staged)
+        self._apply_journal(sorted(tables))
 
-    def _apply_journal(self, staged: dict[str, int]) -> None:
-        for name, expected in staged.items():
+    def _apply_journal(self, names: list[str]) -> None:
+        for name in names:
             tmp = self.path_of(name) + ".tmp"
             if os.path.exists(tmp):
                 self._replace_current(name, tmp)
-            if self._versions.get(name, 0) < expected:
-                self._versions[name] = expected
-        self._save_manifest()
         try:
             os.remove(self._journal_path())
         except OSError:
@@ -475,10 +490,9 @@ class Catalog:
 
     def recover_pending(self) -> list[str]:
         """Roll forward a journaled multi-table commit interrupted by a
-        crash: re-apply every staged rename/bump still outstanding.
-        Idempotent (already-renamed tables are skipped via the tmp
-        existence check; versions only move up to the journaled
-        expectation). Also sweeps ``.parquet.old`` park-aside
+        crash: publish every staged table still outstanding.
+        Idempotent (already-published tables are skipped via the tmp
+        existence check). Also sweeps ``.parquet.old`` park-aside
         directories leaked by a crash inside :meth:`_replace_current`'s
         last window (current copy already renamed in, old not yet
         deleted — the leftover is garbage by construction once the
@@ -490,11 +504,13 @@ class Catalog:
                 shutil.rmtree(os.path.join(self.root, f), ignore_errors=True)
         try:
             with open(self._journal_path()) as fh:
-                staged = {k: int(v) for k, v in json.load(fh).items()}
+                # a list of table names; a journal that maps names to
+                # versions iterates to its names too
+                staged = sorted(json.load(fh))
         except (OSError, ValueError):
             return []
         self._apply_journal(staged)
-        return sorted(staged)
+        return staged
 
     def get_many(self, names: list[str]) -> dict[str, DataFrame]:
         """Snapshot-consistent companion to :meth:`put_many`, closing
@@ -504,10 +520,11 @@ class Catalog:
         Protocol: the journal file IS the commit point, so if it
         exists the commit is already decided — roll it forward
         (:meth:`recover_pending`, idempotent) and read the all-new
-        state. Otherwise capture the manifest version vector, plan the
-        reads, and re-check vector + journal; any movement mid-plan
-        retries (commits are rename-cheap, so the race window is
-        microseconds and the retry loop converges immediately).
+        state. Otherwise read every table's commit id from its commit
+        record, plan the reads, and re-read the ids + check the
+        journal; any movement mid-plan retries (commits are
+        rename-cheap, so the race window is microseconds and the retry
+        loop converges immediately).
 
         With retention ON (``retain_versions >= 1``) the returned
         DataFrames are VERSION-PINNED (ADVICE r8): each table's current
@@ -539,15 +556,14 @@ class Catalog:
                     pass  # unwritable root: fall back to live-path read
             return self.get(n)
 
+        def _commits() -> dict[str, str]:
+            return {n: self.info(n).commit for n in names}
+
         for _ in range(10):
             self.recover_pending()  # roll forward any mid-flight commit
-            self._load_manifest()
-            vec = {n: self._versions.get(n, 0) for n in names}
+            vec = _commits()
             dfs = {n: _read(n) for n in names}
-            self._load_manifest()
-            if not os.path.exists(self._journal_path()) and all(
-                self._versions.get(n, 0) == vec[n] for n in names
-            ):
+            if not os.path.exists(self._journal_path()) and _commits() == vec:
                 return dfs
         raise RuntimeError(
             "get_many: no consistent snapshot after 10 attempts "
@@ -555,29 +571,27 @@ class Catalog:
         )
 
     def read_marker(self, name: str) -> dict | None:
-        """The ``_commit.json`` marker committed with the current table
-        data by ``put(..., marker=...)``, or None if absent."""
-        try:
-            with open(os.path.join(self.path_of(name), "_commit.json")) as fh:
-                return json.load(fh)
-        except (OSError, ValueError):
-            return None
+        """The marker committed with the current table data by
+        ``put(..., marker=...)`` (appends, compaction, branch and
+        promote carry it over), or None if absent."""
+        return self._record(name).get("marker")
 
     def recover(self, name: str) -> bool:
-        """Crash recovery for the staged-put window: if a put died
+        """Crash recovery for the publish window: if a commit died
         after :meth:`_retire_current` parked the current copy as the
         newest ``.v<N>`` snapshot but before the staged data's rename,
         the table path is missing while its data survives in the
         snapshot. Restore the newest snapshot as the current copy
-        (rename back — versions/manifest untouched, since the crashed
-        put never bumped). Returns True when a restore happened; no-op
-        (False) when the table exists or has no snapshots."""
+        (rename back — it still holds its own commit record, so the
+        version is the pre-crash one). Returns True when a restore
+        happened; no-op (False) when the table exists or has no
+        snapshots."""
         if self.exists(name):
             return False
         old = self.path_of(name) + ".old"
         if os.path.exists(old):
-            # retention-off staged put crashed between park-aside and
-            # rename-in: the parked copy IS the pre-put current.
+            # retention-off commit crashed between park-aside and
+            # rename-in: the parked copy IS the pre-commit current.
             os.rename(old, self.path_of(name))
             return True
         hist = self.history(name)
@@ -585,25 +599,6 @@ class Catalog:
             return False
         os.rename(self._version_path(name, hist[-1]), self.path_of(name))
         return True
-
-    def _swap_rewrite(self, name: str, out: DataFrame) -> str:
-        """Crash-safe in-place rewrite of a table that ``out`` still
-        reads from: land in ``.parquet.tmp`` (invisible to ls()/path_of),
-        rename original aside, rename new in, delete old last."""
-        path = self.path_of(name)
-        tmp = path + ".tmp"
-        old = path + ".old"
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(old, ignore_errors=True)
-        out.write.mode("overwrite").parquet(tmp)
-        if self.retain_versions > 0:
-            self._retire_current(name)
-        else:
-            os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old, ignore_errors=True)
-        self._bump(name)
-        return path
 
     def merge(
         self,
@@ -617,7 +612,7 @@ class Catalog:
         (or deleted when ``delete_matched``); unmatched update rows are
         inserted; unmatched target rows survive. The survivor set is a
         key-shuffled LEFT ANTI join — the scale shape — and the rewrite
-        reuses the compact() crash-safe swap.
+        is published as a :meth:`put`, which stages before it swaps.
 
         At 100 TB a transaction-log format (Delta/Iceberg) additionally
         prunes the rewrite to the files whose key ranges overlap the
@@ -630,7 +625,7 @@ class Catalog:
         keys = updates.select(*on).distinct()
         survivors = target.join(keys, on=on, how="left_anti")
         out = survivors if delete_matched else survivors.unionByName(updates)
-        return self._swap_rewrite(name, out)
+        return self.put(name, out)
 
     def put_sorted(
         self, name: str, df: DataFrame, sort_by: list[str], partitions: int | None = None
@@ -643,11 +638,7 @@ class Catalog:
         out = df.repartitionByRange(
             *( [partitions] if partitions else [] ), *[F_col(c) for c in sort_by]
         ).sortWithinPartitions(*sort_by)
-        path = self.path_of(name)
-        out.write.mode("overwrite").parquet(path)
-        self._bump(name)
-        return path
-
+        return self.put(name, out)
     def put_zorder(
         self,
         name: str,
@@ -693,10 +684,7 @@ class Catalog:
             .sortWithinPartitions("_z")
             .drop("_z")
         )
-        path = self.path_of(name)
-        out.write.mode("overwrite").parquet(path)
-        self._bump(name)
-        return path
+        return self.put(name, out)
 
     def put_bucketed(
         self,
@@ -711,15 +699,18 @@ class Catalog:
         join/aggregate with NO shuffle on either side — the standing
         replacement for Eclipse's shuffle-free DHT placement of
         intermediate data (``idistributor.hh:85-125``), paid once at
-        write time instead of per-query."""
+        write time instead of per-query. The bucket spec lives in the
+        session catalog, so the table is registered at the staging
+        directory and moved to :meth:`path_of` once published."""
         path = self.path_of(name)
         self.spark.sql(f"DROP TABLE IF EXISTS {name}")
-        shutil.rmtree(path, ignore_errors=True)
+        tmp = self._stage(name)
         writer = df.write.mode("overwrite").format("parquet").bucketBy(buckets, *keys)
         if sorted_by_key:
             writer = writer.sortBy(*keys)
-        writer.option("path", path).saveAsTable(name)
-        self._bump(name)
+        writer.option("path", tmp).saveAsTable(name)
+        self._replace_current(name, tmp)
+        self.spark.sql(f"ALTER TABLE {name} SET LOCATION '{path}'")
         return path
 
     def diff(
@@ -740,7 +731,7 @@ class Catalog:
         old = self.get(name, version=from_version)
         new = (
             self.get(name)
-            if to_version is None or to_version == self._versions.get(name, 0)
+            if to_version is None or to_version == self.info(name).version
             else self.get(name, version=to_version)
         )
         return table_diff(old, new, on)
@@ -793,24 +784,20 @@ class Catalog:
         )
 
     def rm(self, name: str) -> bool:
-        """``mrrm`` analogue. Removes retained snapshots too."""
+        """``mrrm`` analogue. Removes retained snapshots too. A later
+        put restarts the table at version 1 under a new commit id."""
         p = self.path_of(name)
         for v in self.history(name):
             shutil.rmtree(self._version_path(name, v), ignore_errors=True)
         if os.path.exists(p):
             shutil.rmtree(p)
-            self._versions.pop(name, None)
-            self._save_manifest()
             return True
         return False
 
     def write(self, name: str, df: DataFrame) -> str:
         """``Owrite`` analogue: append records to a named output table
         (Eclipse appends lines to the DHT-placed output file)."""
-        path = self.path_of(name)
-        df.write.mode("append").parquet(path)
-        self._bump(name)
-        return path
+        return self._append(name, df.write.mode("append"))
 
     def write_partitioned(
         self, name: str, df: DataFrame, partition_by: list[str]
@@ -818,13 +805,13 @@ class Catalog:
         """``Owrite`` for a hive-PARTITIONED table: append records as
         new files under the existing partition directories (and create
         directories for new partition values) without reading or
-        rewriting any row already there — the O(batch) refresh write
-        the incremental index family needs (`similarity.ivf_refresh`
-        appends its newly assigned postings; a 100 TB posting table's
-        existing files are never touched). ``partition_by`` must match
-        the layout the table was :meth:`put` with — a mismatched spec
-        would interleave incompatible directory layouts, so it is
-        checked against the current on-disk layout and fails loudly."""
+        rewriting any row already there — the refresh write the
+        incremental index family needs (`similarity.ivf_refresh` appends
+        its newly assigned postings). It writes O(batch) data; existing
+        files are only hard-linked into the next copy, one link each.
+        ``partition_by`` must match the layout the table was :meth:`put` with — a mismatched spec would interleave
+        incompatible directory layouts, so it is checked against the
+        current on-disk layout and fails loudly."""
         path = self.path_of(name)
         if os.path.exists(path):
             on_disk = sorted(
@@ -839,9 +826,9 @@ class Catalog:
                     f"specifies {sorted(partition_by)} — mixed layouts "
                     f"would corrupt partition discovery"
                 )
-        df.write.mode("append").partitionBy(*partition_by).parquet(path)
-        self._bump(name)
-        return path
+        return self._append(
+            name, df.write.mode("append").partitionBy(*partition_by)
+        )
 
 
 def table_diff(old: DataFrame, new: DataFrame, on: list[str]) -> DataFrame:

@@ -1,8 +1,8 @@
 """SURVEY §7's top risk-register item, property-tested (VERDICT r5
 task 7): under ANY interleaving of catalog mutations (put/overwrite,
-Owrite-append) and pipeline reruns, a semantic-cache hit must be
+Owrite-append, rm) and pipeline reruns, a semantic-cache hit must be
 byte-identical to a cold recompute over the CURRENT input — i.e. the
-(op-DAG fingerprint, input version) key can never serve a stale hit,
+(op-DAG fingerprint, input commit id) key can never serve a stale hit,
 and a repeat run with no intervening mutation must actually hit.
 
 Model-based: a driver-side Python model tracks exactly what the
@@ -18,8 +18,10 @@ from __future__ import annotations
 
 from collections import Counter
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from eclipse_spark.pipeline import Pipeline
@@ -28,7 +30,7 @@ from eclipse_spark.storage import Catalog
 
 OPS = st.lists(
     st.tuples(
-        st.sampled_from(["put", "append", "run", "run"]),
+        st.sampled_from(["put", "append", "rm", "run", "run"]),
         st.integers(min_value=0, max_value=4),
     ),
     min_size=1,
@@ -72,10 +74,20 @@ class _World:
 
     def append(self, seed: int) -> None:
         self.cat.write("docs", _df(self.spark, seed))
-        self.model.update(t for _i, t in _rows(seed))
+        self.model = (self.model or Counter()) + Counter(t for _i, t in _rows(seed))
+        self.mutated_since_run = True
+
+    def rm(self) -> None:
+        # the next put or append restarts the table at version 1
+        self.cat.rm("docs")
+        self.model = None
         self.mutated_since_run = True
 
     def run_and_check(self) -> None:
+        if self.model is None:  # no table: the scan itself must fail
+            with pytest.raises(AnalysisException):
+                _pipeline(self.cat, self.cache).run()
+            return
         out, was_hit = _pipeline(self.cat, self.cache).run()
         got = Counter(dict((r[0], r[1]) for r in out.collect()))
         assert got == self.model  # NEVER stale, hit or miss
@@ -107,6 +119,8 @@ def test_cache_hit_equals_cold_recompute_under_mutation(
             world.put(seed)
         elif op == "append":
             world.append(seed)
+        elif op == "rm":
+            world.rm()
         else:
             world.run_and_check()
     world.cache.unpin()

@@ -241,13 +241,14 @@ def test_ivm_exactly_once_survives_kill_restart(spark, events_small, tmp_path):
     assert got == exp  # batch 1 applied exactly once despite re-delivery
 
 
-def test_ivm_batch_apply_is_exactly_once(spark, tmp_path):
+def test_ivm_batch_apply_is_exactly_once(spark, tmp_path, monkeypatch):
     """The atomic commit marker (batch id inside the same rename as
     the data) makes the additive IVM sink idempotent: a re-delivered
-    batch_id whose put committed is skipped regardless of manifest
-    state; a crash between retire and rename is recovered from the
-    snapshot and the batch re-applied. ADVICE r5 item 5 + r6 item 5."""
-    import json
+    batch_id whose put committed is skipped; a crash after staging but
+    before the rename leaves the old view, version and marker, so the
+    crashed batch adds nothing; a crash between retire and rename is
+    recovered from the snapshot and the batch re-applied. ADVICE r5
+    item 5 + r6 item 5."""
     import os
     import shutil
 
@@ -275,16 +276,23 @@ def test_ivm_batch_apply_is_exactly_once(spark, tmp_path):
     assert {r.event_type: (r.n_rows, str(r.total))
             for r in cat.get("tv").collect()} == snap
 
-    # crash window A (data committed, manifest bump lost): rewind the
-    # manifest one version and replay batch 1 — the in-dir marker still
-    # proves batch 1 committed, so no double-add
-    man = os.path.join(cat.root, Catalog._MANIFEST)
-    with open(man) as fh:
-        st = json.load(fh)
-    st["tv"] -= 1
-    with open(man, "w") as fh:
-        json.dump(st, fh)
+    # crash window A (staged but never renamed in): batch 2's commit
+    # dies after staging its copy — the old view keeps its version and
+    # its marker, so a replay of batch 1 is still skipped and the
+    # crashed batch 2 has added nothing
+    b2 = spark.createDataFrame([("b", 7.0)], ["event_type", "value"])
+    v1 = cat.info("tv").version
+
+    def crash(*_args):
+        raise RuntimeError("injected crash before the publish rename")
+
+    monkeypatch.setattr(Catalog, "_retire_current", crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        apply_ivm_batch(cat, "tv", b2, 2, **kw)
+    monkeypatch.undo()
     cat2 = Catalog(spark, str(tmp_path / "cat"), retain_versions=1)
+    assert cat2.info("tv").version == v1
+    assert cat2.read_marker("tv") == {"last_batch": 1}
     assert apply_ivm_batch(cat2, "tv", b1, 1, **kw) is False
     assert {r.event_type: (r.n_rows, str(r.total))
             for r in cat2.get("tv").collect()} == snap
@@ -296,7 +304,6 @@ def test_ivm_batch_apply_is_exactly_once(spark, tmp_path):
     shutil.rmtree(cat2._version_path("tv", cur), ignore_errors=True)
     os.rename(cat2.path_of("tv"), cat2._version_path("tv", cur))
     assert not cat2.exists("tv")
-    b2 = spark.createDataFrame([("b", 7.0)], ["event_type", "value"])
     assert apply_ivm_batch(cat2, "tv", b2, 2, **kw) is True
     got = {r.event_type: (r.n_rows, str(r.total))
            for r in cat2.get("tv").collect()}
@@ -306,9 +313,7 @@ def test_ivm_batch_apply_is_exactly_once(spark, tmp_path):
     # direct caller with an unversioned catalog is rejected (the refresh
     # reads the table it overwrites)
     cat0 = Catalog(spark, str(tmp_path / "cat0"))
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
+    with pytest.raises(ValueError):
         apply_ivm_batch(cat0, "tv", b2, 0, **kw)
     shutil.rmtree(str(tmp_path / "cat0"), ignore_errors=True)
 
