@@ -976,11 +976,15 @@ def semantic_dedup(
         # so it inherits that width and serializes (measured: 399 -> 62
         # tasks, pair jobs 34 -> 3 tasks, +28% wall). An explicit
         # numbered repartition is exempt from AQE coalescing, pinning
-        # the materialized width; at real scale the upstream shuffle is
-        # already wider and the extra exchange of slim rows is noise.
-        sc = assigned.sparkSession.sparkContext
+        # the materialized width. The pin only widens: a large input
+        # keeps its own width. That width is the input's partition
+        # count, which costs no job when the input is a scan; the
+        # post-shuffle width would run the upstream shuffle twice
+        # (measured +2 jobs, semdedup_autoscale 3.5 -> 5.2 s at sf0.1 on
+        # 4 cores). The extra exchange of slim rows is noise at scale.
+        target = max(2, assigned.sparkSession.sparkContext.defaultParallelism // 2)
         assigned = assigned.repartition(
-            max(2, sc.defaultParallelism // 2)
+            max(target, pts.rdd.getNumPartitions())
         ).persist()
         audit = (
             assigned.groupBy("_cell")

@@ -994,6 +994,10 @@ def k_truss(
             .coalesce(_p(n_live))
             .localCheckpoint(eager=False)
         )
+    # batched cadence: the budget may exhaust with the fixpoint reached
+    # since the last check — confirm before declaring failure
+    if sup.filter(F.col("support") < k - 2).count() == 0:
+        return sup
     raise RuntimeError(
         f"k_truss: no fixpoint within max_rounds={max_rounds} "
         f"(still peeling, k={k}); raise max_rounds — "

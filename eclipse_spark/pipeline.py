@@ -35,6 +35,7 @@ free from ``groupBy().agg()``.
 from __future__ import annotations
 
 from dataclasses import dataclass, replace
+from functools import cached_property
 from typing import Any, Callable, Iterable, Iterator
 
 import pandas as pd
@@ -50,52 +51,68 @@ KV_SCHEMA = "key string, value string"
 
 @dataclass(frozen=True)
 class ChainStep:
-    """One link of a pipeline's op chain, kept alongside the DataFrame
-    so interior prefixes are addressable: ``dag`` is the op-DAG of the
-    PREFIX ending at this step (its fingerprint is the subplan cache
-    key — deliberately app-agnostic, so two different apps sharing a
-    prefix share the materialization), ``df`` the DataFrame at this
-    step, ``rebuild`` re-applies just this step's operator onto a
-    (possibly cache-served) parent DataFrame, and ``staged`` marks an
-    explicit reuse boundary (:meth:`Pipeline.stage`)."""
+    """One link of a pipeline's op chain, so interior prefixes are
+    addressable: ``dag`` is the op-DAG of the PREFIX ending at this
+    step (its fingerprint is the subplan cache key — deliberately
+    app-agnostic, so two different apps sharing a prefix share the
+    materialization), ``rebuild`` applies just this step's operator to
+    the (possibly cache-served) parent DataFrame, and ``staged`` marks
+    an explicit reuse boundary (:meth:`Pipeline.stage`). Only the leaf
+    holds a DataFrame (``df``); it has no ``rebuild``."""
 
     dag: PlanNode
-    df: DataFrame
     rebuild: Callable[[DataFrame], DataFrame] | None
     staged: bool = False
+    df: DataFrame | None = None
 
 
 class Pipeline:
-    """A fluent op chain: each method extends both the DataFrame plan
-    and the engine op-DAG (for semantic-cache fingerprinting)."""
+    """A fluent op chain: each method extends the engine op-DAG (for
+    semantic-cache fingerprinting) and records its operator as a
+    ``rebuild`` step. The DataFrame plan is built lazily — :attr:`df`
+    folds the steps over the leaf on first use — so a cache hit only
+    fingerprints the DAG, and an error in a step (a bad column name,
+    say) surfaces at :meth:`run` or :meth:`to_df`, not when the step
+    is added."""
 
     def __init__(
         self,
         spark: SparkSession,
-        df: DataFrame,
-        dag: PlanNode,
+        chain: tuple[ChainStep, ...],
         app: str = "app",
         cache: SemanticCache | None = None,
-        chain: tuple[ChainStep, ...] | None = None,
     ):
         self.spark = spark
-        self.df = df
-        self.dag = dag
         self.app = app
         self._cache = cache
-        self._chain: tuple[ChainStep, ...] = (
-            chain if chain is not None else (ChainStep(dag, df, None),)
-        )
+        self._chain = chain
+
+    @property
+    def dag(self) -> PlanNode:
+        return self._chain[-1].dag
+
+    @cached_property
+    def df(self) -> DataFrame:
+        df = self._chain[0].df
+        for step in self._chain[1:]:
+            df = step.rebuild(df)
+        return df
 
     # -- constructors ---------------------------------------------------
+    @classmethod
+    def _leaf(
+        cls, spark: SparkSession, df: DataFrame, dag: PlanNode, app: str
+    ) -> "Pipeline":
+        return cls(spark, (ChainStep(dag, None, df=df),), app)
+
     @classmethod
     def from_table(cls, catalog: Catalog, name: str, app: str = "app") -> "Pipeline":
         # the leaf's version is the commit id: it changes only in the
         # rename that publishes new data, and never repeats, even after
-        # rm + re-put
-        info = catalog.info(name)
-        dag = PlanNode.leaf("scan", table=name, version=info.commit)
-        return cls(catalog.spark, catalog.get(name), dag, app=app)
+        # rm + re-put; it comes from the same resolve as the data
+        commit, df = catalog._resolve(name)
+        dag = PlanNode.leaf("scan", table=name, version=commit)
+        return cls._leaf(catalog.spark, df, dag, app)
 
     @classmethod
     def from_parquet(cls, spark: SparkSession, path: str, app: str = "app") -> "Pipeline":
@@ -103,22 +120,17 @@ class Pipeline:
 
         mtime = os.path.getmtime(path) if os.path.exists(path) else 0
         dag = PlanNode.leaf("scan", path=path, mtime=mtime)
-        return cls(spark, spark.read.parquet(path), dag, app=app)
+        return cls._leaf(spark, spark.read.parquet(path), dag, app)
 
     @classmethod
     def from_df(cls, spark: SparkSession, df: DataFrame, label: str, app: str = "app") -> "Pipeline":
-        return cls(spark, df, PlanNode.leaf("df", label=label), app=app)
+        return cls._leaf(spark, df, PlanNode.leaf("df", label=label), app)
 
     def _next(
-        self,
-        df: DataFrame,
-        op: str,
-        rebuild: Callable[[DataFrame], DataFrame] | None = None,
-        **params: Any,
+        self, op: str, rebuild: Callable[[DataFrame], DataFrame], **params: Any
     ) -> "Pipeline":
-        dag = self.dag.child(op, **params)
-        chain = self._chain + (ChainStep(dag, df, rebuild),)
-        return Pipeline(self.spark, df, dag, self.app, self._cache, chain)
+        step = ChainStep(self.dag.child(op, **params), rebuild)
+        return Pipeline(self.spark, self._chain + (step,), self.app, self._cache)
 
     # -- map phase ------------------------------------------------------
     def map_records(self, fn: Callable[[pd.DataFrame], pd.DataFrame], schema: str) -> "Pipeline":
@@ -135,9 +147,8 @@ class Pipeline:
                     yield out
 
         return self._next(
-            self.df.mapInPandas(_runner, schema=schema),
             "map_records",
-            rebuild=lambda d: d.mapInPandas(_runner, schema=schema),
+            lambda d: d.mapInPandas(_runner, schema=schema),
             fn=fingerprint_fn(fn),
             schema=schema,
         )
@@ -145,29 +156,15 @@ class Pipeline:
     def select(self, *cols: str | Column) -> "Pipeline":
         """D1 fast path: projection stays JVM-side (column pruning
         reaches the parquet scan)."""
-        return self._next(
-            self.df.select(*cols),
-            "select",
-            rebuild=lambda d: d.select(*cols),
-            cols=_cols_key(cols),
-        )
+        return self._next("select", lambda d: d.select(*cols), cols=_cols_key(cols))
 
     def filter(self, cond: str | Column) -> "Pipeline":
         """D1 fast path: predicate stays JVM-side (pushdown)."""
-        return self._next(
-            self.df.filter(cond),
-            "filter",
-            rebuild=lambda d: d.filter(cond),
-            cond=str(cond),
-        )
+        return self._next("filter", lambda d: d.filter(cond), cond=str(cond))
 
     def with_column(self, name: str, col: Column) -> "Pipeline":
         return self._next(
-            self.df.withColumn(name, col),
-            "with_column",
-            rebuild=lambda d: d.withColumn(name, col),
-            name=name,
-            col=str(col),
+            "with_column", lambda d: d.withColumn(name, col), name=name, col=str(col)
         )
 
     # -- emit (shuffle write) ------------------------------------------
@@ -189,22 +186,19 @@ class Pipeline:
                         yield out[["key", "value"]].astype(str)
 
             return self._next(
-                self.df.mapInPandas(_runner, schema=KV_SCHEMA),
                 "emit_kv",
-                rebuild=lambda d: d.mapInPandas(_runner, schema=KV_SCHEMA),
+                lambda d: d.mapInPandas(_runner, schema=KV_SCHEMA),
                 fn=fingerprint_fn(fn),
             )
         assert key is not None
         value = value if value is not None else F.lit("1")
-
-        def _kv(d: DataFrame) -> DataFrame:
-            return d.select(
-                key.cast("string").alias("key"),
-                value.cast("string").alias("value"),
-            )
-
         return self._next(
-            _kv(self.df), "emit_kv", rebuild=_kv, key=str(key), value=str(value)
+            "emit_kv",
+            lambda d: d.select(
+                key.cast("string").alias("key"), value.cast("string").alias("value")
+            ),
+            key=str(key),
+            value=str(value),
         )
 
     # -- reduce phase ---------------------------------------------------
@@ -212,11 +206,9 @@ class Pipeline:
         """D5 associative fast path: per-key aggregate with map-side
         combine (the scalable default — use this, not group_reduce,
         when the reduce fn is associative)."""
-        out = self.df.groupBy("key").agg(agg.alias(alias))
         return self._next(
-            out,
             "reduce_by_key",
-            rebuild=lambda d: d.groupBy("key").agg(agg.alias(alias)),
+            lambda d: d.groupBy("key").agg(agg.alias(alias)),
             agg=str(agg),
             alias=alias,
         )
@@ -245,11 +237,9 @@ class Pipeline:
                 values.sort()
             return pd.DataFrame({"key": key, "out": list(fn(key, values))})
 
-        out = self.df.groupBy("key").applyInPandas(_reduce, schema="key string, out string")
         return self._next(
-            out,
             "group_reduce",
-            rebuild=lambda d: d.groupBy("key").applyInPandas(
+            lambda d: d.groupBy("key").applyInPandas(
                 _reduce, schema="key string, out string"
             ),
             fn=fingerprint_fn(fn),
@@ -260,18 +250,18 @@ class Pipeline:
     def parallelism(self, n: int, *cols: str) -> "Pipeline":
         """D7 ``set_nummapper``/``set_numreducer``: explicit partition
         count (advisory in Eclipse too — ``master.cc:750-753``)."""
-        def _rep(d: DataFrame) -> DataFrame:
-            return d.repartition(n, *cols) if cols else d.repartition(n)
-
         return self._next(
-            _rep(self.df), "parallelism", rebuild=_rep, n=n, cols=",".join(cols)
+            "parallelism",
+            lambda d: d.repartition(n, *cols) if cols else d.repartition(n),
+            n=n,
+            cols=",".join(cols),
         )
 
     # -- caching (Orthrus) ---------------------------------------------
     def cached(self, cache: SemanticCache) -> "Pipeline":
         """``enable_Icache()``: attach the semantic cache; ``run()``
         will consult/populate it."""
-        return Pipeline(self.spark, self.df, self.dag, self.app, cache, self._chain)
+        return Pipeline(self.spark, self._chain, self.app, cache)
 
     def stage(self) -> "Pipeline":
         """Mark the CURRENT PREFIX as a reusable stage boundary: on the
@@ -284,7 +274,7 @@ class Pipeline:
         nodes; un-staged shared prefixes are still auto-promoted once
         the cache sees them recur (see :meth:`run`)."""
         chain = self._chain[:-1] + (replace(self._chain[-1], staged=True),)
-        return Pipeline(self.spark, self.df, self.dag, self.app, self._cache, chain)
+        return Pipeline(self.spark, chain, self.app, self._cache)
 
     def fingerprint(self) -> str:
         return PlanNode.merge("app", (self.dag,), app=self.app).fingerprint()
@@ -340,7 +330,7 @@ class Pipeline:
             start = 1
         for i in range(start, n):
             step = chain[i]
-            df = step.rebuild(df) if step.rebuild is not None else step.df
+            df = step.rebuild(df)
             promoted = step.staged or sightings.get(i, 0) >= 2
             if promoted and not cache.peek(step.dag.fingerprint()):
                 # write-through: downstream reads the parquet copy, so

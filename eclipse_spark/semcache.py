@@ -16,8 +16,13 @@ engine code. This module is that code:
   — strictly finer than Eclipse's (app, file) key, so an edited
   operator or mutated input can never serve a stale hit (the
   risk-register item in SURVEY §7).
-- hit  -> read the materialized parquet, skip the whole compute
-  subtree (the map-skip analogue, but for arbitrary plans).
+- hit  -> serve the materialized parquet, skip the whole compute
+  subtree (the map-skip analogue, but for arbitrary plans). The read
+  is memoised per entry directory (fingerprint + the directory's inode
+  and mtime), so a repeat hit plans no new read and runs no
+  schema-inference job; only its caller's action touches Spark. A
+  peer that evicts and rematerialises the entry replaces the
+  directory, so the next hit reads the new files.
 - miss -> compute, materialize, register; LRU-evict over budget like
   ``cache.hh:72-94`` (evict unlocked tail until the new entry fits).
 
@@ -39,7 +44,9 @@ shuffles or Python UDF stages.
 TWO KEY REGIMES — pick deliberately. The never-stale guarantee above
 belongs to the *fingerprint* regime: `Pipeline.run()` keys entries by
 the op-DAG fingerprint whose scan leaves embed the input's COMMIT ID
-(``pipeline.py:97``, ``plans/dag.py:124``). The catalog publishes a
+(``Pipeline.from_table``, ``PlanNode.fingerprint``; a table copied in
+without a commit record is identified by its directory's stat
+instead). The catalog publishes a
 table's data and its commit record in one rename and never reuses a
 commit id — not after ``rm`` + re-put, not across ``Catalog`` objects
 or processes on one root, not across a crash — so any commit changes
@@ -103,6 +110,9 @@ class SemanticCache:
         # are lazy reads over the cache path, so eviction must not rmtree
         # them out from under an unexecuted plan (use-after-evict).
         self._pinned: set[str] = set()
+        # fingerprint -> ((st_ino, st_mtime_ns), DataFrame): the entry's
+        # read, reused while its directory is the one it was read from
+        self._reads: dict[str, tuple[tuple[int, int], DataFrame]] = {}
         self._load_manifest()
 
     # -- manifest -------------------------------------------------------
@@ -148,6 +158,18 @@ class SemanticCache:
 
     def _entry_path(self, fp: str) -> str:
         return os.path.join(self.root, f"{fp}.parquet")
+
+    def _read(self, fp: str) -> DataFrame:
+        """The entry's DataFrame, memoised per directory stat. The stat
+        is taken before the read, so a memoised read is never older than
+        its stat: a directory replaced mid-read only costs a re-read."""
+        path = self._entry_path(fp)
+        st = os.stat(path)
+        stamp = (st.st_ino, st.st_mtime_ns)
+        memo = self._reads.get(fp)
+        if memo is None or memo[0] != stamp:
+            memo = self._reads[fp] = (stamp, self.spark.read.parquet(path))
+        return memo[1]
 
     # -- recency: per-entry touch files (no manifest write per hit) -----
     def _touch_path(self, fp: str) -> str:
@@ -219,12 +241,13 @@ class SemanticCache:
             self._load_manifest()
             entry = self._entries.get(fingerprint)
         if entry is None or not os.path.exists(path):
+            self._reads.pop(fingerprint, None)
             self.stats.misses += 1
             return None
         self._touch(fingerprint)  # move-to-front (cache.hh:52-60) — one
         self.stats.hits += 1      # utime, NO whole-manifest rewrite
         self._pinned.add(fingerprint)  # see _pinned: lazy reads must survive
-        return self.spark.read.parquet(path)
+        return self._read(fingerprint)
 
     def materialize(self, fingerprint: str, df: DataFrame) -> DataFrame:
         """Icache-write path: persist the result, register, evict LRU
@@ -240,7 +263,7 @@ class SemanticCache:
         self._merge_disk_manifest()  # the LRU scan must see peers' entries
         self._evict(keep=fingerprint)
         self._save_manifest()
-        return self.spark.read.parquet(path)
+        return self._read(fingerprint)
 
     def get_or_compute(
         self, fingerprint: str, compute: Callable[[], DataFrame]
@@ -275,6 +298,7 @@ class SemanticCache:
             except OSError:
                 pass
             del self._entries[fp]
+            self._reads.pop(fp, None)
             self.stats.evictions += 1
 
     def invalidate(self, fingerprint: str | None = None) -> None:
@@ -286,6 +310,7 @@ class SemanticCache:
             except OSError:
                 pass
             self._entries.pop(fp, None)
+            self._reads.pop(fp, None)
             self._pinned.discard(fp)
         self._save_manifest()
 

@@ -90,6 +90,9 @@ class Catalog:
         self.spark = spark
         self.root = root
         self.retain_versions = retain_versions
+        # name -> (stamp, DataFrame): the current copy's resolved read,
+        # reused until a commit or a directory replace moves the stamp
+        self._reads: dict[str, tuple[tuple, DataFrame]] = {}
         os.makedirs(root, exist_ok=True)
         self.recover_pending()  # roll forward any interrupted put_many
 
@@ -110,6 +113,37 @@ class Catalog:
         # a record without a commit id predates commit records: it is
         # the bare marker, and the version lived outside the copy
         return rec if "commit" in rec else {"marker": rec}
+
+    def _stamp(self, name: str) -> tuple | None:
+        """(commit id, inode, mtime_ns) of the current copy, or None
+        when the table is missing. Every commit renames a new directory
+        in with a new commit id; a table without a record (copied in
+        from outside) still moves its directory's stat when replaced."""
+        try:
+            st = os.stat(self.path_of(name))
+        except FileNotFoundError:
+            return None
+        return self._record(name).get("commit", ""), st.st_ino, st.st_mtime_ns
+
+    def _resolve(self, name: str) -> tuple[str, DataFrame]:
+        """(commit id, DataFrame) of the current copy, both from one
+        stamp; a copy without a commit id is identified by its
+        directory's stat instead, so replacing it changes the id too.
+        The read is memoised per stamp: a repeat resolve of an
+        unchanged table re-runs no file listing or schema-inference job.
+        A stamp that moved during the read means a commit landed
+        mid-way, so the read is retried rather than paired with the
+        wrong commit id."""
+        while True:
+            stamp = self._stamp(name)
+            memo = self._reads.get(name)
+            if stamp is None or memo is None or memo[0] != stamp:
+                df = self.spark.read.parquet(self.path_of(name))  # raises if missing
+                if stamp is None or self._stamp(name) != stamp:
+                    continue
+                memo = self._reads[name] = (stamp, df)
+            commit, ino, mtime_ns = stamp
+            return commit or f"dir-{ino}-{mtime_ns}", memo[1]
 
     def info(self, name: str) -> TableInfo:
         p = self.path_of(name)
@@ -750,11 +784,16 @@ class Catalog:
     def get(self, name: str, version: int | None = None) -> DataFrame:
         """``mrcat``/``Rread`` analogue: read a named table. With
         ``version`` (and ``retain_versions`` on), read that retained
-        snapshot instead — time-travel audit reads. Raw-input caching
-        (Eclipse C1/C2) is Spark's buffer/page cache + optional
-        ``.persist()`` at the call site."""
+        snapshot instead — time-travel audit reads.
+
+        Raw-input caching (Eclipse C1/C2): the current copy's read is
+        memoised per commit (:meth:`_resolve`), so a repeat ``get`` of
+        an unchanged table returns the same DataFrame without listing
+        files or inferring the schema again; any commit, from any
+        ``Catalog`` on the root, yields a fresh read. Row data is left
+        to the page cache, or to ``.persist()`` at the call site."""
         if version is None:
-            return self.spark.read.parquet(self.path_of(name))
+            return self._resolve(name)[1]
         p = self._version_path(name, version)
         if not os.path.exists(p):
             raise FileNotFoundError(
@@ -787,6 +826,7 @@ class Catalog:
         """``mrrm`` analogue. Removes retained snapshots too. A later
         put restarts the table at version 1 under a new commit id."""
         p = self.path_of(name)
+        self._reads.pop(name, None)
         for v in self.history(name):
             shutil.rmtree(self._version_path(name, v), ignore_errors=True)
         if os.path.exists(p):

@@ -704,6 +704,26 @@ def test_k_truss_hand_graph(spark):
         k_truss(strip, 4, max_rounds=1)
 
 
+def test_k_truss_fixpoint_after_the_last_check_round(spark):
+    """Small graphs check for the fixpoint every 3rd round. K4 plus a
+    pendant triangle peels in one round (the pendant triangle's edges
+    have support 1 < k-2), so with a budget of 2 or 3 rounds the
+    fixpoint lands after the last check; the post-loop confirmation
+    returns it instead of raising "no fixpoint"."""
+    from eclipse_spark.operators.graph import k_truss
+
+    edges = spark.createDataFrame(
+        [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 5), (4, 6), (5, 6)],
+        ["a", "b"],
+    )
+    for max_rounds in (2, 3):
+        got = {
+            (r["a"], r["b"]): r["support"]
+            for r in k_truss(edges, 4, max_rounds=max_rounds).collect()
+        }
+        assert got == {e: 2 for e in [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)]}
+
+
 def test_k_truss_matches_python_peel(spark):
     """Random sparse graph vs an independent driver-side edge peel."""
     import itertools

@@ -264,3 +264,81 @@ def test_subplan_reuse_invalidated_by_input_mutation(spark, sf_smoke, tmp_path):
         .count()
     )
     assert total == exp
+
+
+# -- hit cost: a repeat hit runs only its caller's action ---------------
+
+
+def _jobs_in(spark, fn) -> int:
+    """Spark jobs launched while ``fn()`` runs, counted under a fresh
+    job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count the jobs of one call")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_repeat_hit_launches_at_most_one_job(spark, sf_smoke, tmp_path):
+    """Rebuilding and rerunning a pipeline that hits re-reads neither
+    the table nor the cache entry: the only Spark job is the caller's
+    collect of the result."""
+    cat = Catalog(spark, str(tmp_path / "tables"))
+    cat.put("docs", spark.read.parquet(f"{sf_smoke}/documents.parquet"))
+    cache = SemanticCache(spark, str(tmp_path / "cache"))
+    cold, hit = _wc_pipeline(cat, cache).run()
+    want = sorted(map(tuple, cold.collect()))
+    assert hit is False and _wc_pipeline(cat, cache).run()[1] is True
+
+    served = []
+
+    def rerun():
+        df, hit = _wc_pipeline(cat, cache).run()
+        served.append((hit, sorted(map(tuple, df.collect()))))
+
+    assert _jobs_in(spark, rerun) <= 1
+    assert served == [(True, want)]
+
+
+def test_building_a_seen_chain_launches_no_job(spark, sf_smoke, tmp_path):
+    """The table read behind ``Pipeline.from_table`` is memoised per
+    commit and the chain's plan is built lazily, so building a chain a
+    second time runs no schema inference or any other job."""
+    cat = Catalog(spark, str(tmp_path / "tables"))
+    cat.put("docs", spark.read.parquet(f"{sf_smoke}/documents.parquet"))
+
+    def build():
+        return (
+            Pipeline.from_table(cat, "docs", app="b")
+            .filter(F.col("doc_id") > 0)
+            .emit_kv(key=F.col("doc_id"))
+            .count_by_key()
+        )
+
+    build()
+    assert _jobs_in(spark, build) == 0
+
+
+def test_memoised_hit_follows_peer_rematerialisation(spark, tmp_path):
+    """A peer cache on the same root invalidates and rematerialises an
+    entry this cache already served: the next hit here reads the new
+    files (no FileNotFoundException from the replaced ones) and
+    returns the new rows."""
+    root = str(tmp_path / "shared")
+    a, b = SemanticCache(spark, root), SemanticCache(spark, root)
+    a.materialize("fp", spark.range(0, 3))
+    assert sorted(r[0] for r in a.lookup("fp").collect()) == [0, 1, 2]
+
+    b.invalidate("fp")
+    b.materialize("fp", spark.range(10, 14))
+    got = a.lookup("fp")
+    assert got is not None
+    assert sorted(r[0] for r in got.collect()) == [10, 11, 12, 13]
+
+    b.invalidate("fp")
+    assert a.lookup("fp") is None

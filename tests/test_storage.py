@@ -679,3 +679,106 @@ def test_record_without_commit_id_is_a_bare_marker(spark, tmp_path):
     assert cat.info("tv").version == 3
     assert cat.history("tv") == [2]
     assert cat.read_marker("tv") == {"last_batch": 2}
+
+
+# -- the memoised read: reused per commit, fresh after every commit ----
+
+
+def _mutate(cat: Catalog, spark, op: str) -> list[int]:
+    """Apply one mutation to table ``t`` (rows 0-2, previous version
+    rows 10-12, branch ``b`` rows 30-32); return the rows it leaves."""
+    if op == "put":
+        cat.put("t", spark.range(100, 103))
+        return [100, 101, 102]
+    if op == "write":
+        cat.write("t", spark.range(3, 5))
+        return [0, 1, 2, 3, 4]
+    if op == "rm_put":
+        cat.rm("t")
+        cat.put("t", spark.range(200, 202))
+        return [200, 201]
+    if op == "compact":
+        assert cat.compact("t", target_partitions=1)[0] > 1
+        return [0, 1, 2]
+    if op == "restore":
+        cat.restore("t", cat.history("t")[-1])
+        return [10, 11, 12]
+    assert op == "promote"
+    cat.promote("b", "t")
+    return [30, 31, 32]
+
+
+@pytest.mark.parametrize(
+    "op", ["put", "write", "rm_put", "compact", "restore", "promote"]
+)
+def test_memoised_read_follows_every_commit(spark, tmp_path, op):
+    """``get`` reuses one DataFrame while the table is unchanged; after
+    any commit the next ``get`` and the next cached run return the new
+    rows (a compaction deletes the files the old read listed), and the
+    memo holds one read per table."""
+    cat = Catalog(spark, str(tmp_path / "cat"), retain_versions=1)
+    cache = SemanticCache(spark, str(tmp_path / "cache"))
+    cat.put("t", spark.range(10, 13))
+    cat.put("t", spark.range(0, 3).repartition(3))
+    cat.branch("t", "b")
+    cat.put("b", spark.range(30, 33))
+
+    def run():
+        return Pipeline.from_table(cat, "t").cached(cache).run()
+
+    held = cat.get("t")
+    assert cat.get("t") is held and _ids(held) == [0, 1, 2]
+    assert run()[1] is False and run()[1] is True
+
+    want = _mutate(cat, spark, op)
+    fresh = cat.get("t")
+    assert fresh is not held and _ids(fresh) == want
+    assert cat.get("t") is fresh and list(cat._reads) == ["t"]
+    out, hit = run()
+    assert _ids(out) == want and hit is False
+
+
+def test_memoised_read_follows_commit_by_second_catalog(spark, tmp_path):
+    """A commit made through another ``Catalog`` on the same root moves
+    the commit id this catalog's memo is keyed on."""
+    root = str(tmp_path / "cat")
+    a, b = Catalog(spark, root), Catalog(spark, root)
+    cache = SemanticCache(spark, str(tmp_path / "cache"))
+    a.put("t", spark.range(0, 3))
+
+    def run():
+        return Pipeline.from_table(a, "t").cached(cache).run()
+
+    assert _ids(a.get("t")) == [0, 1, 2]
+    assert run()[1] is False and run()[1] is True
+    b.put("t", spark.range(10, 13))
+    assert _ids(a.get("t")) == [10, 11, 12]
+    out, hit = run()
+    assert _ids(out) == [10, 11, 12] and hit is False
+
+
+def test_memoised_read_follows_recordless_directory_replace(spark, tmp_path):
+    """A table copied in from outside has no commit record; its memo
+    and its scan key follow the directory's stat, so a directory
+    replaced by rename is read afresh and a cached run misses."""
+    import shutil
+
+    root = str(tmp_path / "cat")
+    cat = Catalog(spark, root)
+    cache = SemanticCache(spark, str(tmp_path / "cache"))
+    spark.range(0, 3).write.parquet(cat.path_of("t"))
+    assert cat.info("t").commit == ""
+
+    def run():
+        return Pipeline.from_table(cat, "t").cached(cache).run()
+
+    assert _ids(cat.get("t")) == [0, 1, 2]
+    assert run()[1] is False and run()[1] is True
+
+    staging = os.path.join(root, "incoming")
+    spark.range(10, 13).write.parquet(staging)
+    shutil.rmtree(cat.path_of("t"))
+    os.rename(staging, cat.path_of("t"))
+    assert _ids(cat.get("t")) == [10, 11, 12]
+    out, hit = run()
+    assert _ids(out) == [10, 11, 12] and hit is False
