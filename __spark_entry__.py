@@ -5145,7 +5145,8 @@ def _ktruss_oracle(k: int, rounds: int) -> str:
     endpoint + one closure probe), count per-edge support, keep edges
     with support >= k-2. ``rounds`` must exceed the peel depth; extra
     rounds are no-ops, and the final SELECT reads the support computed
-    over the FIXPOINT edge set."""
+    over the FIXPOINT edge set. The query raises if round ``rounds``
+    still removed edges (:func:`_sql_fixpoint_guard`)."""
     parts = [
         """WITH e AS MATERIALIZED (
               SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
@@ -5171,11 +5172,33 @@ def _ktruss_oracle(k: int, rounds: int) -> str:
               SELECT a, b FROM s{i} WHERE sup >= {k - 2})"""
         )
     parts.append(
+        f"""fixpoint AS MATERIALIZED ({
+            _sql_fixpoint_guard(f"r{rounds}", f"r{rounds - 1}", "ktruss oracle")
+        })"""
+    )
+    parts.append(
         f"""SELECT s.a, s.b, CAST(s.sup AS BIGINT) AS support
             FROM s{rounds - 1} s
-            JOIN r{rounds} r ON s.a = r.a AND s.b = r.b"""
+            JOIN r{rounds} r ON s.a = r.a AND s.b = r.b
+            CROSS JOIN fixpoint WHERE fixpoint.ok"""
     )
     return ",\n".join(parts[:-1]) + "\n" + parts[-1]
+
+
+def _sql_fixpoint_guard(last: str, prev: str, what: str) -> str:
+    """Shared SQL: the body of a one-row MATERIALIZED CTE that raises
+    unless an unrolled peel's last round ``last`` kept every row of the
+    round before it, ``prev`` (a peel only removes rows, so equal
+    counts mean an unchanged set). Cross-joined into the final SELECT,
+    it turns a too-shallow unroll into an error instead of a silent
+    mismatch; being materialized, it is checked even when the result
+    is empty."""
+    return (
+        f"SELECT CASE WHEN (SELECT count(*) FROM {last}) = "
+        f"(SELECT count(*) FROM {prev}) THEN true ELSE "
+        f"error('{what}: the last unrolled round still removed rows; "
+        "unroll deeper') END AS ok"
+    )
 
 
 def q_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8893,7 +8916,9 @@ def _sql_kcore_peel(depth: int = 24) -> str:
     the unroll leaves every already-converged SF's result
     bit-identical; 24 covers all probe SFs with margin (a peel
     removes >=1 node per non-converged round, and these synthetic
-    graphs' degeneracy chains measured <=14)."""
+    graphs' degeneracy chains measured <=14). The query raises if
+    round ``depth`` still removed edges (:func:`_sql_fixpoint_guard`),
+    so an unroll too shallow for some SF fails loudly."""
     parts = [
         """
             WITH e AS MATERIALIZED (
@@ -8915,9 +8940,12 @@ def _sql_kcore_peel(depth: int = 24) -> str:
               JOIN n{i} x ON r.u = x.u JOIN n{i} y ON r.v = y.u)"""
         )
     parts.append(
-        f"""
+        f""",
+            fixpoint AS MATERIALIZED ({
+                _sql_fixpoint_guard(f"r{depth}", f"r{depth - 1}", "kcore oracle")
+            })
             SELECT u AS node, CAST(count(*) AS BIGINT) AS degree
-            FROM r{depth} GROUP BY u
+            FROM r{depth} CROSS JOIN fixpoint WHERE fixpoint.ok GROUP BY u
         """
     )
     return "".join(parts)

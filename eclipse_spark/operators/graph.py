@@ -723,14 +723,16 @@ def k_core(
                 sym.unpersist()
                 sym = compacted
                 n_cached = n_good
+        # batched cadence: the budget may exhaust with the fixpoint
+        # reached since the last check — confirm before declaring
+        # failure, while the edge cache the unchecked rounds' lineage
+        # reads is still persisted
+        n_nodes, n_good = deg.agg(
+            F.count("*"),
+            F.sum(F.when(F.col("degree") >= k, 1).otherwise(0)),
+        ).collect()[0]
     finally:
         sym.unpersist()
-    # batched cadence: the budget may exhaust with the fixpoint reached
-    # since the last check — confirm before declaring failure
-    n_nodes, n_good = deg.agg(
-        F.count("*"),
-        F.sum(F.when(F.col("degree") >= k, 1).otherwise(0)),
-    ).collect()[0]
     if n_nodes == 0 or n_good == n_nodes:
         if stats_out is not None:
             stats_out["rounds"] = max_rounds

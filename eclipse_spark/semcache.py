@@ -23,19 +23,24 @@ engine code. This module is that code:
   schema-inference job; only its caller's action touches Spark. A
   peer that evicts and rematerialises the entry replaces the
   directory, so the next hit reads the new files.
-- miss -> compute, materialize, register; LRU-evict over budget like
+- miss -> compute, materialize, publish; LRU-evict over budget like
   ``cache.hh:72-94`` (evict unlocked tail until the new entry fits).
 
 Concurrency (N sessions sharing one cache root, like Orthrus' N
-per-node caches over one DHT): hits never rewrite the manifest —
-recency lives in per-entry TOUCH FILES (``<fp>.touch`` mtime), so the
-hot path is one utime, not a whole-manifest rewrite whose
-write-and-rename would drop a concurrent session's fresh registration
-(round-5 defect). Structural writes (register/evict/invalidate) MERGE
-with the on-disk manifest before the atomic rename: another session's
-entries survive, resurrection of entries a peer evicted is prevented
-by an existence check on the entry's parquet path. Entry byte-sizes
-are deterministic per fingerprint, so merge conflicts are benign.
+per-node caches over one DHT): the root's directory listing is the
+cache's only state. An entry is one self-describing directory
+``<fp>.parquet`` holding the parquet files and ``_entry.json``
+(``{"bytes": N}``), and only a directory with that record is served.
+``materialize`` writes into a private ``<fp>.tmp.<uuid>``, adds the
+record and publishes with one rename, as ``Catalog._replace_current``
+publishes tables, so a peer never reads a half-written entry; if a
+peer published the fingerprint first, its entry stays. Recency is the
+record's mtime: a hit is one utime on it, which leaves the directory's
+stat, and so the memoised read, unchanged. Eviction and invalidation
+rename an entry aside before deleting it, so a peer sees the whole
+entry or none of it. A directory without a record (a crashed or older
+writer's) is never served, but it counts at its walked size and is
+evicted like any entry.
 
 At 100 TB the cache directory lives on shared storage (S3/HDFS) so a
 hit is a parquet scan — still a win when the cached subtree contains
@@ -76,8 +81,8 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import time
-from dataclasses import dataclass, field
+import uuid
+from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -91,7 +96,7 @@ class CacheStats:
 
 
 class SemanticCache:
-    _MANIFEST = "_semcache_manifest.json"
+    _RECORD = "_entry.json"
 
     def __init__(
         self,
@@ -104,8 +109,6 @@ class SemanticCache:
         self.budget_bytes = budget_bytes
         self.stats = CacheStats()
         os.makedirs(root, exist_ok=True)
-        # entries: fingerprint -> {"bytes": int, "last_access": float}
-        self._entries: dict[str, dict] = {}
         # Entries handed out by lookup() this session: their DataFrames
         # are lazy reads over the cache path, so eviction must not rmtree
         # them out from under an unexecuted plan (use-after-evict).
@@ -113,51 +116,13 @@ class SemanticCache:
         # fingerprint -> ((st_ino, st_mtime_ns), DataFrame): the entry's
         # read, reused while its directory is the one it was read from
         self._reads: dict[str, tuple[tuple[int, int], DataFrame]] = {}
-        self._load_manifest()
 
-    # -- manifest -------------------------------------------------------
-    def _manifest_path(self) -> str:
-        return os.path.join(self.root, self._MANIFEST)
-
-    def _read_disk_manifest(self) -> dict[str, dict]:
-        try:
-            with open(self._manifest_path()) as f:
-                return json.load(f)
-        except (OSError, ValueError):
-            return {}
-
-    def _load_manifest(self) -> None:
-        self._entries = self._read_disk_manifest()
-
-    def _save_manifest(self) -> None:
-        """Structural write (register / evict / invalidate): MERGE with
-        the current on-disk manifest so a concurrent session's
-        registrations are never dropped, then write-and-rename so a
-        reader never observes a torn file. Our removals win via the
-        existence check (an entry whose parquet dir is gone — evicted
-        by us or a peer — is not resurrected); our upserts win on
-        conflict, which is benign because the only mutable field,
-        recency, lives in touch files, not here."""
-        self._merge_disk_manifest()
-        tmp = self._manifest_path() + f".tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(self._entries, f)
-        os.replace(tmp, self._manifest_path())
-
-    def _merge_disk_manifest(self) -> None:
-        """Fold peers' on-disk entries into ours (the merge half of
-        :meth:`_save_manifest`)."""
-        disk = self._read_disk_manifest()
-        merged = {
-            fp: e
-            for fp, e in disk.items()
-            if fp in self._entries or os.path.exists(self._entry_path(fp))
-        }
-        merged.update(self._entries)
-        self._entries = merged
-
+    # -- entry directories ----------------------------------------------
     def _entry_path(self, fp: str) -> str:
         return os.path.join(self.root, f"{fp}.parquet")
+
+    def _record_path(self, fp: str) -> str:
+        return os.path.join(self._entry_path(fp), self._RECORD)
 
     def _read(self, fp: str) -> DataFrame:
         """The entry's DataFrame, memoised per directory stat. The stat
@@ -171,24 +136,6 @@ class SemanticCache:
             memo = self._reads[fp] = (stamp, self.spark.read.parquet(path))
         return memo[1]
 
-    # -- recency: per-entry touch files (no manifest write per hit) -----
-    def _touch_path(self, fp: str) -> str:
-        return os.path.join(self.root, f"{fp}.touch")
-
-    def _touch(self, fp: str) -> None:
-        p = self._touch_path(fp)
-        try:
-            os.utime(p)
-        except OSError:
-            with open(p, "a"):
-                pass
-
-    def _last_access(self, fp: str) -> float:
-        try:
-            return os.path.getmtime(self._touch_path(fp))
-        except OSError:
-            return float(self._entries.get(fp, {}).get("last_access", 0.0))
-
     @staticmethod
     def _dir_bytes(path: str) -> int:
         total = 0
@@ -197,72 +144,98 @@ class SemanticCache:
                 total += os.path.getsize(os.path.join(dirpath, fn))
         return total
 
-    # -- subplan registry (cross-query interior reuse) ------------------
-    def _subplans_path(self) -> str:
-        return os.path.join(self.root, "_semcache_subplans.json")
+    def _listing(self) -> list[tuple[float, int, str]]:
+        """``(recency, bytes, fingerprint)`` of every ``*.parquet``
+        directory in the root. A published entry reads both from its
+        record; a directory without one counts at its walked size and
+        its own mtime, so it is still evicted."""
+        out = []
+        for d in os.scandir(self.root):
+            if not (d.name.endswith(".parquet") and d.is_dir()):
+                continue
+            try:
+                with open(os.path.join(d.path, self._RECORD)) as fh:
+                    size = int(json.load(fh)["bytes"])
+                    recency = os.fstat(fh.fileno()).st_mtime
+            except (OSError, ValueError, KeyError, TypeError):
+                try:
+                    size, recency = self._dir_bytes(d.path), d.stat().st_mtime
+                except OSError:  # removed by a peer mid-scan
+                    continue
+            out.append((recency, size, d.name[: -len(".parquet")]))
+        return out
 
-    def note_subplan(self, fingerprint: str) -> int:
-        """Record one sighting of an interior subplan fingerprint and
-        return the total sighting count. The pipeline layer promotes a
-        prefix to a materialized cache entry once a SECOND distinct
-        cold run contains it — recurring shared stages become cached
-        automatically. Persisted with write-and-rename; a lost
-        increment under a concurrent-writer race only delays promotion
-        by one run (benign)."""
+    def _remove(self, fp: str) -> bool:
+        """Delete an entry directory: rename it aside first, so a peer
+        sees the whole entry or none of it. False if it was not there."""
+        self._reads.pop(fp, None)
+        aside = os.path.join(self.root, f"{fp}.del.{uuid.uuid4().hex}")
         try:
-            with open(self._subplans_path()) as f:
-                counts = json.load(f)
-        except (OSError, ValueError):
-            counts = {}
-        counts[fingerprint] = int(counts.get(fingerprint, 0)) + 1
-        tmp = self._subplans_path() + f".tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(counts, f)
-        os.replace(tmp, self._subplans_path())
-        return counts[fingerprint]
+            os.rename(self._entry_path(fp), aside)
+        except OSError:
+            return False
+        shutil.rmtree(aside, ignore_errors=True)
+        return True
+
+    # -- subplan sightings (cross-query interior reuse) -----------------
+    def note_subplan(self, fingerprint: str) -> int:
+        """Record a sighting of an interior subplan fingerprint: 1 on
+        its first sighting under this root, 2 on any later one. The
+        pipeline layer promotes a prefix to a materialized cache entry
+        once a SECOND distinct cold run contains it — recurring shared
+        stages become cached automatically. The record is a
+        ``<fp>.seen`` marker created with ``O_CREAT|O_EXCL``, so of
+        concurrent first sightings exactly one returns 1."""
+        marker = os.path.join(self.root, f"{fingerprint}.seen")
+        try:
+            os.close(os.open(marker, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
+        except FileExistsError:
+            return 2
+        return 1
 
     def peek(self, fingerprint: str) -> bool:
         """Entry existence WITHOUT stats/touch/pin side effects — the
         pipeline layer's prefix probe (it may test many prefixes per
         cold run; only the one actually served counts as a hit)."""
-        if not os.path.exists(self._entry_path(fingerprint)):
-            return False
-        if fingerprint not in self._entries:
-            self._load_manifest()  # registered by a concurrent session
-        return fingerprint in self._entries
+        return os.path.exists(self._record_path(fingerprint))
 
     # -- core protocol --------------------------------------------------
     def lookup(self, fingerprint: str) -> DataFrame | None:
         """Icache-hit path: return the materialized result, or None."""
-        entry = self._entries.get(fingerprint)
-        path = self._entry_path(fingerprint)
-        if entry is None and os.path.exists(path):
-            # registered by a concurrent session after our last load
-            self._load_manifest()
-            entry = self._entries.get(fingerprint)
-        if entry is None or not os.path.exists(path):
+        try:
+            # move-to-front (cache.hh:52-60): one utime on the record,
+            # which fails if no published entry is there
+            os.utime(self._record_path(fingerprint))
+            df = self._read(fingerprint)
+        except OSError:
             self._reads.pop(fingerprint, None)
             self.stats.misses += 1
             return None
-        self._touch(fingerprint)  # move-to-front (cache.hh:52-60) — one
-        self.stats.hits += 1      # utime, NO whole-manifest rewrite
+        self.stats.hits += 1
         self._pinned.add(fingerprint)  # see _pinned: lazy reads must survive
-        return self._read(fingerprint)
+        return df
 
     def materialize(self, fingerprint: str, df: DataFrame) -> DataFrame:
-        """Icache-write path: persist the result, register, evict LRU
-        entries until under budget, and return the cached read (so the
-        caller's downstream plan reads parquet, not the live subtree)."""
-        path = self._entry_path(fingerprint)
-        df.write.mode("overwrite").parquet(path)
-        self._entries[fingerprint] = {
-            "bytes": self._dir_bytes(path),
-            "last_access": time.time(),
-        }
-        self._touch(fingerprint)
-        self._merge_disk_manifest()  # the LRU scan must see peers' entries
+        """Icache-write path: write the result into a private staging
+        directory with its ``_entry.json`` record, publish it with one
+        rename, evict LRU entries until under budget, and return the
+        cached read (so the caller's downstream plan reads parquet, not
+        the live subtree). If a peer published the fingerprint first,
+        its entry is kept and the staged copy dropped; a directory
+        without a record at the entry path is an unpublished leftover
+        and is removed before the rename."""
+        tmp = os.path.join(self.root, f"{fingerprint}.tmp.{uuid.uuid4().hex}")
+        df.write.parquet(tmp)
+        with open(os.path.join(tmp, self._RECORD), "w") as fh:
+            json.dump({"bytes": self._dir_bytes(tmp)}, fh)
+        if not self.peek(fingerprint):
+            self._remove(fingerprint)
+            try:
+                os.rename(tmp, self._entry_path(fingerprint))
+            except OSError:  # a peer published in between: keep theirs
+                pass
+        shutil.rmtree(tmp, ignore_errors=True)
         self._evict(keep=fingerprint)
-        self._save_manifest()
         return self._read(fingerprint)
 
     def get_or_compute(
@@ -279,40 +252,26 @@ class SemanticCache:
 
     # -- eviction -------------------------------------------------------
     def _evict(self, keep: str | None = None) -> None:
-        total = sum(e["bytes"] for e in self._entries.values())
-        if total <= self.budget_bytes:
-            return
-        # Oldest-access first (touch-file mtime = cross-session
-        # recency); the just-written entry and every entry handed out
-        # this session are locked, like Eclipse skipping locked entries
-        # at the LRU tail (cache.hh:78-86).
-        for fp in sorted(self._entries, key=self._last_access):
+        entries = self._listing()
+        total = sum(size for _, size, _ in entries)
+        # Oldest-access first (record mtime = cross-session recency);
+        # the just-written entry and every entry handed out this
+        # session are locked, like Eclipse skipping locked entries at
+        # the LRU tail (cache.hh:78-86).
+        for _, size, fp in sorted(entries):
             if total <= self.budget_bytes:
                 break
             if fp == keep or fp in self._pinned:
                 continue
-            total -= self._entries[fp]["bytes"]
-            shutil.rmtree(self._entry_path(fp), ignore_errors=True)
-            try:
-                os.remove(self._touch_path(fp))
-            except OSError:
-                pass
-            del self._entries[fp]
-            self._reads.pop(fp, None)
-            self.stats.evictions += 1
+            total -= size
+            if self._remove(fp):
+                self.stats.evictions += 1
 
     def invalidate(self, fingerprint: str | None = None) -> None:
-        targets = [fingerprint] if fingerprint else list(self._entries)
+        targets = [fingerprint] if fingerprint else [fp for *_, fp in self._listing()]
         for fp in targets:
-            shutil.rmtree(self._entry_path(fp), ignore_errors=True)
-            try:
-                os.remove(self._touch_path(fp))
-            except OSError:
-                pass
-            self._entries.pop(fp, None)
-            self._reads.pop(fp, None)
+            self._remove(fp)
             self._pinned.discard(fp)
-        self._save_manifest()
 
     def unpin(self, fingerprint: str | None = None) -> None:
         """Release session pins (all, or one) once the caller has

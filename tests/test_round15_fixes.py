@@ -140,3 +140,27 @@ def test_kcore_oracle_matches_engine_at_sf0001(spark, sf_smoke):
         sv = s[cols].sort_values(cols).reset_index(drop=True).astype(str)
         dv = d[cols].sort_values(cols).reset_index(drop=True).astype(str)
         assert (sv.values == dv.values).all()
+
+
+def test_too_shallow_peel_oracles_raise(sf_correct):
+    """The kcore and ktruss oracles are unrolled peels. An unroll whose
+    last round still removes edges raises instead of returning a
+    half-peeled result that would mismatch the engine silently: at
+    sf0.01 the 10-core peel takes about 10 rounds and the 4-truss peel
+    about 5."""
+    import duckdb
+    import pytest
+
+    import __spark_entry__ as entrymod
+
+    con = duckdb.connect()
+    con.sql(
+        "CREATE VIEW lineitem AS SELECT * FROM "
+        f"'{sf_correct}/lineitem.parquet'"
+    )
+    for sql in (entrymod._sql_kcore_peel(4), entrymod._ktruss_oracle(4, 2)):
+        with pytest.raises(duckdb.Error, match="unroll deeper"):
+            con.sql(sql).fetchall()
+    osql = entrymod.oracle_sql()
+    assert len(con.sql(osql["kcore"]).fetchall()) > 0
+    assert len(con.sql(osql["ktruss"]).fetchall()) > 0

@@ -85,22 +85,22 @@ def test_invalidate(spark, tmp_path):
 
 
 def test_two_sessions_share_root_without_losing_registrations(spark, tmp_path):
-    """VERDICT r5 task 4: hits must not rewrite the manifest (the old
-    write-and-rename was last-writer-wins and could drop a concurrent
-    session's fresh registration). Two SemanticCache instances on one
-    root: each registers its own entry, each hammers hits on its own —
-    a fresh third instance must see BOTH."""
+    """Two SemanticCache instances on one root: each publishes its own
+    entry and hammers hits on it, and neither drops the other's entry
+    (an entry is its own directory, so there is no shared record for
+    one session to overwrite). A fresh third instance sees every
+    entry."""
     root = str(tmp_path / "shared")
     a = SemanticCache(spark, root)
     b = SemanticCache(spark, root)
     a.materialize("fp_a", spark.range(3))
-    b.materialize("fp_b", spark.range(4))  # b merges: must not drop fp_a
-    # hits on stale in-memory views must not clobber the other session
+    b.materialize("fp_b", spark.range(4))  # must not drop fp_a
+    # hits must not clobber the other session's entry
     for _ in range(3):
         assert a.lookup("fp_a") is not None
         assert b.lookup("fp_b") is not None
-    # a's view predates fp_b's registration; a structural write from a
-    # (a third entry) must still preserve fp_b via the merge
+    # a was constructed before fp_b existed; a's next write (a third
+    # entry) must still preserve fp_b
     a.materialize("fp_c", spark.range(5))
     fresh = SemanticCache(spark, root)
     assert fresh.lookup("fp_a") is not None
@@ -110,9 +110,9 @@ def test_two_sessions_share_root_without_losing_registrations(spark, tmp_path):
 
 
 def test_cross_session_hit_after_peer_registration(spark, tmp_path):
-    """A session constructed BEFORE a peer registered an entry must
-    still hit on it (manifest reloaded when the parquet exists but the
-    in-memory view doesn't know it)."""
+    """A session constructed BEFORE a peer published an entry still
+    hits on it: a lookup reads the root, not a view taken at
+    construction."""
     root = str(tmp_path / "shared2")
     early = SemanticCache(spark, root)
     late = SemanticCache(spark, root)
@@ -120,6 +120,104 @@ def test_cross_session_hit_after_peer_registration(spark, tmp_path):
     got = early.lookup("fp_z")
     assert got is not None and got.count() == 7
     assert early.stats.hits == 1
+
+
+def test_peer_misses_an_entry_that_is_mid_write(spark, tmp_path):
+    """A peer that has seen an entry looks it up while another session
+    is rewriting it, i.e. the entry directory holds only the
+    ``_temporary/0/`` tree Spark's committer leaves mid-job. The lookup
+    misses; it neither raises nor serves a partial entry."""
+    import os
+    import shutil
+
+    root = str(tmp_path / "shared")
+    a = SemanticCache(spark, root)
+    a.materialize("fp", spark.range(5))
+    peer = SemanticCache(spark, root)
+    assert peer.peek("fp")
+    path = os.path.join(root, "fp.parquet")
+    shutil.rmtree(path)
+    os.makedirs(os.path.join(path, "_temporary", "0"))
+    assert peer.lookup("fp") is None
+    assert peer.stats.misses == 1 and peer.stats.hits == 0
+    assert not peer.peek("fp")
+
+
+def test_unregistered_directory_is_counted_and_evicted(spark, tmp_path):
+    """A parquet directory in the root that no cache published (a
+    writer that died mid-publish, or an older cache layout) is never
+    served, counts against the budget and is evicted. Afterwards the
+    root holds only entry directories and sighting markers."""
+    import os
+
+    root = tmp_path / "cache"
+    root.mkdir()
+    spark.range(50).write.parquet(str(root / "orphan.parquet"))
+    cache = SemanticCache(spark, str(root), budget_bytes=1)
+    assert cache.lookup("orphan") is None
+    assert cache.note_subplan("fp_s") == 1
+    assert SemanticCache(spark, str(root)).note_subplan("fp_s") == 2
+    cache.materialize("fp_a", spark.range(3))
+    cache.materialize("fp_b", spark.range(4))
+    names = sorted(os.listdir(root))
+    assert "orphan.parquet" not in names
+    assert names == ["fp_b.parquet", "fp_s.seen"], names
+    assert cache.stats.evictions == 2
+
+
+def test_later_publish_keeps_the_first_entry(spark, tmp_path):
+    """Two sessions materialize one fingerprint: the second keeps the
+    entry the first published and drops its own copy, so a read the
+    first session already handed out stays valid."""
+    root = str(tmp_path / "shared")
+    a, b = SemanticCache(spark, root), SemanticCache(spark, root)
+    held = a.materialize("fp", spark.range(0, 3))
+    got = b.materialize("fp", spark.range(0, 3).repartition(2))
+    assert sorted(r[0] for r in held.collect()) == [0, 1, 2]
+    assert sorted(r[0] for r in got.collect()) == [0, 1, 2]
+
+
+def test_legacy_entry_is_replaced_when_rematerialised(spark, tmp_path):
+    """An entry directory without ``_entry.json`` (written by an older
+    cache) misses and is replaced by the next materialize."""
+    root = tmp_path / "cache"
+    root.mkdir()
+    spark.range(3).write.parquet(str(root / "fp.parquet"))
+    cache = SemanticCache(spark, str(root))
+    assert cache.lookup("fp") is None
+    cache.materialize("fp", spark.range(10, 12))
+    assert sorted(r[0] for r in cache.lookup("fp").collect()) == [10, 11]
+
+
+def test_concurrent_first_sightings_count_once(spark, tmp_path):
+    """Threads on caches sharing one root race to sight the same
+    subplans: each fingerprint is reported as a first sighting exactly
+    once, so no sighting is lost and none counted twice."""
+    import sys
+    import threading
+
+    root = str(tmp_path / "shared")
+    caches = [SemanticCache(spark, root) for _ in range(8)]
+    fps = [f"sub{i}" for i in range(200)]
+    firsts: list[list[str]] = [[] for _ in caches]
+
+    def sight(i: int) -> None:
+        for fp in fps:
+            if caches[i].note_subplan(fp) == 1:
+                firsts[i].append(fp)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=sight, args=(i,)) for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert sorted(fp for f in firsts for fp in f) == sorted(fps)
 
 
 # -- cross-query SUBPLAN reuse (VERDICT r6 task 6) ----------------------
