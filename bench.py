@@ -30,10 +30,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pyspark.sql import SparkSession
-
 import __spark_entry__ as entrymod
-from eclipse_spark.session import run_concurrent
+from eclipse_spark.session import EngineConfig, get_spark, run_concurrent
 
 # Round stamp for the per-query artifact (VERDICT r14 item 2a: the r14
 # 8-core scaling rerun overwrote bench_full.json and the driver's own
@@ -308,37 +306,10 @@ STABLE_TIER = frozenset([
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1")
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("eclipse_spark_bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # r15: AQE applies to cached-plan materialization (ships in the
-        # engine session defaults too — session.py documents why; the
-        # bench session mirrors the engine configuration so the
-        # measured plans are the shipped plans)
-        .config(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            "true",
-        )
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        # sf0.1 parquet files are ~10-60 MB each — split well below the
-        # 128 MB default so scans fan out over the local cores the same
-        # way a real cluster would over executors
-        .config("spark.sql.files.maxPartitionBytes", "16m")
-        # FAIR mode so the many_job probe shares task slots across
-        # concurrently submitted jobs (pools materialize on demand);
-        # single-job latency numbers are unaffected (one pool, all slots)
-        .config("spark.scheduler.mode", "FAIR")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark(EngineConfig(app_name="eclipse_spark_bench"))
+    cpus = spark.sparkContext.defaultParallelism
     spark.sparkContext.setLogLevel("ERROR")
 
     queries = entrymod.queries()
@@ -402,7 +373,7 @@ def main() -> None:
     # (r9's 8.70 vs r10's 14.39 were draws from the SAME distribution:
     # r9 runs [14.19, 8.70], r10 session runs [15.80, 7.95], r10
     # driver runs [15.49, 14.39]). run_concurrent now also caps
-    # submission threads at half the CPUs (session.py admission
+    # submission threads at half the task slots (session.py admission
     # control), which removes the 64-thread GIL/py4j contention floor.
     many_job: dict[str, float] = {}
     many_job_runs: dict[str, list[float]] = {}
@@ -514,7 +485,7 @@ def main() -> None:
         "many_job": many_job,
         "many_job_runs": many_job_runs,  # both runs: min + spread per N
         "sf": sf,
-        "cpus": int(cpus),
+        "cpus": cpus,
         "n_queries": len(timings),
     }
     # sf-scaling probe ratios (tools/scale_probe.py writes the sidecar;
@@ -531,7 +502,7 @@ def main() -> None:
         with open(refresh_path) as fh:
             full["refresh_steady_state"] = json.load(fh)
     # round+cpu-stamped per-query artifact: survives any rerun order
-    with open(os.path.join(here, stamped_artifact_name(int(cpus))), "w") as fh:
+    with open(os.path.join(here, stamped_artifact_name(cpus)), "w") as fh:
         json.dump(full, fh, indent=1, sort_keys=True)
     # the main artifact is only replaced by a run at >= its core count
     # at the same sf (the low-core SCALING rerun must not clobber the
@@ -544,7 +515,7 @@ def main() -> None:
             existing = json.load(fh)
         keep_main = (
             existing.get("sf") == sf
-            and int(existing.get("cpus", 0)) > int(cpus)
+            and int(existing.get("cpus", 0)) > cpus
         )
     except (OSError, ValueError):
         pass

@@ -63,41 +63,6 @@ def exact_dup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
 # -- MinHash ----------------------------------------------------------
 
 
-_LONG_MAX = (1 << 63) - 1
-
-
-def minhash_signature(
-    text: Column,
-    num_hashes: int = 32,
-    shingle_k: int = 5,
-    unit: str = "word",
-) -> Column:
-    """MinHash signature: array of ``num_hashes`` min-values, where
-    hash_i(s) = xxhash64(s, seed=i) over the shingle set.
-
-    Single-pass formulation: one ``aggregate`` over the shingles keeps
-    a ``num_hashes``-wide running-min state, so each shingle is hashed
-    ``num_hashes`` times but the shingle array is built exactly once
-    (the naive per-hash ``transform`` re-walks it per seed — measured
-    ~6x slower at sf0.1). ``unit='word'`` (default) uses word n-grams
-    (~#tokens shingles); ``'char'`` uses char k-grams (~#chars)."""
-    from eclipse_spark.operators.text import word_shingles
-
-    sh = F.array_distinct(
-        word_shingles(text, shingle_k) if unit == "word" else shingles(text, shingle_k)
-    )
-    init = F.array_repeat(F.lit(_LONG_MAX).cast("bigint"), num_hashes)
-    return F.aggregate(
-        sh,
-        init,
-        lambda acc, s: F.zip_with(
-            acc,
-            F.array(*[F.xxhash64(s, F.lit(i)) for i in range(num_hashes)]),
-            lambda a, b: F.least(a, b),
-        ),
-    )
-
-
 def minhash_signatures_df(
     df: DataFrame,
     text_col: str = "text",

@@ -12,8 +12,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 TOKEN_SPLIT_RE = r"\s+"
-# BPE-ish word/punct segmentation: word runs, number runs, single punct.
-BPE_TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 _STOPWORDS = {
     "en": ["the", "of", "and", "to", "a", "in", "is", "it", "that", "for"],
@@ -28,17 +26,8 @@ def tokens(text: Column) -> Column:
     return F.filter(F.split(F.lower(F.trim(text)), TOKEN_SPLIT_RE), lambda t: t != "")
 
 
-def bpe_ish_tokens(text: Column) -> Column:
-    """Regex word/number/punct segmentation (BPE-ish granularity)."""
-    return F.regexp_extract_all(F.lower(text), F.lit(BPE_TOKEN_RE), 0)
-
-
 def token_count(text: Column) -> Column:
     return F.size(tokens(text))
-
-
-def char_count(text: Column) -> Column:
-    return F.length(text)
 
 
 def quality_stats(df: DataFrame, text_col: str = "text") -> DataFrame:

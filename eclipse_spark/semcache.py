@@ -78,6 +78,7 @@ quality prefix compute it once.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
@@ -144,13 +145,20 @@ class SemanticCache:
                 total += os.path.getsize(os.path.join(dirpath, fn))
         return total
 
-    def _listing(self) -> list[tuple[float, int, str]]:
+    def _listing(self) -> tuple[list[tuple[float, int, str]], list[tuple[float, str]]]:
         """``(recency, bytes, fingerprint)`` of every ``*.parquet``
-        directory in the root. A published entry reads both from its
-        record; a directory without one counts at its walked size and
-        its own mtime, so it is still evicted."""
-        out = []
+        directory in the root, and ``(mtime, path)`` of every ``.seen``
+        marker. A published entry reads both from its record; a
+        directory without one counts at its walked size and its own
+        mtime, so it is still evicted."""
+        out, markers = [], []
         for d in os.scandir(self.root):
+            if d.name.endswith(".seen"):
+                try:
+                    markers.append((d.stat().st_mtime, d.path))
+                except OSError:  # removed by a peer mid-scan
+                    pass
+                continue
             if not (d.name.endswith(".parquet") and d.is_dir()):
                 continue
             try:
@@ -163,7 +171,7 @@ class SemanticCache:
                 except OSError:  # removed by a peer mid-scan
                     continue
             out.append((recency, size, d.name[: -len(".parquet")]))
-        return out
+        return out, markers
 
     def _remove(self, fp: str) -> bool:
         """Delete an entry directory: rename it aside first, so a peer
@@ -185,7 +193,8 @@ class SemanticCache:
         once a SECOND distinct cold run contains it — recurring shared
         stages become cached automatically. The record is a
         ``<fp>.seen`` marker created with ``O_CREAT|O_EXCL``, so of
-        concurrent first sightings exactly one returns 1."""
+        concurrent first sightings exactly one returns 1. Markers age
+        out with the entries: see :meth:`_evict`."""
         marker = os.path.join(self.root, f"{fingerprint}.seen")
         try:
             os.close(os.open(marker, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
@@ -252,26 +261,45 @@ class SemanticCache:
 
     # -- eviction -------------------------------------------------------
     def _evict(self, keep: str | None = None) -> None:
-        entries = self._listing()
+        entries, markers = self._listing()
         total = sum(size for _, size, _ in entries)
         # Oldest-access first (record mtime = cross-session recency);
         # the just-written entry and every entry handed out this
         # session are locked, like Eclipse skipping locked entries at
         # the LRU tail (cache.hh:78-86).
-        for _, size, fp in sorted(entries):
-            if total <= self.budget_bytes:
-                break
-            if fp == keep or fp in self._pinned:
+        kept, evicted = [], False
+        for recency, size, fp in sorted(entries):
+            if total <= self.budget_bytes or fp == keep or fp in self._pinned:
+                kept.append(recency)
                 continue
             total -= size
+            evicted = True
             if self._remove(fp):
                 self.stats.evictions += 1
+        # A pass that evicts also drops every sighting older than all
+        # the entries it keeps: such a marker has aged past the LRU
+        # tail. A pass under budget drops none, so a cold run's
+        # sighting survives its own result's publish.
+        if evicted and kept:
+            oldest = min(kept)
+            for mtime, path in markers:
+                if mtime < oldest:
+                    with contextlib.suppress(FileNotFoundError):
+                        os.remove(path)
 
     def invalidate(self, fingerprint: str | None = None) -> None:
-        targets = [fingerprint] if fingerprint else [fp for *_, fp in self._listing()]
+        """Drop one entry, or every entry and every sighting marker."""
+        if fingerprint:
+            targets, markers = [fingerprint], []
+        else:
+            entries, markers = self._listing()
+            targets = [fp for *_, fp in entries]
         for fp in targets:
             self._remove(fp)
             self._pinned.discard(fp)
+        for _, path in markers:
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(path)
 
     def unpin(self, fingerprint: str | None = None) -> None:
         """Release session pins (all, or one) once the caller has

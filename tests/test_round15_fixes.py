@@ -83,7 +83,15 @@ def test_int8_operators_do_not_leak_cached_blocks(spark, sf_correct, monkeypatch
     def n_cached() -> int:
         return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
 
+    def persistent() -> dict[int, str]:
+        rdds = spark.sparkContext._jsc.getPersistentRDDs()
+        return {
+            int(i): f"{r.name()} @ {r.rdd().getCreationSite()}"
+            for i, r in rdds.items()
+        }
+
     base = n_cached()
+    base_ids = set(persistent())
     emb = spark.read.parquet(os.path.join(sf_correct, "embeddings.parquet"))
     corpus = emb.select("vec_id", "embedding").limit(200)
     queries = corpus.limit(3)
@@ -109,9 +117,11 @@ def test_int8_operators_do_not_leak_cached_blocks(spark, sf_correct, monkeypatch
         if n_cached() <= base:
             break
         time.sleep(0.5)
+    extra = {i: site for i, site in persistent().items() if i not in base_ids}
     assert n_cached() <= base, (
         f"checkpoint blocks not released: {n_cached()} persistent RDDs "
-        f"vs baseline {base} after GC"
+        f"vs baseline {base} after GC; above the baseline: "
+        + "; ".join(f"rdd {i}: {site}" for i, site in sorted(extra.items()))
     )
 
 

@@ -147,7 +147,8 @@ def test_unregistered_directory_is_counted_and_evicted(spark, tmp_path):
     """A parquet directory in the root that no cache published (a
     writer that died mid-publish, or an older cache layout) is never
     served, counts against the budget and is evicted. Afterwards the
-    root holds only entry directories and sighting markers."""
+    root holds only the surviving entry: the sighting marker is older
+    than it, so the evicting pass drops the marker too."""
     import os
 
     root = tmp_path / "cache"
@@ -161,7 +162,7 @@ def test_unregistered_directory_is_counted_and_evicted(spark, tmp_path):
     cache.materialize("fp_b", spark.range(4))
     names = sorted(os.listdir(root))
     assert "orphan.parquet" not in names
-    assert names == ["fp_b.parquet", "fp_s.seen"], names
+    assert names == ["fp_b.parquet"], names
     assert cache.stats.evictions == 2
 
 
@@ -218,6 +219,26 @@ def test_concurrent_first_sightings_count_once(spark, tmp_path):
         sys.setswitchinterval(old)
     assert not any(t.is_alive() for t in threads)
     assert sorted(fp for f in firsts for fp in f) == sorted(fps)
+
+
+def test_sighting_markers_age_out_with_evicted_entries(spark, tmp_path):
+    """Many distinct sightings under a budget that holds one entry: each
+    evicting materialize drops every marker older than the entry it
+    keeps, so only sightings newer than the surviving entry are left,
+    and invalidate() drops those too."""
+    import os
+
+    root = tmp_path / "cache"
+    cache = SemanticCache(spark, str(root), budget_bytes=1)
+    for i in range(6):
+        assert cache.note_subplan(f"s{i}") == 1
+        cache.materialize(f"e{i}", spark.range(i + 1))
+    cache.note_subplan("late")
+    assert sorted(os.listdir(root)) == ["e5.parquet", "late.seen"]
+    survivor = os.stat(root / "e5.parquet" / "_entry.json").st_mtime
+    assert os.stat(root / "late.seen").st_mtime >= survivor
+    cache.invalidate()
+    assert os.listdir(root) == []
 
 
 # -- cross-query SUBPLAN reuse (VERDICT r6 task 6) ----------------------

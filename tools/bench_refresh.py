@@ -28,7 +28,7 @@ Writes bench_refresh.json at the repo root; bench.py merges it into
 bench_full.json (like bench_scaling.json) and SCALE.md references it.
 
 Run: python tools/bench_refresh.py   (env: SPARK_GRAFT_SF_DIR, default
-/root/testdata/sf0.1; SPARK_GRAFT_CPUS, default 32)
+/root/testdata/sf0.1; SPARK_GRAFT_CPUS, default all cores)
 """
 
 from __future__ import annotations
@@ -42,12 +42,12 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from eclipse_spark.operators import dedup
 from eclipse_spark.operators import multimodal as mm
 from eclipse_spark.operators import similarity as sim
+from eclipse_spark.session import EngineConfig, get_spark
 from eclipse_spark.storage import Catalog
 from eclipse_spark.streaming import windows as sw
 
@@ -71,20 +71,8 @@ def _timed(fn, n: int = 3) -> list[float]:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("eclipse_spark_bench_refresh")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        .config("spark.sql.files.maxPartitionBytes", "16m")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark(EngineConfig(app_name="eclipse_spark_bench_refresh"))
     spark.sparkContext.setLogLevel("ERROR")
 
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))

@@ -40,8 +40,12 @@ from __future__ import annotations
 import os
 import sys
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from pyspark.sql import DataFrame  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
+
+from eclipse_spark.session import EngineConfig, get_spark  # noqa: E402
 
 SRC = "/root/testdata/sf0.1"
 R = 10
@@ -117,14 +121,7 @@ def _roll_vec(df: DataFrame, r: int) -> DataFrame:
 def main(out_dir: str, replicas: int = R, tables: list[str] | None = None) -> None:
     global R
     R = replicas
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .appName("make_scaled_sf")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark(EngineConfig(app_name="make_scaled_sf"))
     spark.sparkContext.setLogLevel("ERROR")
     os.makedirs(out_dir, exist_ok=True)
 

@@ -22,23 +22,14 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
-
 import __spark_entry__ as entrymod
 from eclipse_spark.admin import explain_summary
+from eclipse_spark.session import EngineConfig, get_spark
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("plan_audit")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
+    spark = get_spark(EngineConfig(app_name="plan_audit"))
     spark.sparkContext.setLogLevel("ERROR")
 
     out: dict[str, dict] = {}

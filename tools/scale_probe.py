@@ -30,9 +30,8 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from pyspark.sql import SparkSession  # noqa: E402
-
 import __spark_entry__ as entrymod  # noqa: E402
+from eclipse_spark.session import EngineConfig, get_spark  # noqa: E402
 
 # the heaviest queries from BENCH r05/r06 plus every near-dup / ANN /
 # graph pipeline whose cost model could hide superlinearity
@@ -863,19 +862,7 @@ def main() -> None:
     big = os.path.join(REPO, "benchdata", "sf1")
     if not os.path.exists(os.path.join(big, "lineitem.parquet")):
         raise SystemExit("run tools/make_scaled_sf.py first")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("eclipse_spark_scale_probe")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        .config("spark.sql.files.maxPartitionBytes", "16m")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark(EngineConfig(app_name="eclipse_spark_scale_probe"))
     spark.sparkContext.setLogLevel("ERROR")
     queries = entrymod.queries()
     out: dict[str, dict] = {}
