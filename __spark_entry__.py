@@ -5620,21 +5620,22 @@ def q_events_stream_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         src = os.path.join(work, "src")
         os.makedirs(src)
-
-        def _write_one(df: DataFrame, name: str, mtime: float) -> None:
-            tmp = os.path.join(work, f"_{name}")
-            df.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-            dst = os.path.join(src, name)
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (mtime, mtime))
-
+        # one scan writes all three batches as hive partitions of one
+        # task; each part file then becomes batch_<i>.parquet, pinned to
+        # trigger order by mtime (a residue with no events has no file)
+        parts = os.path.join(work, "_parts")
+        ev.withColumn("_b", F.col("event_id") % 3).coalesce(1).write.partitionBy(
+            "_b"
+        ).parquet(parts)
         for i in range(3):
-            _write_one(
-                ev.filter(F.col("event_id") % 3 == i),
-                f"batch_{i}.parquet",
-                1_000_000.0 + 100 * i,
-            )
+            bdir = os.path.join(parts, f"_b={i}")
+            if not os.path.isdir(bdir):
+                continue
+            part = next(f for f in os.listdir(bdir) if f.endswith(".parquet"))
+            dst = os.path.join(src, f"batch_{i}.parquet")
+            shutil.move(os.path.join(bdir, part), dst)
+            mtime = 1_000_000.0 + 100 * i
+            os.utime(dst, (mtime, mtime))
         stream = (
             spark.readStream.schema("event_id long, event_type string, value double")
             .option("maxFilesPerTrigger", 1)

@@ -21,11 +21,18 @@ class EngineStatus:
     n_active_jobs: int      # "numjob"
     n_active_stages: int    # stage-level view of "numtask" pressure
     default_parallelism: int
+    # JVM-wide whole-stage codegen: compiles (codegen cache misses) and
+    # their total time. A count that climbs on repeated work is a
+    # recompile storm.
+    codegen_compiles: int
+    codegen_compile_ms: float
 
 
 def status(spark: SparkSession) -> EngineStatus:
     sc = spark.sparkContext
     tracker = sc.statusTracker()
+    compiles = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    codegen = sc._jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
     # local mode reports no separate executors; defaultParallelism is
     # the honest "slots" number in both local and cluster mode
     return EngineStatus(
@@ -33,6 +40,8 @@ def status(spark: SparkSession) -> EngineStatus:
         n_active_jobs=len(tracker.getActiveJobsIds()),
         n_active_stages=len(tracker.getActiveStageIds()),
         default_parallelism=sc.defaultParallelism,
+        codegen_compiles=compiles.getCount(),
+        codegen_compile_ms=codegen.compileTime() / 1e6,  # kept in ns
     )
 
 

@@ -39,6 +39,13 @@ _DEFAULT_CONFS: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    # Whole-stage codegen caches each compiled class per (context
+    # classloader, source), and in local mode the driver and the executor
+    # use different loaders, so every generated class takes two entries.
+    # A many-job burst needs about 211 entries; under Spark's cap of 100
+    # each burst recompiled them and threw away the JIT-warmed copies.
+    # 2048 holds the working set: steady bursts compile nothing.
+    "spark.sql.codegen.cache.maxEntries": "2048",
     # run_concurrent gives each submitting thread its own pool; FAIR
     # shares task slots across those pools instead of queueing whole
     # jobs by arrival
@@ -79,6 +86,14 @@ def get_spark(config: EngineConfig | None = None) -> SparkSession:
     for k, v in config.merged_confs().items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    # The codegen cache is JVM-wide and takes its size from SQLConf.get
+    # on the thread that first compiles. Only this thread has the session
+    # active outside Spark's actions; a run_concurrent worker that builds
+    # an RDD (``df.rdd``, as util.ensure_parallelism does) compiles
+    # outside an action, reads Spark's defaults, and the cap above would
+    # silently stay at 100. Touching CodeGenerator here sizes it from
+    # this session.
+    spark._jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

@@ -81,3 +81,69 @@ for i, rel in enumerate({scripts!r}):
         cwd=REPO, capture_output=True, text=True, timeout=300,
     )
     assert done.returncode == 0, done.stderr[-2000:]
+
+
+def codegen_pass(spark, n: int = 60) -> None:
+    """``n`` small queries whose generated code differs (the literals are
+    inlined into it); each compiles a class on the driver and again on
+    the executor, so a pass needs about ``2 * n`` codegen cache entries."""
+    for i in range(n):
+        spark.range(3).selectExpr(f"id * {i + 7} + {i} AS x").collect()
+
+
+def _compiles(spark) -> int:
+    from eclipse_spark import status
+
+    return status(spark).codegen_compiles
+
+
+def test_repeated_queries_reuse_compiled_code(spark):
+    before = _compiles(spark)
+    codegen_pass(spark)
+    first = _compiles(spark) - before
+    assert first > 100, first  # more entries than Spark's default cap
+    codegen_pass(spark)
+    assert _compiles(spark) - before == first
+
+
+def test_codegen_cache_size_holds_when_first_query_runs_in_a_worker():
+    probe = f"""
+import sys
+sys.path[:0] = [{REPO!r}, {os.path.join(REPO, "tests")!r}]
+from eclipse_spark.session import EngineConfig, get_spark, run_concurrent
+from test_session import _compiles, codegen_pass
+spark = get_spark(EngineConfig(master="local[2]", app_name="codegen_probe"))
+# df.rdd (as in util.ensure_parallelism) compiles outside the action
+# scope that makes the session active, so this worker's first compile
+# reads Spark's default cap unless get_spark sized the cache first
+run_concurrent(spark, [lambda: spark.range(3).selectExpr("id + 1 AS x").rdd.getNumPartitions()])
+codegen_pass(spark)
+before = _compiles(spark)
+codegen_pass(spark)
+print("recompiles", _compiles(spark) - before)
+spark.stop()
+"""
+    done = subprocess.run(
+        [sys.executable, "-c", probe],
+        cwd=REPO, capture_output=True, text=True, timeout=300,
+    )
+    assert done.returncode == 0, done.stderr[-2000:]
+    assert done.stdout.split()[-2:] == ["recompiles", "0"], done.stdout[-2000:]
+
+
+def test_status_reports_codegen_compiles(spark):
+    from eclipse_spark import status
+
+    def run():
+        spark.range(5).selectExpr("id * 918273 + 645 AS x").collect()
+
+    s0 = status(spark)
+    run()
+    s1 = status(spark)
+    assert s1.codegen_compiles > s0.codegen_compiles
+    assert s1.codegen_compile_ms > s0.codegen_compile_ms
+    run()
+    s2 = status(spark)
+    assert (s2.codegen_compiles, s2.codegen_compile_ms) == (
+        s1.codegen_compiles, s1.codegen_compile_ms
+    )
