@@ -3211,8 +3211,8 @@ def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver proof of Catalog time travel: put a base snapshot, MERGE
     an update batch over it (retain_versions=2), then read BOTH the
     post-merge current table and the pre-merge snapshot via
-    get(version=1) and union them with a version tag. A broken
-    retirement rename, a snapshot that saw the merge, or a current copy
+    get(version=1) and union them with a version tag. A lost version
+    directory, a snapshot that saw the merge, or a current copy
     that lost rows each hash-mismatch the oracle, which reconstructs
     both states relationally."""
     import tempfile
@@ -7560,7 +7560,7 @@ def q_lineage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     and one row per cache entry with the table version it was built
     against, its row count, staleness, and hit count. The oracle
     reconstructs every version's state relationally (merge = anti-join
-    survivors + updates), so a broken retirement, a cache that
+    survivors + updates), so a lost version directory, a cache that
     silently recomputed (hit count), a stale flag pointing at the
     wrong version, or a version that lost rows all hash-mismatch."""
     import tempfile
@@ -7630,7 +7630,7 @@ def q_lineage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "table",
             "lin_orders",
             v,
-            cat.get("lin_orders", version=v if v != cur else None),
+            cat.get("lin_orders", version=v),
             False,
             0,
         )

@@ -108,7 +108,7 @@ class Pipeline:
     @classmethod
     def from_table(cls, catalog: Catalog, name: str, app: str = "app") -> "Pipeline":
         # the leaf's version is the commit id: it changes only in the
-        # rename that publishes new data, and never repeats, even after
+        # link swap that publishes new data, and never repeats, even after
         # rm + re-put; it comes from the same resolve as the data
         commit, df = catalog._resolve(name)
         dag = PlanNode.leaf("scan", table=name, version=commit)

@@ -31,16 +31,18 @@ per-node caches over one DHT): the root's directory listing is the
 cache's only state. An entry is one self-describing directory
 ``<fp>.parquet`` holding the parquet files and ``_entry.json``
 (``{"bytes": N}``), and only a directory with that record is served.
-``materialize`` writes into a private ``<fp>.tmp.<uuid>``, adds the
-record and publishes with one rename, as ``Catalog._replace_current``
-publishes tables, so a peer never reads a half-written entry; if a
+``materialize`` writes into a private ``<fp>.tmp.<pid>.<uuid>``, adds
+the record and publishes with one rename, as ``Catalog._claim`` claims
+a table version, so a peer never reads a half-written entry; if a
 peer published the fingerprint first, its entry stays. Recency is the
 record's mtime: a hit is one utime on it, which leaves the directory's
 stat, and so the memoised read, unchanged. Eviction and invalidation
 rename an entry aside before deleting it, so a peer sees the whole
 entry or none of it. A directory without a record (a crashed or older
 writer's) is never served, but it counts at its walked size and is
-evicted like any entry.
+evicted like any entry. Every eviction pass also removes what dead
+writers left (``storage.sweep_dead_writers``): staging directories
+whose pid has exited and directories renamed aside for deletion.
 
 At 100 TB the cache directory lives on shared storage (S3/HDFS) so a
 hit is a parquet scan — still a win when the cached subtree contains
@@ -52,7 +54,7 @@ the op-DAG fingerprint whose scan leaves embed the input's COMMIT ID
 (``Pipeline.from_table``, ``PlanNode.fingerprint``; a table copied in
 without a commit record is identified by its directory's stat
 instead). The catalog publishes a
-table's data and its commit record in one rename and never reuses a
+table's data and its commit record in one link swap and never reuses a
 commit id — not after ``rm`` + re-put, not across ``Catalog`` objects
 or processes on one root, not across a crash — so any commit changes
 the key and the next run MISSES: stale results are unreachable by
@@ -87,6 +89,8 @@ from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from eclipse_spark.storage import staging_path, sweep_dead_writers
 
 
 @dataclass
@@ -233,17 +237,19 @@ class SemanticCache:
         its entry is kept and the staged copy dropped; a directory
         without a record at the entry path is an unpublished leftover
         and is removed before the rename."""
-        tmp = os.path.join(self.root, f"{fingerprint}.tmp.{uuid.uuid4().hex}")
-        df.write.parquet(tmp)
-        with open(os.path.join(tmp, self._RECORD), "w") as fh:
-            json.dump({"bytes": self._dir_bytes(tmp)}, fh)
-        if not self.peek(fingerprint):
-            self._remove(fingerprint)
-            try:
-                os.rename(tmp, self._entry_path(fingerprint))
-            except OSError:  # a peer published in between: keep theirs
-                pass
-        shutil.rmtree(tmp, ignore_errors=True)
+        tmp = staging_path(os.path.join(self.root, fingerprint))
+        try:
+            df.write.parquet(tmp)
+            with open(os.path.join(tmp, self._RECORD), "w") as fh:
+                json.dump({"bytes": self._dir_bytes(tmp)}, fh)
+            if not self.peek(fingerprint):
+                self._remove(fingerprint)
+                try:
+                    os.rename(tmp, self._entry_path(fingerprint))
+                except OSError:  # a peer published in between: keep theirs
+                    pass
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
         self._evict(keep=fingerprint)
         return self._read(fingerprint)
 
@@ -261,6 +267,7 @@ class SemanticCache:
 
     # -- eviction -------------------------------------------------------
     def _evict(self, keep: str | None = None) -> None:
+        sweep_dead_writers(self.root)
         entries, markers = self._listing()
         total = sum(size for _, size, _ in entries)
         # Oldest-access first (record mtime = cross-session recency);

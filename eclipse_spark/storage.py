@@ -20,32 +20,57 @@ not the whole file — that alone is the main 100 TB upgrade over the
 reference's one-map-task-per-file granularity
 (``src/master/dht/master.cc:750-771``).
 
-Commit protocol. Eclipse keys cached results on immutable DHT files
-(``fileserver.hh:354-359``), so a cache key can never name changed
-data. Here every mutation — put, append, merge, compaction, the
-sorted/z-order/bucketed layouts, branch/promote and ``put_many`` —
-stages the table's next copy in ``<name>.parquet.tmp`` (appends and
-branches start from a hard-link clone of the current copy), writes a
-``_commit.json`` record into it (the next version, a fresh random
-commit id and the caller's marker), and renames it over the current
-copy (:meth:`Catalog._replace_current`). Data and version become
-visible in one filesystem operation; a crash before that rename
-leaves the old copy with its old record. :meth:`Catalog.info` reads
-the record from disk, so every ``Catalog`` object on a root sees
-every other's commits. Versions count consecutively per table and
-restart after :meth:`Catalog.rm`; the commit id never repeats, so it
-is what semantic-cache keys embed (``Pipeline.from_table``).
+Layout. Eclipse never edits a DHT file in place (``Owrite`` only
+appends) and keys cached results on those immutable files
+(``fileserver.hh:354-359``). Here a table ``<name>.parquet`` is a
+symlink to its current version directory ``<name>.parquet.v<N>``, and
+each version directory holds one immutable copy of the table plus its
+``_commit.json`` record: the version, a fresh random commit id and the
+caller's marker. A real directory at ``<name>.parquet`` (copied in from
+outside) is read as it is; its first commit renames it to its own
+version directory.
+
+Commit protocol. Every mutation — put, append, merge, compaction, the
+sorted/z-order/bucketed layouts, branch/promote, restore and
+``put_many`` — takes one path (:meth:`Catalog._commit`). Spark writes
+the next copy into a private ``<name>.parquet.tmp.<pid>.<uuid>`` with
+no lock held. Then, under ``flock(LOCK_EX)`` on the root directory, the
+writer hard-links in the base table's current files (append, branch,
+promote), writes the record for version N+1, renames the staging
+directory to ``v<N+1>`` (the claim), swaps the link (a symlink under a
+temporary name, then ``os.replace``) and prunes versions beyond
+``retain_versions``. The swap is the one visibility point: a crash
+before it leaves version N current, and the next commit replaces the
+unpublished claim. The lock is not re-entrant, so locked sections never
+nest. A writer that dies leaves its staging directory behind; the next
+commit on the root removes it once the writer's pid is gone
+(:func:`sweep_dead_writers`).
+
+Concurrent writers, from any number of ``Catalog`` objects, threads or
+processes on one root: the lock orders commits, so versions are
+distinct and consecutive. An append never loses rows, because it links
+in whatever is current when it publishes, not what was current when it
+started. A put and the other rewrites (merge, compaction, the layouts,
+restore, promote) are last-writer-wins at the next version.
+
+:meth:`Catalog.info` reads the link and the record from disk, so every
+``Catalog`` object on a root sees every other's commits. Versions
+restart after :meth:`Catalog.rm`; the commit id never repeats, so it is
+what semantic-cache keys embed (``Pipeline.from_table``).
 """
 
 from __future__ import annotations
 
+import contextlib
+import fcntl
 import json
 import os
+import re
 import shutil
 import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.functions import array as F_array
 from pyspark.sql.functions import col as F_col
 from pyspark.sql.functions import explode as F_explode
@@ -53,12 +78,67 @@ from pyspark.sql.functions import lit as F_lit
 from pyspark.sql.functions import struct as F_struct
 from pyspark.sql.functions import when as F_when
 
+# a writer's staging name, ``<base>.tmp.<pid>.<uuid>``, or an evicted
+# cache entry renamed aside, ``<fp>.del.<uuid>``
+_LEFTOVER = re.compile(r"\.tmp\.(\d+)\.[0-9a-f]{32}$|\.del\.[0-9a-f]{32}$")
+
+
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:  # another user's live process
+        pass
+    return True
+
+
+def staging_path(path: str) -> str:
+    """A private name next to ``path`` for this writer; it carries the
+    pid so :func:`sweep_dead_writers` can tell a dead writer's."""
+    return f"{path}.tmp.{os.getpid()}.{uuid.uuid4().hex}"
+
+
+def sweep_dead_writers(root: str) -> None:
+    """Remove what dead writers left in a ``Catalog`` or
+    ``SemanticCache`` root: every ``*.tmp.<pid>.<uuid>`` staging
+    directory or link whose pid has exited, and every ``*.del.<uuid>``
+    directory an eviction renamed aside."""
+    for f in os.listdir(root):
+        m = _LEFTOVER.search(f)
+        if m is None or (m[1] is not None and _pid_alive(int(m[1]))):
+            continue
+        p = os.path.join(root, f)
+        if os.path.isdir(p) and not os.path.islink(p):
+            shutil.rmtree(p, ignore_errors=True)
+        else:
+            with contextlib.suppress(OSError):
+                os.unlink(p)
+
+
+def _link_tree(src: str, dst: str) -> None:
+    """Hard-link every file of table directory ``src`` into ``dst`` (no
+    data copy; copy2 where linking fails, e.g. across devices). Files
+    ``dst`` already has (its own ``_SUCCESS``) and the commit record
+    are left out."""
+    for root, _dirs, files in os.walk(src):
+        target = os.path.join(dst, os.path.relpath(root, src))
+        os.makedirs(target, exist_ok=True)
+        for f in files:
+            d = os.path.join(target, f)
+            if f == Catalog._RECORD or os.path.exists(d):
+                continue
+            try:
+                os.link(os.path.join(root, f), d)
+            except OSError:
+                shutil.copy2(os.path.join(root, f), d)
+
 
 @dataclass(frozen=True)
 class TableInfo:
     name: str
     path: str
-    version: int  # from the commit record; without one, newest snapshot + 1, or 0
+    version: int  # the link's; unlinked: the record's, else newest snapshot + 1, or 0
     mtime: float
     commit: str  # the commit record's unique id; feeds semantic-cache keys
 
@@ -69,32 +149,30 @@ class Catalog:
     Table versioning exists so the semantic cache (semcache.py) can key
     cached results on *input snapshot identity*, mirroring how Eclipse
     keys its Icache on immutable DHT files (``fileserver.hh:354-359``).
-    The version lives in each table copy's commit record (see the
-    module docstring), never in this object.
+    The version lives on disk (see the module docstring), never in this
+    object.
     """
 
     _RECORD = "_commit.json"
 
     def __init__(self, spark: SparkSession, root: str, retain_versions: int = 0):
-        """``retain_versions > 0`` turns on time travel: every commit
-        RETIRES the current table copy (a directory rename — no data
-        copy) instead of deleting it, keeping the newest
-        ``retain_versions`` snapshots readable via ``get(name,
-        version=...)``. Retired copies live at ``<name>.parquet.v<N>``,
-        invisible to :meth:`ls`/:meth:`path_of` (which key on the bare
-        ``.parquet`` suffix). This is the poor-parquet's Delta/Iceberg
-        snapshot log: rename-cheap, scan-compatible, and enough for
-        audit reads and rollback; an append (:meth:`write`) retires the
-        pre-append copy like any other commit, sharing its files with
-        the new copy through hard links."""
+        """``retain_versions`` turns on time travel: each commit keeps
+        that many versions before the current one readable via
+        ``get(name, version=...)`` and :meth:`history`, and prunes older
+        ones. It sets nothing else — every version is its own
+        ``<name>.parquet.v<N>`` directory either way, invisible to
+        :meth:`ls`/:meth:`path_of`, and an append shares its unchanged
+        files with the previous version through hard links."""
         self.spark = spark
         self.root = root
         self.retain_versions = retain_versions
+        self._journal = os.path.join(root, "_commit_journal.json")
         # name -> (stamp, DataFrame): the current copy's resolved read,
         # reused until a commit or a directory replace moves the stamp
         self._reads: dict[str, tuple[tuple, DataFrame]] = {}
         os.makedirs(root, exist_ok=True)
-        self.recover_pending()  # roll forward any interrupted put_many
+        with self._locked():  # rolls forward an interrupted put_many
+            pass
 
     # -- paths ----------------------------------------------------------
     def path_of(self, name: str) -> str:
@@ -103,10 +181,34 @@ class Catalog:
     def exists(self, name: str) -> bool:
         return os.path.exists(self.path_of(name))
 
-    def _record(self, name: str) -> dict:
-        """The current copy's commit record, or {} when it has none."""
+    def _version_path(self, name: str, version: int) -> str:
+        return f"{self.path_of(name)}.v{version}"
+
+    def _versions(self, name: str) -> list[int]:
+        """Every version directory of ``name``, oldest first."""
+        prefix = f"{name}.parquet.v"
+        out = []
+        for f in os.listdir(self.root):
+            if f.startswith(prefix) and f[len(prefix):].isdigit():
+                out.append(int(f[len(prefix):]))
+        return sorted(out)
+
+    def _target(self, name: str) -> tuple[int | None, str]:
+        """(version, directory) of the current copy: the link's target,
+        or (None, the path itself) for a directory copied in from outside
+        or a missing table."""
+        path = self.path_of(name)
         try:
-            with open(os.path.join(self.path_of(name), self._RECORD)) as fh:
+            target = os.readlink(path)
+        except OSError:
+            return None, path
+        return int(target.rsplit(".v", 1)[1]), os.path.join(self.root, target)
+
+    def _record(self, d: str) -> dict:
+        """The commit record in table directory ``d``, or {} when it has
+        none."""
+        try:
+            with open(os.path.join(d, self._RECORD)) as fh:
                 rec = json.load(fh)
         except (OSError, ValueError):
             return {}
@@ -116,14 +218,15 @@ class Catalog:
 
     def _stamp(self, name: str) -> tuple | None:
         """(commit id, inode, mtime_ns) of the current copy, or None
-        when the table is missing. Every commit renames a new directory
-        in with a new commit id; a table without a record (copied in
-        from outside) still moves its directory's stat when replaced."""
+        when the table is missing. Every commit links a new directory
+        with a new commit id; a table without a record (copied in from
+        outside) still moves its directory's stat when replaced."""
+        d = self._target(name)[1]
         try:
-            st = os.stat(self.path_of(name))
+            st = os.stat(d)
         except FileNotFoundError:
             return None
-        return self._record(name).get("commit", ""), st.st_ino, st.st_mtime_ns
+        return self._record(d).get("commit", ""), st.st_ino, st.st_mtime_ns
 
     def _resolve(self, name: str) -> tuple[str, DataFrame]:
         """(commit id, DataFrame) of the current copy, both from one
@@ -146,187 +249,137 @@ class Catalog:
             return commit or f"dir-{ino}-{mtime_ns}", memo[1]
 
     def info(self, name: str) -> TableInfo:
-        p = self.path_of(name)
-        rec = self._record(name)
-        if "version" in rec:
-            version = int(rec["version"])
-        else:  # no version recorded: one past the newest retained snapshot
-            version = max(self.history(name), default=-1) + 1
+        version, d = self._target(name)
+        rec = self._record(d)
+        if version is None:  # not linked: copied in from outside, or missing
+            version = int(rec.get("version", max(self.history(name), default=-1) + 1))
         return TableInfo(
             name=name,
-            path=p,
+            path=self.path_of(name),
             version=version,
-            mtime=os.path.getmtime(p) if os.path.exists(p) else 0.0,
+            mtime=os.path.getmtime(d) if os.path.exists(d) else 0.0,
             commit=str(rec.get("commit", "")),
         )
 
     # -- time travel ----------------------------------------------------
-    def _version_path(self, name: str, version: int) -> str:
-        return os.path.join(self.root, f"{name}.parquet.v{version}")
-
-    def _retire_current(self, name: str, cur: int) -> None:
-        """Rename the current copy (version ``cur``) aside as that
-        version's snapshot, then prune snapshots beyond the retention
-        budget. No-op when retention is off or the table doesn't exist
-        yet."""
-        if self.retain_versions <= 0 or not self.exists(name):
-            return
-        dst = self._version_path(name, cur)
-        # dst may already exist as a get_many pin (hard-link clone of
-        # this very copy) — the rename REPLACES it with the
-        # authoritative retirement; identical file names/contents, so
-        # pinned lazy readers keep resolving. Retry once if a pin
-        # re-appears inside the rmtree->rename window.
-        shutil.rmtree(dst, ignore_errors=True)
-        try:
-            os.rename(self.path_of(name), dst)
-        except OSError:
-            shutil.rmtree(dst, ignore_errors=True)
-            os.rename(self.path_of(name), dst)
-        for v in self.history(name)[: -self.retain_versions]:
-            shutil.rmtree(self._version_path(name, v), ignore_errors=True)
-
-    def _clone_dir(self, src: str, dst: str) -> None:
-        """Hard-link clone of a table directory (no data copy; falls
-        back to copy2 per file when linking fails, e.g. cross-device)."""
-        for root, _dirs, files in os.walk(src):
-            rel = os.path.relpath(root, src)
-            target = dst if rel == "." else os.path.join(dst, rel)
-            os.makedirs(target, exist_ok=True)
-            for f in files:
-                s, d = os.path.join(root, f), os.path.join(target, f)
-                try:
-                    os.link(s, d)
-                except OSError:
-                    shutil.copy2(s, d)
-
-    def _pin_current(self, name: str) -> int:
-        """Materialize the CURRENT copy as its own retained snapshot
-        (hard-link clone into ``.v<cur>``, staged + renamed) so a
-        reader can hold a version-pinned DataFrame that survives later
-        commits — the missing half of snapshot reads (ADVICE r8: a
-        live-path read only pins at plan time). No-op when the
-        snapshot already exists; the next commit's retirement replaces
-        the clone with the authoritative copy (same file names and
-        contents — commits replace the current copy wholesale and never
-        edit its files, so pinned readers keep resolving). Returns the
-        pinned version."""
-        cur = self.info(name).version
-        dst = self._version_path(name, cur)
-        if os.path.exists(dst):
-            return cur
-        tmp = f"{dst}.pin.{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        try:
-            self._clone_dir(self.path_of(name), tmp)
-        except OSError:
-            # unwritable root (read-only mount) or cross-device link
-            # failure mid-clone: leave no partial tmp behind and let
-            # the caller fall back to a live-path read (ADVICE r9)
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        try:
-            os.rename(tmp, dst)
-        except OSError:
-            # lost a pin/retire race — dst exists now, which is all we need
-            shutil.rmtree(tmp, ignore_errors=True)
-        return cur
-
     def history(self, name: str) -> list[int]:
-        """Retained snapshot versions for a table, oldest first. The
-        CURRENT copy is version ``info(name).version`` and is normally
-        not listed — unless a reader pinned it (:meth:`_pin_current`),
-        in which case its hard-link snapshot appears here too."""
-        prefix = f"{name}.parquet.v"
-        out = []
-        for f in os.listdir(self.root):
-            if f.startswith(prefix):
-                try:
-                    out.append(int(f[len(prefix):]))
-                except ValueError:
-                    continue
-        return sorted(out)
+        """Retained versions before the current one, oldest first."""
+        cur = self._target(name)[0]
+        return [v for v in self._versions(name) if cur is None or v < cur]
+
+    def _prune(self, name: str, keep: int) -> int:
+        """Under the root lock: remove ``name``'s version directories
+        except the current one and the ``keep`` before it; unpublished
+        claims above the current version go too. Returns the number
+        removed."""
+        hist = self.history(name)
+        kept = {self._target(name)[0], *hist[max(0, len(hist) - keep):]}
+        gone = [v for v in self._versions(name) if v not in kept]
+        for v in gone:
+            shutil.rmtree(self._version_path(name, v), ignore_errors=True)
+        return len(gone)
 
     def vacuum(self, name: str | None = None, keep: int | None = None) -> int:
         """Prune retained snapshots beyond the newest ``keep`` (default:
         the catalog's ``retain_versions``) for one table or all tables —
-        Delta VACUUM's role over the rename-snapshot log. Retention
-        already prunes on every write; vacuum is the manual lever for
-        reclaiming space after lowering the budget or for tables that
-        stopped receiving writes. Returns the number of snapshot
-        directories removed."""
+        Delta VACUUM's role over the version directories. Every commit
+        already prunes; vacuum is the manual lever for reclaiming space
+        after lowering the budget or for tables that stopped receiving
+        writes. Returns the number of version directories removed."""
         budget = self.retain_versions if keep is None else keep
         names = [name] if name is not None else self.ls()
-        removed = 0
-        for n in names:
-            hist = self.history(n)
-            drop = hist[:-budget] if budget > 0 else hist
-            for v in drop:
-                shutil.rmtree(self._version_path(n, v), ignore_errors=True)
-                removed += 1
-        return removed
+        with self._locked():
+            return sum(self._prune(n, budget) for n in names)
 
-    # -- the one publish path -------------------------------------------
-    def _stage(self, name: str, clone: str | None = None) -> str:
-        """Empty staging directory for ``name``'s next copy; with
-        ``clone``, seeded with a hard-link clone of that table's
-        current copy (appends, branch, promote). A copy that an earlier
-        crash left retired or parked is restored first (:meth:`recover`),
-        so an append clones the last published rows."""
-        self.recover(name)
-        tmp = self.path_of(name) + ".tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        if clone is not None and self.exists(clone):
-            self._clone_dir(self.path_of(clone), tmp)
-        return tmp
+    # -- the one commit path ----------------------------------------------
+    @contextlib.contextmanager
+    def _locked(self, exclusive: bool = True):
+        """Hold ``flock`` on the root directory: shared for
+        :meth:`get_many`; exclusive for every commit, which first rolls
+        forward a ``put_many`` whose writer died after its journal. Not
+        re-entrant: a locked section must never take it again."""
+        fd = os.open(self.root, os.O_RDONLY)
+        try:
+            fcntl.flock(fd, fcntl.LOCK_EX if exclusive else fcntl.LOCK_SH)
+            if exclusive:
+                self._roll_forward()
+            yield
+        finally:
+            os.close(fd)  # releases the lock
 
-    def _replace_current(
-        self, name: str, tmp: str, marker: dict | None = None
+    def _roll_forward(self) -> None:
+        """Under the root lock: swap every link a written journal names
+        to its journaled version, then remove the journal."""
+        for name, version in self._pending().items():
+            self._publish(name, version)
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(self._journal)
+
+    def _pending(self) -> dict[str, int]:
+        """``{name: version}`` of a ``put_many`` whose journal is written
+        but whose links may not all be swapped yet. A journal cut short
+        by its writer's death committed nothing."""
+        try:
+            with open(self._journal) as fh:
+                return json.load(fh)
+        except (FileNotFoundError, ValueError):
+            return {}
+
+    def _commit(
+        self, name: str, write, marker: dict | None = None, base: str | None = None
     ) -> str:
-        """Publish the staged copy ``tmp`` as ``name``'s current copy —
-        the one path every mutation takes to disk. Writes the commit
-        record (next version, fresh commit id, ``marker``) into ``tmp``,
-        then swaps it in. With retention on, the current copy retires
-        as a snapshot (``_retire_current``); with retention OFF it is
-        parked aside and deleted only after the rename — ``os.rename``
-        onto an existing non-empty parquet directory raises ENOTEMPTY,
-        and for ``put_many`` that failure would land AFTER the journal
-        commit point, making ``recover_pending`` re-raise on every
-        ``Catalog.__init__`` until manual cleanup. The park-aside keeps
-        every crash window roll-forward-safe: tmp still present ->
-        re-apply re-runs this swap; tmp gone but ``.old`` leaked ->
-        garbage swept by :meth:`recover_pending`. Restores a crashed
-        commit's retired or parked copy first, as :meth:`_stage` does
-        (``put_many``'s roll-forward stages nothing), so the next
-        version counts from the last one published."""
-        self.recover(name)
-        cur = self.info(name).version
-        rec = os.path.join(tmp, self._RECORD)
-        with open(rec + ".w", "w") as fh:
-            json.dump(
-                {"version": cur + 1, "commit": uuid.uuid4().hex, "marker": marker},
-                fh,
-            )
-        # replace, never rewrite in place: in a hard-link clone the
-        # staged record is still the current copy's file
-        os.replace(rec + ".w", rec)
-        path = self.path_of(name)
-        old = path + ".old"
-        self._retire_current(name, cur)
-        if os.path.exists(path):
-            shutil.rmtree(old, ignore_errors=True)
-            os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old, ignore_errors=True)
-        return path
+        """The one path every mutation takes to disk. ``write(tmp)``
+        fills a private staging directory with no lock held; then, under
+        the root lock, :meth:`_claim` makes it the next version and
+        :meth:`_publish` swaps the link to it."""
+        sweep_dead_writers(self.root)
+        tmp = staging_path(self.path_of(name))
+        try:
+            write(tmp)
+            with self._locked():
+                self._publish(name, self._claim(name, tmp, marker, base))
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)  # gone once claimed
+        return self.path_of(name)
 
-    def _append(self, name: str, writer: DataFrameWriter) -> str:
-        """Append ``writer``'s rows as new files in a hard-link clone of
-        the current copy and publish it; the committed marker carries
-        over (an append is not a new batch of an idempotent sink)."""
-        tmp = self._stage(name, clone=name)
-        writer.parquet(tmp)
-        return self._replace_current(name, tmp, self.read_marker(name))
+    def _claim(
+        self, name: str, tmp: str, marker: dict | None = None, base: str | None = None
+    ) -> int:
+        """Under the root lock: turn the staged ``tmp`` into the
+        directory of ``name``'s next version, unpublished until
+        :meth:`_publish`, and return that version. With ``base``, ``tmp``
+        first gets that table's current files and takes its marker (an
+        append is not a new batch of an idempotent sink)."""
+        path = self.path_of(name)
+        if os.path.isdir(path) and not os.path.islink(path):
+            # copied in from outside: it becomes its own version directory
+            version = self.info(name).version
+            os.rename(path, self._version_path(name, version))
+            self._publish(name, version)
+        elif not os.path.lexists(path) and self._versions(name):
+            # no link: a crash between that rename and its link, or
+            # before a new table's first swap; the newest copy is whole
+            self._publish(name, self._versions(name)[-1])
+        if base is not None and self.exists(base):
+            _link_tree(self.path_of(base), tmp)
+            marker = self.read_marker(base)
+        version = self.info(name).version + 1
+        with open(os.path.join(tmp, self._RECORD), "w") as fh:
+            json.dump(
+                {"version": version, "commit": uuid.uuid4().hex, "marker": marker}, fh
+            )
+        dst = self._version_path(name, version)
+        shutil.rmtree(dst, ignore_errors=True)  # a claim a crash left unpublished
+        os.rename(tmp, dst)
+        return version
+
+    def _publish(self, name: str, version: int) -> None:
+        """Under the root lock: point ``name``'s link at ``version`` —
+        the one visibility point — then prune beyond retention."""
+        link = staging_path(self.path_of(name))
+        os.symlink(os.path.basename(self._version_path(name, version)), link)
+        os.replace(link, self.path_of(name))
+        self._prune(name, self.retain_versions)
 
     def compact(
         self,
@@ -335,7 +388,7 @@ class Catalog:
         target_file_mb: int = 128,
     ) -> tuple[int, int]:
         """Small-file compaction (Delta OPTIMIZE's role over the
-        rename-snapshot log): rewrite the current copy into
+        version directories): rewrite the current copy into
         size-targeted files and publish the rewrite as a :meth:`put`,
         so a crash at any point leaves either the old layout or the new
         one, never a half-compacted table.
@@ -408,40 +461,36 @@ class Catalog:
     def branch(self, src: str, dst: str) -> str:
         """Zero-copy table branch (Delta SHALLOW CLONE / Iceberg branch
         in spirit): publish ``src``'s CURRENT copy as a new independent
-        table ``dst`` via a hard-link clone — no data bytes move, just
-        directory entries. Safe because every mutation path in this
-        catalog is copy-on-write at file granularity (every commit
-        stages whole new part files, or a hard-link clone plus new
-        files, and renames; nothing ever edits a shared file in place),
-        so the two tables share immutable files until either side
-        writes, then diverge naturally. The experimentation workflow
-        this exists for: branch the production table, run a
-        cleanup/backfill against the branch, diff, then merge or drop —
-        without 2x storage or a long copy. The branch starts its own
-        version history (v1 of ``dst``) and carries ``src``'s marker; it
-        does NOT inherit src's retained snapshots."""
+        table ``dst`` by hard-linking its files — no data bytes move,
+        just directory entries. Safe because every version directory is
+        immutable (every commit stages whole new part files, or hard
+        links plus new files, into a directory of its own; nothing ever
+        edits a shared file in place), so the two tables share immutable
+        files until either side writes, then diverge naturally. The
+        experimentation workflow this exists for: branch the production
+        table, run a cleanup/backfill against the branch, diff, then
+        merge or drop — without 2x storage or a long copy. The branch
+        starts its own version history (v1 of ``dst``) and carries
+        ``src``'s marker; it does NOT inherit src's retained snapshots."""
         if not self.exists(src):
             raise FileNotFoundError(f"branch: no such table {src!r}")
         if self.exists(dst):
             raise ValueError(f"branch: target table {dst!r} already exists")
-        tmp = self._stage(dst, clone=src)
-        return self._replace_current(dst, tmp, self.read_marker(src))
+        return self._commit(dst, os.makedirs, base=src)
 
     def promote(self, branch: str, into: str) -> str:
         """Publish ``branch``'s current copy as the new current version
         of ``into`` — the fast-forward merge-back completing the
         :meth:`branch` workflow (branch → backfill → diff → PROMOTE).
-        Hard-link clone staged and published like any commit, so the
-        publish is crash-safe and, with retention on, ``into``'s
-        previous copy retires as a snapshot (rollback stays one
-        :meth:`restore` away). The branch itself is untouched; drop it
-        with :meth:`rm` when done."""
+        Hard-linked and published like any commit, so with retention
+        on, ``into``'s previous version stays readable (rollback stays
+        one :meth:`restore` away). The branch itself is untouched; drop
+        it with :meth:`rm` when done."""
         if not self.exists(branch):
             raise FileNotFoundError(f"promote: no such table {branch!r}")
         if not self.exists(into):
             raise FileNotFoundError(f"promote: no such table {into!r}")
-        tmp = self._stage(into, clone=branch)
-        return self._replace_current(into, tmp, self.read_marker(branch))
+        return self._commit(into, os.makedirs, base=branch)
 
     def restore(self, name: str, version: int) -> str:
         """Roll a table back to a retained snapshot: the snapshot data
@@ -463,176 +512,82 @@ class Catalog:
         at scan time — the declarative replacement for DHT placement.
 
         ``marker``: small JSON committed ATOMICALLY with the data — it
-        rides in the staged copy's commit record, so the data, the new
-        version and the marker become visible in the same rename
+        rides in the new version's commit record, so the data, the new
+        version and the marker become visible in the same link swap
         (underscore-prefixed files are invisible to Spark's input
         discovery). Readers use :meth:`read_marker`; idempotent writers
-        (the streaming IVM sink) key replay detection on it."""
+        (the streaming IVM sink) key replay detection on it. The source
+        ``df`` may read the table itself: its version directory stays
+        until the new one is published."""
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        # write first, retire + rename after: the source `df` may read
-        # from the current copy, and a crash mid-way must not lose the
-        # only copy.
-        tmp = self._stage(name)
-        writer.parquet(tmp)
-        return self._replace_current(name, tmp, marker)
+        return self._commit(name, writer.parquet, marker)
 
     # -- multi-table atomic publish (roll-forward journal) --------------
-    def _journal_path(self) -> str:
-        return os.path.join(self.root, "_commit_journal.json")
-
     def put_many(self, tables: dict[str, DataFrame]) -> None:
         """ALL-OR-NOTHING multi-table publish — the warehouse
         "transaction" every ingest batch wants (fact + dims + rollup
         land together or not at all). Protocol (roll-forward):
 
-        1. every DataFrame stages into ``<name>.parquet.tmp`` (no
-           visibility change; a crash here leaks only tmps, cleaned by
-           the next staging);
-        2. a journal listing the staged tables is written atomically —
-           the COMMIT POINT: before it, nothing happened; after it, the
-           commit is guaranteed to complete;
-        3. each staged table is published (:meth:`_replace_current`:
-           commit record + rename), and the journal is removed.
+        1. every DataFrame is written into its own staging directory,
+           with no lock held;
+        2. under the root lock, every table claims its next version
+           (:meth:`_claim`; nothing visible changes);
+        3. the journal ``{name: version}`` is written — the COMMIT
+           POINT, once it is complete: before it, nothing happened;
+           after it, the commit is guaranteed to complete;
+        4. every link is swapped (:meth:`_publish`) and the journal is
+           removed.
 
-        A crash after (2) is completed by :meth:`recover_pending`
-        (called from ``__init__``, so the next session rolls the
-        commit forward — same direction Delta/Iceberg take: the log
-        entry IS the commit, data files follow). This gives crash
-        ATOMICITY, not reader isolation: a concurrent reader mid-(3)
-        can see table A new and table B old for a moment — the
-        single-filesystem-rename limit; :meth:`get_many` and
-        version-pinned reads (``get(name, version=...)``) sidestep it."""
-        for name, df in tables.items():
-            df.write.mode("overwrite").parquet(self._stage(name))
-        jtmp = self._journal_path() + f".tmp.{os.getpid()}"
-        with open(jtmp, "w") as fh:
-            json.dump(sorted(tables), fh)
-        os.replace(jtmp, self._journal_path())  # <- commit point
-        self._apply_journal(sorted(tables))
-
-    def _apply_journal(self, names: list[str]) -> None:
-        for name in names:
-            tmp = self.path_of(name) + ".tmp"
-            if os.path.exists(tmp):
-                self._replace_current(name, tmp)
+        A crash after (3) is rolled forward by the next locked section
+        of any ``Catalog`` on the root, a new one's constructor included
+        (the direction Delta/Iceberg take: the log entry IS the commit,
+        data files follow). A crash before (3) leaves unpublished claims
+        that the next commit to each table removes. Plain :meth:`get`
+        sees each table switch at its own link swap; :meth:`get_many`
+        sees all of them switch at once."""
+        sweep_dead_writers(self.root)
+        staged = {n: staging_path(self.path_of(n)) for n in sorted(tables)}
         try:
-            os.remove(self._journal_path())
-        except OSError:
-            pass
-
-    def recover_pending(self) -> list[str]:
-        """Roll forward a journaled multi-table commit interrupted by a
-        crash: publish every staged table still outstanding.
-        Idempotent (already-published tables are skipped via the tmp
-        existence check). Also sweeps ``.parquet.old`` park-aside
-        directories leaked by a crash inside :meth:`_replace_current`'s
-        last window (current copy already renamed in, old not yet
-        deleted — the leftover is garbage by construction once the
-        current path exists). Returns the affected table names."""
-        for f in os.listdir(self.root):
-            if f.endswith(".parquet.old") and os.path.exists(
-                os.path.join(self.root, f[: -len(".old")])
-            ):
-                shutil.rmtree(os.path.join(self.root, f), ignore_errors=True)
-        try:
-            with open(self._journal_path()) as fh:
-                # a list of table names; a journal that maps names to
-                # versions iterates to its names too
-                staged = sorted(json.load(fh))
-        except (OSError, ValueError):
-            return []
-        self._apply_journal(staged)
-        return staged
+            for name, tmp in staged.items():
+                tables[name].write.mode("overwrite").parquet(tmp)
+            with self._locked():
+                claimed = {n: self._claim(n, tmp) for n, tmp in staged.items()}
+                with open(self._journal, "w") as fh:
+                    json.dump(claimed, fh)  # <- commit point, once complete
+                self._roll_forward()
+        finally:
+            for tmp in staged.values():
+                shutil.rmtree(tmp, ignore_errors=True)
 
     def get_many(self, names: list[str]) -> dict[str, DataFrame]:
-        """Snapshot-consistent companion to :meth:`put_many`, closing
-        its documented mixed-version reader window: a reader that lands
-        mid-commit must see the tables all-old or all-new, never a mix.
-
-        Protocol: the journal file IS the commit point, so if it
-        exists the commit is already decided — roll it forward
-        (:meth:`recover_pending`, idempotent) and read the all-new
-        state. Otherwise read every table's commit id from its commit
-        record, plan the reads, and re-read the ids + check the
-        journal; any movement mid-plan retries (commits are
-        rename-cheap, so the race window is microseconds and the retry
-        loop converges immediately).
-
-        With retention ON (``retain_versions >= 1``) the returned
-        DataFrames are VERSION-PINNED (ADVICE r8): each table's current
-        copy is hard-link-cloned into its ``.v<version>`` snapshot path
-        (:meth:`_pin_current` — no data copy) and the read targets that
-        snapshot, so a commit landing between return and the action
-        cannot re-tear the vector — later actions still read the pinned
-        versions until :meth:`vacuum`/retention prunes them. With
-        retention OFF the reads are live-path and the guarantee is
-        plan-time only: the version VECTOR is coherent at return, but a
-        reader that executes much later races subsequent commits —
-        that's what retention is for.
-
-        SIDE EFFECT (ADVICE r9): pinning WRITES — a retention-on read
-        hard-links the current copy into a ``.v<version>`` snapshot
-        directory, so :meth:`history` and the catalog's disk layout
-        change as a consequence of a pure lookup (the snapshot is the
-        pin). On a catalog root the process cannot write (read-only
-        mount, cross-device link failure) the pin attempt degrades
-        gracefully to the live-path read instead of propagating —
-        same rows, plan-time-only guarantee for that table."""
-        pin = self.retain_versions >= 1
-
-        def _read(n: str) -> DataFrame:
-            if pin and self.exists(n):
-                try:
-                    return self.get(n, version=self._pin_current(n))
-                except OSError:
-                    pass  # unwritable root: fall back to live-path read
-            return self.get(n)
-
-        def _commits() -> dict[str, str]:
-            return {n: self.info(n).commit for n in names}
-
-        for _ in range(10):
-            self.recover_pending()  # roll forward any mid-flight commit
-            vec = _commits()
-            dfs = {n: _read(n) for n in names}
-            if not os.path.exists(self._journal_path()) and _commits() == vec:
-                return dfs
-        raise RuntimeError(
-            "get_many: no consistent snapshot after 10 attempts "
-            "(a writer is committing continuously)"
-        )
+        """Snapshot-consistent companion to :meth:`put_many`: the
+        returned DataFrames show every table at one point of the commit
+        order, never a mix. It holds the root lock shared, so no commit
+        is between its claims and its link swaps; each table's version
+        is its link's target, or the journaled one when a ``put_many``
+        died after its commit point. Each DataFrame reads that version
+        directory, which no later commit writes into, so it keeps
+        reading the same version after later commits until retention
+        prunes it (with ``retain_versions=0``, at the next commit to
+        that table). It writes nothing and needs no retry."""
+        with self._locked(exclusive=False):
+            pending = self._pending()
+            return {
+                n: self.spark.read.parquet(
+                    self._version_path(n, pending[n])
+                    if n in pending
+                    else self._target(n)[1]
+                )
+                for n in names
+            }
 
     def read_marker(self, name: str) -> dict | None:
         """The marker committed with the current table data by
         ``put(..., marker=...)`` (appends, compaction, branch and
         promote carry it over), or None if absent."""
-        return self._record(name).get("marker")
-
-    def recover(self, name: str) -> bool:
-        """Crash recovery for the publish window: if a commit died
-        after :meth:`_retire_current` parked the current copy as the
-        newest ``.v<N>`` snapshot but before the staged data's rename,
-        the table path is missing while its data survives in the
-        snapshot. Restore the newest snapshot as the current copy
-        (rename back — it still holds its own commit record, so the
-        version is the pre-crash one). Returns True when a restore
-        happened; no-op (False) when the table exists or has no
-        snapshots."""
-        if self.exists(name):
-            return False
-        old = self.path_of(name) + ".old"
-        if os.path.exists(old):
-            # retention-off commit crashed between park-aside and
-            # rename-in: the parked copy IS the pre-commit current.
-            os.rename(old, self.path_of(name))
-            return True
-        hist = self.history(name)
-        if not hist:
-            return False
-        os.rename(self._version_path(name, hist[-1]), self.path_of(name))
-        return True
+        return self._record(self.path_of(name)).get("marker")
 
     def merge(
         self,
@@ -738,12 +693,10 @@ class Catalog:
         directory and moved to :meth:`path_of` once published."""
         path = self.path_of(name)
         self.spark.sql(f"DROP TABLE IF EXISTS {name}")
-        tmp = self._stage(name)
         writer = df.write.mode("overwrite").format("parquet").bucketBy(buckets, *keys)
         if sorted_by_key:
             writer = writer.sortBy(*keys)
-        writer.option("path", tmp).saveAsTable(name)
-        self._replace_current(name, tmp)
+        self._commit(name, lambda tmp: writer.option("path", tmp).saveAsTable(name))
         self.spark.sql(f"ALTER TABLE {name} SET LOCATION '{path}'")
         return path
 
@@ -755,7 +708,7 @@ class Catalog:
         on: list[str] | None = None,
     ) -> DataFrame:
         """Change-data-feed between two snapshots of a table (Delta
-        CDF's ``table_changes`` analogue over the rename-snapshot log):
+        CDF's ``table_changes`` analogue over the version directories):
         rows inserted, deleted, or updated between ``from_version`` and
         ``to_version`` (default: the CURRENT copy). Requires
         ``retain_versions`` and a key column list ``on``. See
@@ -763,11 +716,7 @@ class Catalog:
         if not on:
             raise ValueError("diff requires the key columns (on=[...])")
         old = self.get(name, version=from_version)
-        new = (
-            self.get(name)
-            if to_version is None or to_version == self.info(name).version
-            else self.get(name, version=to_version)
-        )
+        new = self.get(name, version=to_version)
         return table_diff(old, new, on)
 
     def get_table(self, name: str) -> DataFrame:
@@ -783,8 +732,9 @@ class Catalog:
 
     def get(self, name: str, version: int | None = None) -> DataFrame:
         """``mrcat``/``Rread`` analogue: read a named table. With
-        ``version`` (and ``retain_versions`` on), read that retained
-        snapshot instead — time-travel audit reads.
+        ``version``, read that version's directory instead — the
+        current one, or a snapshot ``retain_versions`` kept —
+        time-travel audit reads.
 
         Raw-input caching (Eclipse C1/C2): the current copy's read is
         memoised per commit (:meth:`_resolve`), so a repeat ``get`` of
@@ -827,17 +777,20 @@ class Catalog:
         put restarts the table at version 1 under a new commit id."""
         p = self.path_of(name)
         self._reads.pop(name, None)
-        for v in self.history(name):
-            shutil.rmtree(self._version_path(name, v), ignore_errors=True)
-        if os.path.exists(p):
-            shutil.rmtree(p)
-            return True
-        return False
+        with self._locked():
+            found = os.path.lexists(p)
+            for v in self._versions(name):
+                shutil.rmtree(self._version_path(name, v), ignore_errors=True)
+            if os.path.islink(p):
+                os.unlink(p)
+            elif found:
+                shutil.rmtree(p)
+        return found
 
     def write(self, name: str, df: DataFrame) -> str:
         """``Owrite`` analogue: append records to a named output table
         (Eclipse appends lines to the DHT-placed output file)."""
-        return self._append(name, df.write.mode("append"))
+        return self._commit(name, df.write.mode("append").parquet, base=name)
 
     def write_partitioned(
         self, name: str, df: DataFrame, partition_by: list[str]
@@ -848,7 +801,7 @@ class Catalog:
         rewriting any row already there — the refresh write the
         incremental index family needs (`similarity.ivf_refresh` appends
         its newly assigned postings). It writes O(batch) data; existing
-        files are only hard-linked into the next copy, one link each.
+        files are only hard-linked into the next version, one link each.
         ``partition_by`` must match the layout the table was :meth:`put` with — a mismatched spec would interleave
         incompatible directory layouts, so it is checked against the
         current on-disk layout and fails loudly."""
@@ -866,9 +819,8 @@ class Catalog:
                     f"specifies {sorted(partition_by)} — mixed layouts "
                     f"would corrupt partition discovery"
                 )
-        return self._append(
-            name, df.write.mode("append").partitionBy(*partition_by)
-        )
+        writer = df.write.mode("append").partitionBy(*partition_by)
+        return self._commit(name, writer.parquet, base=name)
 
 
 def table_diff(old: DataFrame, new: DataFrame, on: list[str]) -> DataFrame:
@@ -926,23 +878,3 @@ def table_diff(old: DataFrame, new: DataFrame, on: list[str]) -> DataFrame:
         "_c.change_type", *[F_col(f"_c.{c}").alias(c) for c in on], "_c._v.*"
     )
     return out
-
-
-def open_sf_dir(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every driver-generated parquet table under a testdata dir."""
-    out: dict[str, DataFrame] = {}
-    for f in sorted(os.listdir(sf_dir)):
-        if f.endswith(".parquet"):
-            out[f[: -len(".parquet")]] = spark.read.parquet(os.path.join(sf_dir, f))
-    return out
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: list[str] | None = None
-) -> dict[str, DataFrame]:
-    """Load the standard tables (or ``names``) from an sf dir."""
-    if names is None:
-        return open_sf_dir(spark, sf_dir)
-    return {
-        n: spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet")) for n in names
-    }

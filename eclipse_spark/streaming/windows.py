@@ -255,39 +255,32 @@ def apply_ivm_batch(
     it was recognized as a replay and skipped.
 
     Idempotence protocol (atomic commit marker): the batch id is
-    committed IN THE SAME RENAME as the refreshed data —
-    ``Catalog.put(..., marker={"last_batch": B})`` stages the parquet
-    directory with a ``_commit.json`` inside it, so "data visible" and
-    "batch B recorded" are one filesystem operation with no window
-    between them (the earlier sidecar-next-to-the-table design had two:
+    committed IN THE SAME LINK SWAP as the refreshed data —
+    ``Catalog.put(..., marker={"last_batch": B})`` writes a
+    ``_commit.json`` into the new version directory, so "data visible"
+    and "batch B recorded" are one filesystem operation with no window
+    between them (the earlier sidecar-next-to-the-table design had one:
     a crash between the data rename and the manifest version bump
-    re-applied the batch, and a crash between retire and rename lost
-    the whole accumulated view on replay). On delivery of batch_id:
+    re-applied the batch). On delivery of batch_id:
 
-    - recover first: if a previous put died between parking the old
-      copy as a snapshot and renaming the new data in, the table path
-      is missing — ``Catalog.recover`` restores the newest snapshot
-      (whose own marker is the last truly-committed batch);
     - skip iff the current table's marker already records
       ``last_batch >= batch_id`` — the replayed batch's put committed;
     - otherwise apply and commit data+marker atomically.
 
-    A re-delivered in-flight batch cannot double-add, an interrupted
-    one cannot be lost, and no crash point between the two steps of a
-    versioned put changes either answer. Requires a versioned catalog
-    (``retain_versions >= 1``) — the refresh reads the table it
-    overwrites, and recovery needs the retired snapshot."""
+    A crash anywhere before the swap leaves the previous version
+    current, marker included, so a re-delivered in-flight batch cannot
+    double-add and an interrupted one cannot be lost. Requires a
+    versioned catalog (``retain_versions >= 1``): the refresh reads the
+    table it overwrites."""
     from eclipse_spark.operators.ivm import aggregate_view, incremental_refresh
 
     if catalog.retain_versions <= 0:
         raise ValueError(
             "apply_ivm_batch: catalog needs retain_versions >= 1 "
-            "(the refresh reads the table it overwrites, and crash "
-            "recovery restores the retired snapshot)"
+            "(the refresh reads the table it overwrites)"
         )
     if batch_df.isEmpty():
         return False
-    catalog.recover(table)
     mk = catalog.read_marker(table)
     applied = int(mk.get("last_batch", -1)) if mk else -1
     if batch_id <= applied:
@@ -334,16 +327,15 @@ def ivm_stream_to_catalog(
     naturally idempotent (a replayed in-flight batch would double-add
     into the view), so each apply runs the atomic-commit-marker
     protocol of :func:`apply_ivm_batch` — the batch id rides inside
-    the same directory rename that publishes the refreshed data, and a
+    the same link swap that publishes the refreshed data, and a
     replayed batch_id is skipped iff the committed marker already
     records it. Restarting from a durable checkpoint is therefore
     safe: re-delivered batches are detected and dropped, interrupted
-    ones recovered and re-applied."""
+    ones re-applied."""
     if catalog.retain_versions <= 0:
         raise ValueError(
             "ivm_stream_to_catalog: catalog needs retain_versions >= 1 "
-            "(the refresh reads the table it overwrites; put() is only "
-            "crash-safe for self-reads on a versioned catalog)"
+            "(the refresh reads the table it overwrites)"
         )
 
     def _apply(batch_df, batch_id):

@@ -1,9 +1,13 @@
 """SURVEY §7's top risk-register item, property-tested (VERDICT r5
 task 7): under ANY interleaving of catalog mutations (put/overwrite,
-Owrite-append, rm) and pipeline reruns, a semantic-cache hit must be
+Owrite-append, concurrent appends, rm) and pipeline reruns, a semantic-cache hit must be
 byte-identical to a cold recompute over the CURRENT input — i.e. the
 (op-DAG fingerprint, input commit id) key can never serve a stale hit,
 and a repeat run with no intervening mutation must actually hit.
+
+A ``race`` op appends from two threads at once, each through its own
+``Catalog`` on the root: the model adds both batches, so a lost append
+shows as a wrong count on the next run.
 
 Model-based: a driver-side Python model tracks exactly what the
 mutations put into the table, so the expected word counts come from
@@ -16,6 +20,7 @@ accumulate exposure) while keeping the suite fast."""
 
 from __future__ import annotations
 
+import threading
 from collections import Counter
 
 import pytest
@@ -30,7 +35,7 @@ from eclipse_spark.storage import Catalog
 
 OPS = st.lists(
     st.tuples(
-        st.sampled_from(["put", "append", "rm", "run", "run"]),
+        st.sampled_from(["put", "append", "race", "rm", "run", "run"]),
         st.integers(min_value=0, max_value=4),
     ),
     min_size=1,
@@ -61,6 +66,7 @@ class _World:
 
     def __init__(self, spark, root: str):
         self.cat = Catalog(spark, f"{root}/tables")
+        self.peers = (Catalog(spark, f"{root}/tables"), Catalog(spark, f"{root}/tables"))
         self.cache = SemanticCache(spark, f"{root}/cache")
         self.model: Counter = Counter()
         self.mutated_since_run = True
@@ -75,6 +81,32 @@ class _World:
     def append(self, seed: int) -> None:
         self.cat.write("docs", _df(self.spark, seed))
         self.model = (self.model or Counter()) + Counter(t for _i, t in _rows(seed))
+        self.mutated_since_run = True
+
+    def race(self, seed: int) -> None:
+        """Two writers append seeds ``seed`` and ``seed + 1`` together."""
+        start = threading.Barrier(2)
+        errors: list[Exception] = []
+
+        def append(cat: Catalog, k: int) -> None:
+            start.wait()
+            try:
+                cat.write("docs", _df(self.spark, k))
+            except Exception as exc:  # noqa: BLE001 - asserted below
+                errors.append(exc)
+
+        threads = [
+            threading.Thread(target=append, args=(cat, seed + i))
+            for i, cat in enumerate(self.peers)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        assert not errors, errors
+        self.model = (self.model or Counter()) + Counter(
+            t for k in (seed, seed + 1) for _i, t in _rows(k)
+        )
         self.mutated_since_run = True
 
     def rm(self) -> None:
@@ -119,6 +151,8 @@ def test_cache_hit_equals_cold_recompute_under_mutation(
             world.put(seed)
         elif op == "append":
             world.append(seed)
+        elif op == "race":
+            world.race(seed)
         elif op == "rm":
             world.rm()
         else:

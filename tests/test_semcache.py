@@ -166,6 +166,50 @@ def test_unregistered_directory_is_counted_and_evicted(spark, tmp_path):
     assert cache.stats.evictions == 2
 
 
+def test_eviction_pass_removes_dead_writers_leftovers(spark, tmp_path):
+    """A ``materialize`` killed mid-write leaves ``<fp>.tmp.<pid>.<uuid>``
+    and an eviction killed mid-delete leaves ``<fp>.del.<uuid>``; neither
+    is an entry, so neither was ever counted or evicted. The next
+    materialize removes both once the writer's pid has exited, and
+    leaves a live writer's staging alone."""
+    import os
+    import subprocess
+    import uuid
+
+    proc = subprocess.Popen(["true"])
+    proc.wait()
+    root = tmp_path / "cache"
+    root.mkdir()
+    dead = root / f"fp_x.tmp.{proc.pid}.{uuid.uuid4().hex}"
+    aside = root / f"fp_y.del.{uuid.uuid4().hex}"
+    live = root / f"fp_z.tmp.{os.getpid()}.{uuid.uuid4().hex}"
+    for d in (dead, aside, live):
+        spark.range(5).write.parquet(str(d))
+    cache = SemanticCache(spark, str(root))
+    cache.materialize("fp_a", spark.range(3))
+    assert sorted(os.listdir(root)) == ["fp_a.parquet", live.name]
+
+
+def test_failed_materialize_leaves_no_staging(spark, tmp_path, monkeypatch):
+    """A ``materialize`` that raises after its write removes its own
+    staging directory; nothing but published entries stays."""
+    import os
+
+    import pytest
+
+    root = tmp_path / "cache"
+    cache = SemanticCache(spark, str(root))
+    cache.materialize("fp_a", spark.range(3))
+
+    def crash(_path):
+        raise RuntimeError("injected crash after the write")
+
+    monkeypatch.setattr(SemanticCache, "_dir_bytes", staticmethod(crash))
+    with pytest.raises(RuntimeError, match="injected crash"):
+        cache.materialize("fp_b", spark.range(4))
+    assert sorted(os.listdir(root)) == ["fp_a.parquet"]
+
+
 def test_later_publish_keeps_the_first_entry(spark, tmp_path):
     """Two sessions materialize one fingerprint: the second keeps the
     entry the first published and drops its own copy, so a read the

@@ -8,7 +8,7 @@ import pytest
 
 from eclipse_spark.pipeline import Pipeline
 from eclipse_spark.semcache import SemanticCache
-from eclipse_spark.storage import Catalog, load_tables
+from eclipse_spark.storage import Catalog
 
 
 def test_put_get_ls_rm(spark, sf_smoke, tmp_path):
@@ -38,11 +38,6 @@ def test_version_bumps(spark, sf_smoke, tmp_path):
     v1 = cat.info("t").version
     cat.write("t", df)
     assert cat.info("t").version == v1 + 1
-
-
-def test_load_tables(spark, sf_smoke):
-    t = load_tables(spark, sf_smoke, ["region", "nation"])
-    assert set(t) == {"region", "nation"}
 
 
 def test_compact_and_sorted_layout(spark, tmp_path):
@@ -106,9 +101,8 @@ def test_merge_upsert_and_delete(spark, tmp_path):
     dels = spark.range(100, 103).select(F.col("id").alias("k"), F.lit(0).alias("v"))
     cat.merge("m", dels, on=["k"], delete_matched=True)
     assert sorted(r["k"] for r in cat.get("m").collect()) == list(range(10))
-    # no stray tmp/old dirs survive the swap
-    leftovers = [f for f in (tmp_path / "cat3").iterdir()
-                 if f.name.endswith((".tmp", ".old"))]
+    # no staging directory survives the swap
+    leftovers = [f for f in (tmp_path / "cat3").iterdir() if ".tmp." in f.name]
     assert leftovers == []
 
 
@@ -167,6 +161,7 @@ def test_time_travel_snapshots_and_restore(spark, tmp_path):
     cat.put("t", df3)                       # current v3, snapshots v1,v2
     assert cat.history("t") == [1, 2]
     assert cat.get("t").count() == 7
+    assert cat.get("t", version=3).count() == 7  # the current version too
     assert cat.get("t", version=1).count() == 3
     assert cat.get("t", version=2).count() == 5
 
@@ -242,6 +237,7 @@ def test_table_diff_classifies_null_transitions(spark, tmp_path):
     cat.put("t", old)
     cat.put("t", new)
     assert cat.diff("t", from_version=1, on=["k"]).count() == 6
+    assert cat.diff("t", from_version=1, to_version=2, on=["k"]).count() == 6
     import pytest as _pytest
 
     with _pytest.raises(ValueError):
@@ -286,16 +282,18 @@ def test_get_evolved_merges_widened_schema(spark, tmp_path):
     assert rows[1].x is None and rows[2].x == 9.5
 
 
-def test_put_many_atomic_publish_and_roll_forward(spark, tmp_path):
-    """Multi-table commit: both tables land with bumped versions and
-    the journal clears; a crash AFTER the journal write (simulated:
-    tmps + journal on disk, renames never ran) is rolled forward by
-    the next session — both tables publish, versions match the
-    journal; a crash BEFORE the journal (tmps only) changes nothing."""
-    import json
-    import os
+def _crash(*_args):
+    raise RuntimeError("injected crash")
 
-    from eclipse_spark.storage import Catalog
+
+def test_put_many_atomic_publish_and_roll_forward(spark, tmp_path, monkeypatch):
+    """Multi-table commit: both tables land with bumped versions and
+    the journal clears. A writer that dies after the journal (the
+    commit point) but before the link swaps is rolled forward by the
+    next session — both tables publish at the journaled versions; one
+    that dies after claiming both versions but before the journal
+    changes nothing, and the next commit removes its claims."""
+    import json
 
     root = str(tmp_path / "cat")
     cat = Catalog(spark, root, retain_versions=1)
@@ -311,43 +309,69 @@ def test_put_many_atomic_publish_and_roll_forward(spark, tmp_path):
     )
     assert cat.get("fact").count() == 10 and cat.get("dim").count() == 3
     assert cat.info("fact").version == v0 + 1
-    assert not os.path.exists(cat._journal_path())
+    assert not os.path.exists(cat._journal)
 
-    # crash AFTER the commit point: stage tmps + journal by hand
-    for name, n in (("fact", 20), ("dim", 7)):
-        spark.range(n).write.mode("overwrite").parquet(
-            cat.path_of(name) + ".tmp"
-        )
+    # crash AFTER the commit point: journal written, no link swapped
     staged = {
         "fact": cat.info("fact").version + 1,
         "dim": cat.info("dim").version + 1,
     }
-    with open(cat._journal_path(), "w") as fh:
-        json.dump(staged, fh)
+    monkeypatch.setattr(Catalog, "_publish", _crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        cat.put_many(
+            {
+                "fact": spark.range(20).withColumnRenamed("id", "v"),
+                "dim": spark.range(7).withColumnRenamed("id", "k"),
+            }
+        )
+    monkeypatch.undo()
+    with open(cat._journal) as fh:
+        assert json.load(fh) == staged
     cat2 = Catalog(spark, root, retain_versions=1)  # next session
     assert cat2.get("fact").count() == 20 and cat2.get("dim").count() == 7
     assert cat2.info("fact").version == staged["fact"]
     assert cat2.info("dim").version == staged["dim"]
-    assert not os.path.exists(cat2._journal_path())
+    assert not os.path.exists(cat2._journal)
 
-    # crash BEFORE the commit point: a stale tmp alone must not publish
-    spark.range(99).write.mode("overwrite").parquet(
-        cat2.path_of("fact") + ".tmp"
-    )
+    # crash BEFORE the commit point: both versions claimed, the journal
+    # cut short
+    dump = json.dump
+
+    def torn_journal(obj, fh):
+        if set(obj) == {"fact", "dim"}:
+            fh.write(json.dumps(obj)[:9])
+            raise RuntimeError("injected crash")
+        dump(obj, fh)
+
+    monkeypatch.setattr(json, "dump", torn_journal)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        cat2.put_many({"fact": spark.range(99), "dim": spark.range(98)})
+    monkeypatch.undo()
     cat3 = Catalog(spark, root, retain_versions=1)
     assert cat3.get("fact").count() == 20  # unchanged
     assert cat3.info("fact").version == staged["fact"]
+    assert cat3.get("dim").count() == 7
+    assert cat3.info("dim").version == staged["dim"]
+
+    # the next commits replace the unpublished claims
+    cat3.put_many(
+        {"fact": spark.range(4).withColumnRenamed("id", "v"), "dim": spark.range(2)}
+    )
+    assert cat3.info("fact").version == staged["fact"] + 1
+    assert cat3.get("fact").count() == 4 and cat3.get("dim").count() == 2
+    assert sorted(os.listdir(root)) == sorted(
+        f"{n}.parquet{v}"
+        for n in ("fact", "dim")
+        for v in ("", f".v{staged[n]}", f".v{staged[n] + 1}")
+    )
 
 
 def test_put_many_retention_off_overwrites_existing(spark, tmp_path):
-    """ADVICE r7 (medium): with retain_versions=0 (the default),
-    _retire_current no-ops, and the final rename used to hit an
-    existing non-empty parquet directory (ENOTEMPTY) — AFTER the
-    journal commit point, so every subsequent Catalog.__init__
-    re-raised during recover_pending and the catalog root became
-    unopenable. The park-aside swap must make both put_many and
-    put(marker=...) succeed on existing tables with retention off,
-    and leave no .old/.tmp garbage behind."""
+    """ADVICE r7 (medium): with retain_versions=0 (the default), an
+    overwrite of an existing table once failed after the journal commit
+    point and left the catalog root unopenable. Both put_many and
+    put(marker=...) must succeed on existing tables with retention off
+    and leave no staging garbage behind."""
     import os
 
     from eclipse_spark.storage import Catalog
@@ -379,17 +403,13 @@ def test_put_many_retention_off_overwrites_existing(spark, tmp_path):
     assert cat2.get("fact").count() == 7
 
 
-def test_get_many_snapshot_across_put_many(spark, tmp_path):
-    """VERDICT r7 task 6: a reader that lands mid-_apply_journal (the
-    journal exists, one table already renamed in, the other still
-    staged) must see all-old or all-new — get_many rolls the decided
-    commit forward and returns the all-new vector. Without a pending
-    commit it returns the current vector unchanged."""
-    import json
-    import os
-
-    from eclipse_spark.storage import Catalog
-
+def test_get_many_snapshot_across_put_many(spark, tmp_path, monkeypatch):
+    """A reader that lands after a ``put_many`` writer died mid-swap
+    (the journal exists, one table's link swapped, the other not) must
+    see all-old or all-new: get_many reads the journaled versions and
+    returns the all-new vector, writing nothing; the next session
+    rolls the commit forward. Without a pending commit it returns the
+    current vector unchanged."""
     root = str(tmp_path / "cat")
     cat = Catalog(spark, root, retain_versions=1)
     cat.put_many(
@@ -403,52 +423,40 @@ def test_get_many_snapshot_across_put_many(spark, tmp_path):
     dfs = cat.get_many(["fact", "dim"])
     assert dfs["fact"].count() == 10 and dfs["dim"].count() == 3
 
-    # simulate a reader arriving mid-commit: stage both tmps, write the
-    # journal (= commit point), then rename ONLY fact in by hand — the
-    # exact mixed-version window put_many documents.
-    for name, n in (("fact", 20), ("dim", 7)):
-        spark.range(n).write.mode("overwrite").parquet(
-            cat.path_of(name) + ".tmp"
-        )
+    # the writer dies after swapping dim (names swap in sorted order)
+    # and before swapping fact: the mixed window put_many documents
     staged = {
         "fact": cat.info("fact").version + 1,
         "dim": cat.info("dim").version + 1,
     }
-    with open(cat._journal_path(), "w") as fh:
-        json.dump(staged, fh)
-    cat._replace_current("fact", cat.path_of("fact") + ".tmp")  # partial apply
+    publish = Catalog._publish
 
-    dfs = cat.get_many(["fact", "dim"])  # must NOT see fact=20/dim=3
+    def crash_on_fact(self, name, version):
+        if name == "fact":
+            raise RuntimeError("injected crash")
+        publish(self, name, version)
+
+    monkeypatch.setattr(Catalog, "_publish", crash_on_fact)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        cat.put_many(
+            {
+                "fact": spark.range(20).withColumnRenamed("id", "v"),
+                "dim": spark.range(7).withColumnRenamed("id", "k"),
+            }
+        )
+    monkeypatch.undo()
+    assert cat.get("fact").count() == 10 and cat.get("dim").count() == 7
+
+    before = sorted(os.listdir(root))
+    dfs = cat.get_many(["fact", "dim"])  # must NOT see fact=10/dim=7
     assert dfs["fact"].count() == 20 and dfs["dim"].count() == 7
-    assert not os.path.exists(cat._journal_path())
-    assert cat.info("fact").version == staged["fact"]
-    assert cat.info("dim").version == staged["dim"]
+    assert sorted(os.listdir(root)) == before  # a read writes nothing
 
-
-def test_recover_restores_old_park_aside(spark, tmp_path):
-    """Crash inside _replace_current's retention-off window (current
-    parked at .old, staged rename never ran): recover() restores the
-    parked copy; the stale .old next to a LIVE current is swept by
-    recover_pending on the next session."""
-    import os
-    import shutil
-
-    from eclipse_spark.storage import Catalog
-
-    root = str(tmp_path / "cat")
-    cat = Catalog(spark, root)
-    cat.put("t", spark.range(5).withColumnRenamed("id", "v"))
-    # simulate the crash: park current aside, no staged data renamed in
-    os.rename(cat.path_of("t"), cat.path_of("t") + ".old")
-    assert not cat.exists("t")
-    assert cat.recover("t") is True
-    assert cat.get("t").count() == 5
-
-    # stale .old NEXT TO a live current is garbage -> swept on init
-    shutil.copytree(cat.path_of("t"), cat.path_of("t") + ".old")
-    cat2 = Catalog(spark, root)
-    assert not os.path.exists(cat2.path_of("t") + ".old")
-    assert cat2.get("t").count() == 5
+    cat2 = Catalog(spark, root, retain_versions=1)  # next session
+    assert not os.path.exists(cat2._journal)
+    assert cat2.info("fact").version == staged["fact"]
+    assert cat2.info("dim").version == staged["dim"]
+    assert cat2.get("fact").count() == 20
 
 
 def test_compact_rewrites_small_files(spark, tmp_path):
@@ -568,24 +576,21 @@ def test_two_catalogs_on_one_root_see_each_others_commits(spark, tmp_path):
 
 
 def test_crash_before_publish_rename_keeps_old_version(spark, tmp_path, monkeypatch):
-    """A commit that dies after staging its copy but before the rename
-    leaves the old data under the old version and commit id, so a
-    cached pipeline's hit stays correct; the next commit cleans the
-    leftover staging directory and publishes the next version."""
+    """A commit that dies after staging its copy but before claiming a
+    version leaves the old data under the old version and commit id, so
+    a cached pipeline's hit stays correct; the failed writer removes its
+    staging directory, and the next commit publishes the next version."""
     root = str(tmp_path / "cat")
     cat = Catalog(spark, root)
     cache = SemanticCache(spark, str(tmp_path / "cache"))
     cat.put("t", spark.range(0, 3))
     before = cat.info("t")
 
-    def crash(*_args):
-        raise RuntimeError("injected crash before the publish rename")
-
-    monkeypatch.setattr(Catalog, "_retire_current", crash)
+    monkeypatch.setattr(Catalog, "_claim", _crash)
     with pytest.raises(RuntimeError, match="injected crash"):
         cat.put("t", spark.range(100, 103))
     monkeypatch.undo()
-    assert os.path.exists(cat.path_of("t") + ".tmp")  # staged, never renamed
+    assert sorted(os.listdir(root)) == ["t.parquet", f"t.parquet.v{before.version}"]
 
     cat2 = Catalog(spark, root)  # the next session
     assert cat2.info("t").version == before.version
@@ -601,52 +606,116 @@ def test_crash_before_publish_rename_keeps_old_version(spark, tmp_path, monkeypa
 
     cat2.put("t", spark.range(100, 103))
     assert cat2.info("t").version == before.version + 1
-    assert not os.path.exists(cat2.path_of("t") + ".tmp")
+    assert sorted(os.listdir(root)) == ["t.parquet", f"t.parquet.v{before.version + 1}"]
     out, hit = run()
     assert _ids(out) == [100, 101, 102] and hit is False
 
 
 @pytest.mark.parametrize("retain", [0, 1])
 @pytest.mark.parametrize("via", ["put", "put_many"])
-def test_crash_after_retire_counts_from_last_published_version(
+def test_crash_before_link_swap_keeps_current_version(
     spark, tmp_path, monkeypatch, retain, via
 ):
-    """A commit that dies after the current copy was retired (retention
-    on) or parked aside (retention off) but before the staged copy was
-    renamed in leaves the table path missing. The next commit — a plain
-    put, or put_many's roll-forward in the next session — restores the
-    old copy first, so it publishes the next version and, with
-    retention on, keeps the old rows as that version's snapshot."""
+    """A commit that dies after claiming ``v<N+1>`` but before swapping
+    the link leaves version N current, rows and commit id included. The
+    next commit — a plain put, or put_many's roll-forward in the next
+    session, whose journal was written — publishes N+1, keeps N as its
+    snapshot with retention on, and leaves only the link and retained
+    version directories behind."""
     root = str(tmp_path / "cat")
     cat = Catalog(spark, root, retain_versions=retain)
     cat.put("t", spark.range(0, 3))
     cat.put("t", spark.range(10, 13))
-    before = cat.info("t").version
-    rename = os.rename
+    before = cat.info("t")
 
-    def crash_on_publish(src, dst):
-        if str(src).endswith(".parquet.tmp"):
-            raise RuntimeError("injected crash before the publish rename")
-        rename(src, dst)
-
-    monkeypatch.setattr(os, "rename", crash_on_publish)
+    monkeypatch.setattr(Catalog, "_publish", _crash)
     with pytest.raises(RuntimeError, match="injected crash"):
         if via == "put":
             cat.put("t", spark.range(100, 103))
         else:
             cat.put_many({"t": spark.range(100, 103)})
     monkeypatch.undo()
-    assert not cat.exists("t")  # retired or parked, not yet replaced
+    assert os.path.isdir(cat._version_path("t", before.version + 1))  # claimed
+    assert cat.info("t").version == before.version
+    assert cat.info("t").commit == before.commit
+    assert _ids(cat.get("t")) == [10, 11, 12]
 
     if via == "put":
         cat.put("t", spark.range(100, 103))
     else:
         cat = Catalog(spark, root, retain_versions=retain)  # rolls forward
-    assert cat.info("t").version == before + 1
+    assert cat.info("t").version == before.version + 1
     assert _ids(cat.get("t")) == [100, 101, 102]
     if retain:
-        assert cat.history("t") == [before]
-        assert _ids(cat.get("t", version=before)) == [10, 11, 12]
+        assert cat.history("t") == [before.version]
+        assert _ids(cat.get("t", version=before.version)) == [10, 11, 12]
+    kept = [before.version] * retain + [before.version + 1]
+    assert sorted(os.listdir(root)) == ["t.parquet", *(f"t.parquet.v{v}" for v in kept)]
+
+
+def test_concurrent_appends_keep_every_row(spark, tmp_path):
+    """Two writers, each with its own ``Catalog`` on one root, append
+    6 batches of 1,000 rows each to a 1,000-row table, starting every
+    batch together. Every row survives, nothing raises, and the
+    versions are distinct and contiguous: version k holds 1,000 * k
+    rows."""
+    import threading
+
+    root = str(tmp_path / "cat")
+    Catalog(spark, root).put("t", spark.range(1000))
+    start = threading.Barrier(2)
+    errors = []
+
+    def writer():
+        cat = Catalog(spark, root, retain_versions=12)
+        for _ in range(6):
+            start.wait()
+            try:
+                cat.write("t", spark.range(1000))
+            except Exception as exc:  # noqa: BLE001 - reported below
+                errors.append(repr(exc))
+
+    threads = [threading.Thread(target=writer) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert errors == []
+    cat = Catalog(spark, root)
+    assert cat.info("t").version == 13
+    assert cat.get("t").count() == 13_000
+    assert [cat.get("t", version=v).count() for v in range(1, 14)] == [
+        1000 * v for v in range(1, 14)
+    ]
+    assert sorted(os.listdir(root)) == sorted(
+        ["t.parquet", *(f"t.parquet.v{v}" for v in range(1, 14))]
+    )
+
+
+def _dead_pid() -> int:
+    import subprocess
+
+    proc = subprocess.Popen(["true"])
+    proc.wait()
+    return proc.pid
+
+
+def test_commit_removes_dead_writers_staging(spark, tmp_path):
+    """A writer killed mid-commit leaves ``<name>.parquet.tmp.<pid>.<uuid>``
+    behind; the next commit on the root removes it once that pid has
+    exited, and leaves a live writer's staging alone."""
+    import uuid
+
+    root = tmp_path / "cat"
+    cat = Catalog(spark, str(root))
+    cat.put("t", spark.range(3))
+    dead = root / f"t.parquet.tmp.{_dead_pid()}.{uuid.uuid4().hex}"
+    live = root / f"u.parquet.tmp.{os.getpid()}.{uuid.uuid4().hex}"
+    for d in (dead, live):
+        spark.range(2).write.parquet(str(d))
+    cat.write("t", spark.range(3))
+    assert not dead.exists() and live.exists()
+    assert cat.get("t").count() == 6
 
 
 def test_record_without_commit_id_is_a_bare_marker(spark, tmp_path):
@@ -782,3 +851,10 @@ def test_memoised_read_follows_recordless_directory_replace(spark, tmp_path):
     assert _ids(cat.get("t")) == [10, 11, 12]
     out, hit = run()
     assert _ids(out) == [10, 11, 12] and hit is False
+
+    # the first commit turns the directory into its own version
+    cat.write("t", spark.range(20, 21))
+    assert cat.info("t").version == 1
+    assert _ids(cat.get("t")) == [10, 11, 12, 20]
+    assert os.path.islink(cat.path_of("t"))
+    assert sorted(os.listdir(root)) == ["t.parquet", "t.parquet.v1"]

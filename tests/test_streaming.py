@@ -242,13 +242,13 @@ def test_ivm_exactly_once_survives_kill_restart(spark, events_small, tmp_path):
 
 
 def test_ivm_batch_apply_is_exactly_once(spark, tmp_path, monkeypatch):
-    """The atomic commit marker (batch id inside the same rename as
+    """The atomic commit marker (batch id inside the same link swap as
     the data) makes the additive IVM sink idempotent: a re-delivered
     batch_id whose put committed is skipped; a crash after staging but
-    before the rename leaves the old view, version and marker, so the
-    crashed batch adds nothing; a crash between retire and rename is
-    recovered from the snapshot and the batch re-applied. ADVICE r5
-    item 5 + r6 item 5."""
+    before the claim, or after the claim but before the link swap,
+    leaves the old view, version and marker, so the crashed batch adds
+    nothing and its re-delivery applies it once. ADVICE r5 item 5 +
+    r6 item 5."""
     import os
     import shutil
 
@@ -276,39 +276,39 @@ def test_ivm_batch_apply_is_exactly_once(spark, tmp_path, monkeypatch):
     assert {r.event_type: (r.n_rows, str(r.total))
             for r in cat.get("tv").collect()} == snap
 
-    # crash window A (staged but never renamed in): batch 2's commit
-    # dies after staging its copy — the old view keeps its version and
-    # its marker, so a replay of batch 1 is still skipped and the
+    # crash window A (staged, never claimed) and B (claimed, link never
+    # swapped): batch 2's commit dies — the old view keeps its version
+    # and its marker, so a replay of batch 1 is still skipped and the
     # crashed batch 2 has added nothing
     b2 = spark.createDataFrame([("b", 7.0)], ["event_type", "value"])
     v1 = cat.info("tv").version
 
     def crash(*_args):
-        raise RuntimeError("injected crash before the publish rename")
+        raise RuntimeError("injected crash before the link swap")
 
-    monkeypatch.setattr(Catalog, "_retire_current", crash)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        apply_ivm_batch(cat, "tv", b2, 2, **kw)
-    monkeypatch.undo()
-    cat2 = Catalog(spark, str(tmp_path / "cat"), retain_versions=1)
-    assert cat2.info("tv").version == v1
-    assert cat2.read_marker("tv") == {"last_batch": 1}
-    assert apply_ivm_batch(cat2, "tv", b1, 1, **kw) is False
-    assert {r.event_type: (r.n_rows, str(r.total))
-            for r in cat2.get("tv").collect()} == snap
+    for window in ("_claim", "_publish"):
+        monkeypatch.setattr(Catalog, window, crash)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            apply_ivm_batch(cat, "tv", b2, 2, **kw)
+        monkeypatch.undo()
+        cat2 = Catalog(spark, str(tmp_path / "cat"), retain_versions=1)
+        assert cat2.info("tv").version == v1
+        assert cat2.read_marker("tv") == {"last_batch": 1}
+        assert apply_ivm_batch(cat2, "tv", b1, 1, **kw) is False
+        assert {r.event_type: (r.n_rows, str(r.total))
+                for r in cat2.get("tv").collect()} == snap
 
-    # crash window B (retired but never renamed in): park the current
-    # copy as the next snapshot and delete the table path — delivery of
-    # batch 2 must recover the accumulated view, then apply on top
-    cur = cat2.info("tv").version
-    shutil.rmtree(cat2._version_path("tv", cur), ignore_errors=True)
-    os.rename(cat2.path_of("tv"), cat2._version_path("tv", cur))
-    assert not cat2.exists("tv")
+    # re-delivery of the crashed batch 2 applies it exactly once
     assert apply_ivm_batch(cat2, "tv", b2, 2, **kw) is True
+    assert apply_ivm_batch(cat2, "tv", b2, 2, **kw) is False
     got = {r.event_type: (r.n_rows, str(r.total))
            for r in cat2.get("tv").collect()}
     assert got["b"][0] == snap["b"][0] + 1      # batch 2 applied once
     assert got["a"] == snap["a"]                # prior accumulation intact
+    assert cat2.info("tv").version == v1 + 1
+    assert sorted(os.listdir(tmp_path / "cat")) == [
+        "tv.parquet", f"tv.parquet.v{v1}", f"tv.parquet.v{v1 + 1}"
+    ]
 
     # direct caller with an unversioned catalog is rejected (the refresh
     # reads the table it overwrites)
