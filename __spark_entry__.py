@@ -5655,10 +5655,12 @@ def q_events_stream_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_rows",
             F.col("total_value").cast("double").alias("total_value"),
         )
-        rows, out_schema = out.collect(), out.schema
+        # collected before the scratch directory goes; an Arrow-built
+        # frame replays without the Python-worker job a row list costs
+        pdf, out_schema = out.toPandas(), out.schema
     finally:
         shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, out_schema)
+    return spark.createDataFrame(pdf, out_schema)
 
 
 def q_events_stream_asof(spark: SparkSession, sf_dir: str) -> DataFrame:

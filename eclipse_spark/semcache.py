@@ -19,9 +19,11 @@ engine code. This module is that code:
 - hit  -> serve the materialized parquet, skip the whole compute
   subtree (the map-skip analogue, but for arbitrary plans). The read
   is memoised per entry directory (fingerprint + the directory's inode
-  and mtime), so a repeat hit plans no new read and runs no
-  schema-inference job; only its caller's action touches Spark. A
-  peer that evicts and rematerialises the entry replaces the
+  and mtime), so a repeat hit plans no new read; only its caller's
+  action touches Spark. The first read of an entry, in any session,
+  takes the schema from the entry's record
+  (``storage.read_committed``), so it runs no schema-inference job
+  either. A peer that evicts and rematerialises the entry replaces the
   directory, so the next hit reads the new files.
 - miss -> compute, materialize, publish; LRU-evict over budget like
   ``cache.hh:72-94`` (evict unlocked tail until the new entry fits).
@@ -30,7 +32,9 @@ Concurrency (N sessions sharing one cache root, like Orthrus' N
 per-node caches over one DHT): the root's directory listing is the
 cache's only state. An entry is one self-describing directory
 ``<fp>.parquet`` holding the parquet files and ``_entry.json``
-(``{"bytes": N}``), and only a directory with that record is served.
+(``{"bytes": N, "schema": ...}``), and only a directory with that
+record is served; a record without a schema (older code's) is read by
+inferring it.
 ``materialize`` writes into a private ``<fp>.tmp.<pid>.<uuid>``, adds
 the record and publishes with one rename, as ``Catalog._claim`` claims
 a table version, so a peer never reads a half-written entry; if a
@@ -90,7 +94,12 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from eclipse_spark.storage import staging_path, sweep_dead_writers
+from eclipse_spark.storage import (
+    read_committed,
+    read_schema,
+    staging_path,
+    sweep_dead_writers,
+)
 
 
 @dataclass
@@ -130,15 +139,18 @@ class SemanticCache:
         return os.path.join(self._entry_path(fp), self._RECORD)
 
     def _read(self, fp: str) -> DataFrame:
-        """The entry's DataFrame, memoised per directory stat. The stat
-        is taken before the read, so a memoised read is never older than
-        its stat: a directory replaced mid-read only costs a re-read."""
+        """The entry's DataFrame, read with its recorded schema and
+        memoised per directory stat. The stat is taken before the read,
+        so a memoised read is never older than its stat: a directory
+        replaced mid-read only costs a re-read."""
         path = self._entry_path(fp)
         st = os.stat(path)
         stamp = (st.st_ino, st.st_mtime_ns)
         memo = self._reads.get(fp)
         if memo is None or memo[0] != stamp:
-            memo = self._reads[fp] = (stamp, self.spark.read.parquet(path))
+            with open(self._record_path(fp)) as fh:
+                schema = json.load(fh).get("schema")
+            memo = self._reads[fp] = (stamp, read_committed(self.spark, path, schema))
         return memo[1]
 
     @staticmethod
@@ -230,18 +242,21 @@ class SemanticCache:
 
     def materialize(self, fingerprint: str, df: DataFrame) -> DataFrame:
         """Icache-write path: write the result into a private staging
-        directory with its ``_entry.json`` record, publish it with one
-        rename, evict LRU entries until under budget, and return the
-        cached read (so the caller's downstream plan reads parquet, not
-        the live subtree). If a peer published the fingerprint first,
-        its entry is kept and the staged copy dropped; a directory
-        without a record at the entry path is an unpublished leftover
-        and is removed before the rename."""
+        directory with its ``_entry.json`` record (size and read
+        schema), publish it with one rename, evict LRU entries until
+        under budget, and return the cached read (so the caller's
+        downstream plan reads parquet, not the live subtree). If a peer
+        published the fingerprint first, its entry is kept and the
+        staged copy dropped; a directory without a record at the entry
+        path is an unpublished leftover and is removed before the
+        rename."""
         tmp = staging_path(os.path.join(self.root, fingerprint))
         try:
             df.write.parquet(tmp)
             with open(os.path.join(tmp, self._RECORD), "w") as fh:
-                json.dump({"bytes": self._dir_bytes(tmp)}, fh)
+                json.dump(
+                    {"bytes": self._dir_bytes(tmp), "schema": read_schema(df)}, fh
+                )
             if not self.peek(fingerprint):
                 self._remove(fingerprint)
                 try:

@@ -26,9 +26,20 @@ appends) and keys cached results on those immutable files
 symlink to its current version directory ``<name>.parquet.v<N>``, and
 each version directory holds one immutable copy of the table plus its
 ``_commit.json`` record: the version, a fresh random commit id and the
-caller's marker. A real directory at ``<name>.parquet`` (copied in from
-outside) is read as it is; its first commit renames it to its own
-version directory.
+caller's marker, and the schema a parquet read of the copy would
+infer. A real directory at ``<name>.parquet`` (copied in from outside)
+is read as it is; its first commit renames it to its own version
+directory.
+
+Reads. Every read of a committed directory (:func:`read_committed`)
+hands Spark the recorded schema, so it lists files but runs no
+schema-inference job, the way Delta and Iceberg read the schema from
+their commit metadata. A copy has a recorded schema unless it is
+hive-partitioned (``put(partition_by=)``, ``write_partitioned``), bucketed
+(``put_bucketed``), copied in from outside, committed by older code, or
+an append whose batch's schema differs from its base's (widened); those
+reads infer the schema from a footer, as before. A branch or promote
+carries its base's schema.
 
 Commit protocol. Every mutation — put, append, merge, compaction, the
 sorted/z-order/bucketed layouts, branch/promote, restore and
@@ -77,6 +88,7 @@ from pyspark.sql.functions import explode as F_explode
 from pyspark.sql.functions import lit as F_lit
 from pyspark.sql.functions import struct as F_struct
 from pyspark.sql.functions import when as F_when
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 # a writer's staging name, ``<base>.tmp.<pid>.<uuid>``, or an evicted
 # cache entry renamed aside, ``<fp>.del.<uuid>``
@@ -114,6 +126,46 @@ def sweep_dead_writers(root: str) -> None:
         else:
             with contextlib.suppress(OSError):
                 os.unlink(p)
+
+
+def _nullable(t: DataType) -> DataType:
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
+def read_schema(df: DataFrame) -> dict:
+    """The schema a parquet read infers for what writing ``df`` leaves:
+    ``df``'s own, with every field, element and map value nullable, as
+    Spark reads every parquet column. JSON form, for a record."""
+    return _nullable(df.schema).jsonValue()
+
+
+def read_committed(spark: SparkSession, path: str, schema: dict | None) -> DataFrame:
+    """Read the parquet directory ``path`` given the ``schema`` its
+    record holds (:func:`read_schema`): Spark then lists the files but
+    runs no schema-inference job. Without one it infers the schema
+    from a footer, as a plain read does."""
+    reader = spark.read
+    if schema is not None:
+        reader = reader.schema(StructType.fromJson(schema))
+    return reader.parquet(path)
+
+
+def _partition_keys(path: str) -> set[str]:
+    """The hive partition keys (``key=value`` directories) at the top
+    of table directory ``path``."""
+    return {
+        e.split("=", 1)[0]
+        for e in os.listdir(path)
+        if "=" in e and not e.startswith((".", "_"))
+    }
 
 
 def _link_tree(src: str, dst: str) -> None:
@@ -216,6 +268,21 @@ class Catalog:
         # the bare marker, and the version lived outside the copy
         return rec if "commit" in rec else {"marker": rec}
 
+    def _read(self, d: str) -> DataFrame:
+        """Read table directory ``d`` (the link or a version directory)
+        with the schema its commit record holds."""
+        return read_committed(self.spark, d, self._record(d).get("schema"))
+
+    def _schema(self, name: str) -> dict | None:
+        """The recorded schema of ``name``'s current copy. A copy
+        without a commit record (copied in from outside) has its
+        memoised read's, unless it is hive-partitioned."""
+        d = self._target(name)[1]
+        rec = self._record(d)
+        if "commit" in rec:
+            return rec.get("schema")
+        return None if _partition_keys(d) else read_schema(self._resolve(name)[1])
+
     def _stamp(self, name: str) -> tuple | None:
         """(commit id, inode, mtime_ns) of the current copy, or None
         when the table is missing. Every commit links a new directory
@@ -233,7 +300,8 @@ class Catalog:
         stamp; a copy without a commit id is identified by its
         directory's stat instead, so replacing it changes the id too.
         The read is memoised per stamp: a repeat resolve of an
-        unchanged table re-runs no file listing or schema-inference job.
+        unchanged table re-runs no file listing, and a recorded schema
+        spares the first read its schema-inference job.
         A stamp that moved during the read means a commit landed
         mid-way, so the read is retried rather than paired with the
         wrong commit id."""
@@ -241,7 +309,7 @@ class Catalog:
             stamp = self._stamp(name)
             memo = self._reads.get(name)
             if stamp is None or memo is None or memo[0] != stamp:
-                df = self.spark.read.parquet(self.path_of(name))  # raises if missing
+                df = self._read(self.path_of(name))  # raises if missing
                 if stamp is None or self._stamp(name) != stamp:
                     continue
                 memo = self._reads[name] = (stamp, df)
@@ -326,30 +394,45 @@ class Catalog:
             return {}
 
     def _commit(
-        self, name: str, write, marker: dict | None = None, base: str | None = None
+        self,
+        name: str,
+        write,
+        marker: dict | None = None,
+        base: str | None = None,
+        schema: dict | None = None,
     ) -> str:
         """The one path every mutation takes to disk. ``write(tmp)``
         fills a private staging directory with no lock held; then, under
         the root lock, :meth:`_claim` makes it the next version and
-        :meth:`_publish` swaps the link to it."""
+        :meth:`_publish` swaps the link to it. ``schema`` is the
+        :func:`read_schema` of what ``write`` stages, or None when a
+        read must infer it."""
         sweep_dead_writers(self.root)
         tmp = staging_path(self.path_of(name))
         try:
             write(tmp)
             with self._locked():
-                self._publish(name, self._claim(name, tmp, marker, base))
+                self._publish(name, self._claim(name, tmp, marker, base, schema))
         finally:
             shutil.rmtree(tmp, ignore_errors=True)  # gone once claimed
         return self.path_of(name)
 
     def _claim(
-        self, name: str, tmp: str, marker: dict | None = None, base: str | None = None
+        self,
+        name: str,
+        tmp: str,
+        marker: dict | None = None,
+        base: str | None = None,
+        schema: dict | None = None,
     ) -> int:
         """Under the root lock: turn the staged ``tmp`` into the
         directory of ``name``'s next version, unpublished until
         :meth:`_publish`, and return that version. With ``base``, ``tmp``
         first gets that table's current files and takes its marker (an
-        append is not a new batch of an idempotent sink)."""
+        append is not a new batch of an idempotent sink). The record
+        holds ``schema``; with ``base``, only if the base has the same
+        one, so a widened append reads as before. A branch or promote
+        stages nothing and takes the base's."""
         path = self.path_of(name)
         if os.path.isdir(path) and not os.path.islink(path):
             # copied in from outside: it becomes its own version directory
@@ -361,13 +444,18 @@ class Catalog:
             # before a new table's first swap; the newest copy is whole
             self._publish(name, self._versions(name)[-1])
         if base is not None and self.exists(base):
+            base_schema = self._schema(base)
+            if schema != base_schema and os.listdir(tmp):
+                base_schema = None  # the staged files differ from the base's
+            schema = base_schema
             _link_tree(self.path_of(base), tmp)
             marker = self.read_marker(base)
         version = self.info(name).version + 1
+        rec = {"version": version, "commit": uuid.uuid4().hex, "marker": marker}
+        if schema is not None:
+            rec["schema"] = schema
         with open(os.path.join(tmp, self._RECORD), "w") as fh:
-            json.dump(
-                {"version": version, "commit": uuid.uuid4().hex, "marker": marker}, fh
-            )
+            json.dump(rec, fh)
         dst = self._version_path(name, version)
         shutil.rmtree(dst, ignore_errors=True)  # a claim a crash left unpublished
         os.rename(tmp, dst)
@@ -432,7 +520,7 @@ class Catalog:
             n_target = target_partitions
         else:
             n_target = max(1, -(-total // (target_file_mb << 20)))
-        df = self.spark.read.parquet(path)
+        df = self._read(path)
         # hive partition columns, derived from the READER (ADVICE r8):
         # Spark's partition discovery surfaces key=value directory
         # columns in the table schema but not in any leaf file's
@@ -441,8 +529,9 @@ class Catalog:
         # (conflicting layouts) or is a real partition level, never a
         # silently-wrong rewrite the old dirname walk could produce.
         # Column order follows df.columns (Spark appends partition
-        # columns in directory-nesting order).
-        if before:
+        # columns in directory-nesting order). A recorded schema means
+        # an unpartitioned copy.
+        if before and self._record(path).get("schema") is None:
             leaf_cols = set(self.spark.read.parquet(before[0]).columns)
             part_cols = [c for c in df.columns if c not in leaf_cols]
         else:
@@ -522,7 +611,8 @@ class Catalog:
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        return self._commit(name, writer.parquet, marker)
+        schema = None if partition_by else read_schema(df)
+        return self._commit(name, writer.parquet, marker, schema=schema)
 
     # -- multi-table atomic publish (roll-forward journal) --------------
     def put_many(self, tables: dict[str, DataFrame]) -> None:
@@ -553,7 +643,10 @@ class Catalog:
             for name, tmp in staged.items():
                 tables[name].write.mode("overwrite").parquet(tmp)
             with self._locked():
-                claimed = {n: self._claim(n, tmp) for n, tmp in staged.items()}
+                claimed = {
+                    n: self._claim(n, tmp, schema=read_schema(tables[n]))
+                    for n, tmp in staged.items()
+                }
                 with open(self._journal, "w") as fh:
                     json.dump(claimed, fh)  # <- commit point, once complete
                 self._roll_forward()
@@ -575,7 +668,7 @@ class Catalog:
         with self._locked(exclusive=False):
             pending = self._pending()
             return {
-                n: self.spark.read.parquet(
+                n: self._read(
                     self._version_path(n, pending[n])
                     if n in pending
                     else self._target(n)[1]
@@ -750,7 +843,7 @@ class Catalog:
                 f"table {name!r} has no retained snapshot v{version}; "
                 f"available: {self.history(name)}"
             )
-        return self.spark.read.parquet(p)
+        return self._read(p)
 
     def get_evolved(self, name: str) -> DataFrame:
         """Read a table whose appended batches carry DIFFERENT (widened)
@@ -790,7 +883,9 @@ class Catalog:
     def write(self, name: str, df: DataFrame) -> str:
         """``Owrite`` analogue: append records to a named output table
         (Eclipse appends lines to the DHT-placed output file)."""
-        return self._commit(name, df.write.mode("append").parquet, base=name)
+        return self._commit(
+            name, df.write.mode("append").parquet, base=name, schema=read_schema(df)
+        )
 
     def write_partitioned(
         self, name: str, df: DataFrame, partition_by: list[str]
@@ -807,15 +902,11 @@ class Catalog:
         current on-disk layout and fails loudly."""
         path = self.path_of(name)
         if os.path.exists(path):
-            on_disk = sorted(
-                e.split("=", 1)[0]
-                for e in os.listdir(path)
-                if "=" in e and not e.startswith((".", "_"))
-            )
-            if on_disk and sorted(set(on_disk)) != sorted(partition_by):
+            on_disk = sorted(_partition_keys(path))
+            if on_disk and on_disk != sorted(partition_by):
                 raise ValueError(
                     f"write_partitioned({name!r}): table is partitioned "
-                    f"by {sorted(set(on_disk))} on disk but the append "
+                    f"by {on_disk} on disk but the append "
                     f"specifies {sorted(partition_by)} — mixed layouts "
                     f"would corrupt partition discovery"
                 )

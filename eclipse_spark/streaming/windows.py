@@ -269,16 +269,11 @@ def apply_ivm_batch(
 
     A crash anywhere before the swap leaves the previous version
     current, marker included, so a re-delivered in-flight batch cannot
-    double-add and an interrupted one cannot be lost. Requires a
-    versioned catalog (``retain_versions >= 1``): the refresh reads the
-    table it overwrites."""
+    double-add and an interrupted one cannot be lost. Any catalog works,
+    ``retain_versions=0`` included: the refresh reads the current
+    version directory, the put publishes a new one only after its write
+    has finished reading it, and pruning follows the link swap."""
     from eclipse_spark.operators.ivm import aggregate_view, incremental_refresh
-
-    if catalog.retain_versions <= 0:
-        raise ValueError(
-            "apply_ivm_batch: catalog needs retain_versions >= 1 "
-            "(the refresh reads the table it overwrites)"
-        )
     if batch_df.isEmpty():
         return False
     mk = catalog.read_marker(table)
@@ -332,11 +327,6 @@ def ivm_stream_to_catalog(
     records it. Restarting from a durable checkpoint is therefore
     safe: re-delivered batches are detected and dropped, interrupted
     ones re-applied."""
-    if catalog.retain_versions <= 0:
-        raise ValueError(
-            "ivm_stream_to_catalog: catalog needs retain_versions >= 1 "
-            "(the refresh reads the table it overwrites)"
-        )
 
     def _apply(batch_df, batch_id):
         apply_ivm_batch(

@@ -310,24 +310,59 @@ def test_ivm_batch_apply_is_exactly_once(spark, tmp_path, monkeypatch):
         "tv.parquet", f"tv.parquet.v{v1}", f"tv.parquet.v{v1 + 1}"
     ]
 
-    # direct caller with an unversioned catalog is rejected (the refresh
-    # reads the table it overwrites)
-    cat0 = Catalog(spark, str(tmp_path / "cat0"))
-    with pytest.raises(ValueError):
-        apply_ivm_batch(cat0, "tv", b2, 0, **kw)
-    shutil.rmtree(str(tmp_path / "cat0"), ignore_errors=True)
+    # an unversioned catalog folds each batch in exactly once too: the
+    # refresh has read the old version before its commit publishes the
+    # new one, and pruning follows the link swap
+    root0 = tmp_path / "cat0"
+    cat0 = Catalog(spark, str(root0))
+    for b, batch in enumerate((b0, b1, b2)):
+        assert apply_ivm_batch(cat0, "tv", batch, b, **kw) is True
+    for b, batch in enumerate((b0, b1, b2)):
+        assert apply_ivm_batch(cat0, "tv", batch, b, **kw) is False
+    assert {r.event_type: (r.n_rows, str(r.total))
+            for r in cat0.get("tv").collect()} == got
+    assert cat0.read_marker("tv") == {"last_batch": 2}
+    v0 = cat0.info("tv").version
+    assert v0 == 3
+    assert sorted(os.listdir(root0)) == ["tv.parquet", f"tv.parquet.v{v0}"]
+    shutil.rmtree(str(root0), ignore_errors=True)
 
 
-def test_ivm_stream_requires_versioned_catalog(spark, events_small, tmp_path):
+def test_ivm_stream_runs_on_unversioned_catalog(spark, events_small, tmp_path):
+    """``ivm_stream_to_catalog`` over a ``retain_versions=0`` catalog
+    drains to the batch aggregate, and the root keeps only the link and
+    the current version."""
+    import os
+    from decimal import Decimal
+
     from eclipse_spark.storage import Catalog
 
     path, df = events_small
-    stream = spark.readStream.schema(df.schema).parquet(path)
-    cat = Catalog(spark, str(tmp_path / "cat0"))
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        W.ivm_stream_to_catalog(
-            stream, cat, "t", keys=["event_type"],
-            sum_cols={"value": "total"}, checkpoint=str(tmp_path / "c"),
+    stream = (
+        spark.readStream.schema(df.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(path)
+    )
+    root = tmp_path / "cat0"
+    cat = Catalog(spark, str(root))
+    W.ivm_stream_to_catalog(
+        stream.select("event_type", "value"), cat, "t", keys=["event_type"],
+        sum_cols={"value": "total"}, checkpoint=str(tmp_path / "c"),
+    )
+    got = {
+        r.event_type: (r.n_rows, Decimal(str(r.total)))
+        for r in cat.get("t").collect()
+    }
+    exp = {
+        r.event_type: (r.n, Decimal(str(r.s)))
+        for r in df.groupBy("event_type")
+        .agg(
+            F.count("*").alias("n"),
+            F.sum(F.col("value").cast("decimal(18,2)")).alias("s"),
         )
+        .collect()
+    }
+    assert got == exp
+    v = cat.info("t").version
+    assert v >= 2
+    assert sorted(os.listdir(root)) == ["t.parquet", f"t.parquet.v{v}"]
