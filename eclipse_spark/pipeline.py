@@ -109,7 +109,8 @@ class Pipeline:
     def from_table(cls, catalog: Catalog, name: str, app: str = "app") -> "Pipeline":
         # the leaf's version is the commit id: it changes only in the
         # link swap that publishes new data, and never repeats, even after
-        # rm + re-put; it comes from the same resolve as the data
+        # rm + re-put; it comes from the record of the version directory
+        # the data is read from
         commit, df = catalog._resolve(name)
         dag = PlanNode.leaf("scan", table=name, version=commit)
         return cls._leaf(catalog.spark, df, dag, app)
@@ -308,26 +309,24 @@ class Pipeline:
     def _cold_build(self) -> DataFrame:
         """Rebuild the plan for a cold run, serving the deepest cached
         interior prefix and materializing staged/promoted prefixes
-        along the way."""
+        along the way. A prefix a peer evicts between ``peek`` and
+        ``lookup`` is a miss at that depth: the next shallower one is
+        tried, and then the leaf."""
         cache, chain = self._cache, self._chain
         n = len(chain)
-        base = -1
-        for i in range(n - 1, 0, -1):
-            if cache.peek(chain[i].dag.fingerprint()):
-                base = i
-                break
         # sightings count once per cold run for EVERY interior prefix
         # (the recurrence signal is plan-shaped, not execution-shaped)
         sightings = {
             i: cache.note_subplan(chain[i].dag.fingerprint())
             for i in range(1, n - 1)
         }
-        if base >= 0:
-            df = cache.lookup(chain[base].dag.fingerprint())
-            start = base + 1
-        else:
-            df = chain[0].df
-            start = 1
+        df, start = chain[0].df, 1
+        for i in range(n - 1, 0, -1):
+            fp = chain[i].dag.fingerprint()
+            hit = cache.lookup(fp) if cache.peek(fp) else None
+            if hit is not None:
+                df, start = hit, i + 1
+                break
         for i in range(start, n):
             step = chain[i]
             df = step.rebuild(df)

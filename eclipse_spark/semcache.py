@@ -55,12 +55,13 @@ shuffles or Python UDF stages.
 TWO KEY REGIMES — pick deliberately. The never-stale guarantee above
 belongs to the *fingerprint* regime: `Pipeline.run()` keys entries by
 the op-DAG fingerprint whose scan leaves embed the input's COMMIT ID
-(``Pipeline.from_table``, ``PlanNode.fingerprint``; a table copied in
-without a commit record is identified by its directory's stat
-instead). The catalog publishes a
-table's data and its commit record in one link swap and never reuses a
-commit id — not after ``rm`` + re-put, not across ``Catalog`` objects
-or processes on one root, not across a crash — so any commit changes
+(``Pipeline.from_table``, ``PlanNode.fingerprint``). Every table is a
+link to a version directory whose record holds its commit id; a table
+copied in from outside is adopted as a version with a fresh one. The
+catalog publishes a table's data and its commit record in one link swap
+and never reuses a commit id — not after ``rm`` + re-put, not across
+``Catalog`` objects or processes on one root, not across a crash, not
+when a copied-in directory replaces a table — so any commit changes
 the key and the next run MISSES: stale results are unreachable by
 construction. `get_or_compute` itself, though, caches
 under whatever string the caller passes; a caller that passes a stable

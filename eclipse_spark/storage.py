@@ -22,24 +22,34 @@ reference's one-map-task-per-file granularity
 
 Layout. Eclipse never edits a DHT file in place (``Owrite`` only
 appends) and keys cached results on those immutable files
-(``fileserver.hh:354-359``). Here a table ``<name>.parquet`` is a
+(``fileserver.hh:354-359``). Here every table ``<name>.parquet`` is a
 symlink to its current version directory ``<name>.parquet.v<N>``, and
 each version directory holds one immutable copy of the table plus its
 ``_commit.json`` record: the version, a fresh random commit id and the
 caller's marker, and the schema a parquet read of the copy would
-infer. A real directory at ``<name>.parquet`` (copied in from outside)
-is read as it is; its first commit renames it to its own version
-directory.
+infer. The root's locked section (see below) keeps this true. It adopts
+a real directory found at ``<name>.parquet`` (copied in from outside)
+as the table's next version (``v0`` for a new table) with a fresh
+commit id, no marker and the schema its read infers, and it links a
+table whose link a crash lost to its newest version directory. A
+``Catalog`` takes the section when it opens, and a read that finds a
+directory in place of the link takes it once.
 
-Reads. Every read of a committed directory (:func:`read_committed`)
-hands Spark the recorded schema, so it lists files but runs no
-schema-inference job, the way Delta and Iceberg read the schema from
-their commit metadata. A copy has a recorded schema unless it is
-hive-partitioned (``put(partition_by=)``, ``write_partitioned``), bucketed
-(``put_bucketed``), copied in from outside, committed by older code, or
-an append whose batch's schema differs from its base's (widened); those
-reads infer the schema from a footer, as before. A branch or promote
-carries its base's schema.
+Reads. Every read goes to the version directory the link names (or, for
+``get(version=)``, a retained one) and is identified by that
+directory's record, so a read and its commit id always belong together.
+:func:`read_committed` hands Spark the recorded schema, so it lists
+files but runs no schema-inference job, the way Delta and Iceberg read
+the schema from their commit metadata. A copy has a recorded schema
+unless it is hive-partitioned (``put(partition_by=)``,
+``write_partitioned``, an adopted partitioned directory), bucketed
+(``put_bucketed``) or an append whose batch's schema differs from its
+base's (widened); those reads infer the schema from a footer. A branch
+or promote carries its base's schema. A DataFrame a read returned stays
+valid until retention prunes its version: with ``retain_versions=0``,
+until the next commit to that table, so a caller that reads a table
+and then commits to it must finish reading inside the commit's write
+(``merge``, ``compact`` and ``restore`` do).
 
 Commit protocol. Every mutation — put, append, merge, compaction, the
 sorted/z-order/bucketed layouts, branch/promote, restore and
@@ -81,18 +91,16 @@ import shutil
 import uuid
 from dataclasses import dataclass
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.functions import array as F_array
-from pyspark.sql.functions import col as F_col
-from pyspark.sql.functions import explode as F_explode
-from pyspark.sql.functions import lit as F_lit
-from pyspark.sql.functions import struct as F_struct
-from pyspark.sql.functions import when as F_when
+from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 # a writer's staging name, ``<base>.tmp.<pid>.<uuid>``, or an evicted
 # cache entry renamed aside, ``<fp>.del.<uuid>``
 _LEFTOVER = re.compile(r"\.tmp\.(\d+)\.[0-9a-f]{32}$|\.del\.[0-9a-f]{32}$")
+# a Catalog table's link ``<name>.parquet`` or version ``<name>.parquet.v<N>``
+_TABLE = re.compile(r"(.+)\.parquet(?:\.v\d+)?")
 
 
 def _pid_alive(pid: int) -> bool:
@@ -190,7 +198,7 @@ def _link_tree(src: str, dst: str) -> None:
 class TableInfo:
     name: str
     path: str
-    version: int  # the link's; unlinked: the record's, else newest snapshot + 1, or 0
+    version: int  # the link's, or 0 for a missing table
     mtime: float
     commit: str  # the commit record's unique id; feeds semantic-cache keys
 
@@ -219,11 +227,11 @@ class Catalog:
         self.root = root
         self.retain_versions = retain_versions
         self._journal = os.path.join(root, "_commit_journal.json")
-        # name -> (stamp, DataFrame): the current copy's resolved read,
-        # reused until a commit or a directory replace moves the stamp
-        self._reads: dict[str, tuple[tuple, DataFrame]] = {}
+        # name -> (commit id, DataFrame): the current version's read,
+        # reused until a commit links another version
+        self._reads: dict[str, tuple[str, DataFrame]] = {}
         os.makedirs(root, exist_ok=True)
-        with self._locked():  # rolls forward an interrupted put_many
+        with self._locked():  # rolls forward and adopts what it finds
             pass
 
     # -- paths ----------------------------------------------------------
@@ -245,88 +253,70 @@ class Catalog:
                 out.append(int(f[len(prefix):]))
         return sorted(out)
 
-    def _target(self, name: str) -> tuple[int | None, str]:
-        """(version, directory) of the current copy: the link's target,
-        or (None, the path itself) for a directory copied in from outside
-        or a missing table."""
-        path = self.path_of(name)
+    def _target(self, name: str) -> tuple[int | None, str | None]:
+        """(version, directory) the link names, or (None, None) when
+        there is no link."""
         try:
-            target = os.readlink(path)
+            target = os.readlink(self.path_of(name))
         except OSError:
-            return None, path
+            return None, None
         return int(target.rsplit(".v", 1)[1]), os.path.join(self.root, target)
 
+    def _current(self, name: str) -> tuple[int | None, str | None]:
+        """:meth:`_target`, after adopting a directory found in place of
+        the link (copied in after this ``Catalog`` opened). Never under
+        the root lock."""
+        if self._target(name)[1] is None and os.path.isdir(self.path_of(name)):
+            with self._locked():  # adopts it
+                pass
+        return self._target(name)
+
     def _record(self, d: str) -> dict:
-        """The commit record in table directory ``d``, or {} when it has
-        none."""
+        """The commit record in version directory ``d``, or {} when it
+        has none (it was pruned)."""
         try:
             with open(os.path.join(d, self._RECORD)) as fh:
-                rec = json.load(fh)
+                return json.load(fh)
         except (OSError, ValueError):
             return {}
-        # a record without a commit id predates commit records: it is
-        # the bare marker, and the version lived outside the copy
-        return rec if "commit" in rec else {"marker": rec}
 
     def _read(self, d: str) -> DataFrame:
-        """Read table directory ``d`` (the link or a version directory)
-        with the schema its commit record holds."""
+        """Read version directory ``d`` with the schema its commit record
+        holds — the one read rule of every table read."""
         return read_committed(self.spark, d, self._record(d).get("schema"))
 
-    def _schema(self, name: str) -> dict | None:
-        """The recorded schema of ``name``'s current copy. A copy
-        without a commit record (copied in from outside) has its
-        memoised read's, unless it is hive-partitioned."""
-        d = self._target(name)[1]
-        rec = self._record(d)
-        if "commit" in rec:
-            return rec.get("schema")
-        return None if _partition_keys(d) else read_schema(self._resolve(name)[1])
-
-    def _stamp(self, name: str) -> tuple | None:
-        """(commit id, inode, mtime_ns) of the current copy, or None
-        when the table is missing. Every commit links a new directory
-        with a new commit id; a table without a record (copied in from
-        outside) still moves its directory's stat when replaced."""
-        d = self._target(name)[1]
-        try:
-            st = os.stat(d)
-        except FileNotFoundError:
-            return None
-        return self._record(d).get("commit", ""), st.st_ino, st.st_mtime_ns
-
     def _resolve(self, name: str) -> tuple[str, DataFrame]:
-        """(commit id, DataFrame) of the current copy, both from one
-        stamp; a copy without a commit id is identified by its
-        directory's stat instead, so replacing it changes the id too.
-        The read is memoised per stamp: a repeat resolve of an
-        unchanged table re-runs no file listing, and a recorded schema
-        spares the first read its schema-inference job.
-        A stamp that moved during the read means a commit landed
-        mid-way, so the read is retried rather than paired with the
-        wrong commit id."""
-        while True:
-            stamp = self._stamp(name)
-            memo = self._reads.get(name)
-            if stamp is None or memo is None or memo[0] != stamp:
-                df = self._read(self.path_of(name))  # raises if missing
-                if stamp is None or self._stamp(name) != stamp:
-                    continue
-                memo = self._reads[name] = (stamp, df)
-            commit, ino, mtime_ns = stamp
-            return commit or f"dir-{ino}-{mtime_ns}", memo[1]
+        """(commit id, DataFrame) of the current version, both from the
+        version directory the link names, so they belong together. The
+        read is memoised per commit id: a repeat resolve of an unchanged
+        table re-runs no file listing. A version pruned mid-resolve is
+        resolved again. A missing table raises ``AnalysisException``."""
+        d = self._current(name)[1]
+        if d is None:  # no such table: Spark's read raises AnalysisException
+            self._read(self.path_of(name))
+            raise FileNotFoundError(f"{self.path_of(name)} is not a Catalog table")
+        rec = self._record(d)
+        memo = self._reads.get(name)
+        if memo is None or memo[0] != rec.get("commit"):
+            try:
+                df = read_committed(self.spark, d, rec.get("schema"))
+            except AnalysisException:
+                if os.path.isdir(d):
+                    raise
+                return self._resolve(name)  # pruned mid-resolve
+            if not os.path.isdir(d):
+                return self._resolve(name)  # pruned mid-resolve
+            memo = self._reads[name] = (rec.get("commit"), df)
+        return memo
 
     def info(self, name: str) -> TableInfo:
-        version, d = self._target(name)
-        rec = self._record(d)
-        if version is None:  # not linked: copied in from outside, or missing
-            version = int(rec.get("version", max(self.history(name), default=-1) + 1))
+        version, d = self._current(name)
         return TableInfo(
             name=name,
             path=self.path_of(name),
-            version=version,
-            mtime=os.path.getmtime(d) if os.path.exists(d) else 0.0,
-            commit=str(rec.get("commit", "")),
+            version=version or 0,
+            mtime=os.path.getmtime(d) if d else 0.0,
+            commit=str(self._record(d).get("commit", "")) if d else "",
         )
 
     # -- time travel ----------------------------------------------------
@@ -364,13 +354,15 @@ class Catalog:
     def _locked(self, exclusive: bool = True):
         """Hold ``flock`` on the root directory: shared for
         :meth:`get_many`; exclusive for every commit, which first rolls
-        forward a ``put_many`` whose writer died after its journal. Not
-        re-entrant: a locked section must never take it again."""
+        forward a ``put_many`` whose writer died after its journal and
+        then adopts (:meth:`_adopt`). Not re-entrant: a locked section
+        must never take it again."""
         fd = os.open(self.root, os.O_RDONLY)
         try:
             fcntl.flock(fd, fcntl.LOCK_EX if exclusive else fcntl.LOCK_SH)
             if exclusive:
                 self._roll_forward()
+                self._adopt()
             yield
         finally:
             os.close(fd)  # releases the lock
@@ -382,6 +374,28 @@ class Catalog:
             self._publish(name, version)
         with contextlib.suppress(FileNotFoundError):
             os.remove(self._journal)
+
+    def _adopt(self) -> None:
+        """Under the root lock: make every table a link to a recorded
+        version directory. A real directory at ``<name>.parquet``
+        becomes the table's next version, with a fresh commit id and the
+        schema its read infers (none when it is hive-partitioned or
+        Spark cannot read it); a table whose link a crash lost is linked
+        to its newest version directory, which is whole."""
+        for f in os.listdir(self.root):
+            m = _TABLE.fullmatch(f)
+            if m is None or os.path.islink(path := self.path_of(m[1])):
+                continue
+            versions = self._versions(m[1])
+            if os.path.isdir(path):
+                schema = None
+                if not _partition_keys(path):
+                    with contextlib.suppress(AnalysisException):
+                        schema = read_schema(self.spark.read.parquet(path))
+                version = max(versions, default=-1) + 1
+                self._publish(m[1], self._make_version(m[1], path, version, None, schema))
+            elif versions and not os.path.lexists(path):
+                self._publish(m[1], versions[-1])
 
     def _pending(self) -> dict[str, int]:
         """``{name: version}`` of a ``put_many`` whose journal is written
@@ -430,35 +444,35 @@ class Catalog:
         :meth:`_publish`, and return that version. With ``base``, ``tmp``
         first gets that table's current files and takes its marker (an
         append is not a new batch of an idempotent sink). The record
-        holds ``schema``; with ``base``, only if the base has the same
-        one, so a widened append reads as before. A branch or promote
-        stages nothing and takes the base's."""
-        path = self.path_of(name)
-        if os.path.isdir(path) and not os.path.islink(path):
-            # copied in from outside: it becomes its own version directory
-            version = self.info(name).version
-            os.rename(path, self._version_path(name, version))
-            self._publish(name, version)
-        elif not os.path.lexists(path) and self._versions(name):
-            # no link: a crash between that rename and its link, or
-            # before a new table's first swap; the newest copy is whole
-            self._publish(name, self._versions(name)[-1])
-        if base is not None and self.exists(base):
-            base_schema = self._schema(base)
-            if schema != base_schema and os.listdir(tmp):
-                base_schema = None  # the staged files differ from the base's
-            schema = base_schema
-            _link_tree(self.path_of(base), tmp)
-            marker = self.read_marker(base)
-        version = self.info(name).version + 1
+        holds ``schema``; with ``base``, only if the base records the
+        same one, so a widened append reads as before. A branch or
+        promote stages nothing and takes the base's."""
+        base_dir = self._target(base)[1] if base is not None else None
+        if base_dir is not None:
+            base_rec = self._record(base_dir)
+            if schema != base_rec.get("schema") and os.listdir(tmp):
+                schema = None  # the staged files differ from the base's
+            else:
+                schema = base_rec.get("schema")
+            _link_tree(base_dir, tmp)
+            marker = base_rec.get("marker")
+        version = (self._target(name)[0] or 0) + 1
+        return self._make_version(name, tmp, version, marker, schema)
+
+    def _make_version(
+        self, name: str, d: str, version: int, marker: dict | None, schema: dict | None
+    ) -> int:
+        """Under the root lock: record ``version`` in directory ``d``,
+        with a fresh commit id, ``marker`` and ``schema`` (when known),
+        and rename ``d`` to that version's directory."""
         rec = {"version": version, "commit": uuid.uuid4().hex, "marker": marker}
         if schema is not None:
             rec["schema"] = schema
-        with open(os.path.join(tmp, self._RECORD), "w") as fh:
+        with open(os.path.join(d, self._RECORD), "w") as fh:
             json.dump(rec, fh)
         dst = self._version_path(name, version)
         shutil.rmtree(dst, ignore_errors=True)  # a claim a crash left unpublished
-        os.rename(tmp, dst)
+        os.rename(d, dst)
         return version
 
     def _publish(self, name: str, version: int) -> None:
@@ -500,27 +514,25 @@ class Catalog:
         version bumps: a compaction is a visible write, so semantic-
         cache keys and ``get(version=)`` snapshots stay coherent.
         """
-        path = self.path_of(name)
-        if not os.path.exists(path):
+        d = self._current(name)[1]
+        if d is None:
             raise FileNotFoundError(f"compact: no such table {name!r}")
 
         def _parts(p: str) -> list[str]:
-            out = []
-            for root, _dirs, files in os.walk(p):
-                out += [
-                    os.path.join(root, f)
-                    for f in files
-                    if f.endswith(".parquet") and not f.startswith((".", "_"))
-                ]
-            return out
+            return [
+                os.path.join(root, f)
+                for root, _dirs, files in os.walk(p)
+                for f in files
+                if f.endswith(".parquet") and not f.startswith((".", "_"))
+            ]
 
-        before = _parts(path)
+        before = _parts(d)
         total = sum(os.path.getsize(f) for f in before)
         if target_partitions is not None:
             n_target = target_partitions
         else:
             n_target = max(1, -(-total // (target_file_mb << 20)))
-        df = self._read(path)
+        df = self._read(d)
         # hive partition columns, derived from the READER (ADVICE r8):
         # Spark's partition discovery surfaces key=value directory
         # columns in the table schema but not in any leaf file's
@@ -531,7 +543,7 @@ class Catalog:
         # Column order follows df.columns (Spark appends partition
         # columns in directory-nesting order). A recorded schema means
         # an unpartitioned copy.
-        if before and self._record(path).get("schema") is None:
+        if before and self._record(d).get("schema") is None:
             leaf_cols = set(self.spark.read.parquet(before[0]).columns)
             part_cols = [c for c in df.columns if c not in leaf_cols]
         else:
@@ -544,8 +556,8 @@ class Catalog:
         # a compaction is a layout rewrite, not a logical write: carry
         # the committed marker so idempotent sinks keyed on it
         # (streaming IVM) don't mistake the rewrite for a replay
-        self.put(name, sized, part_cols, marker=self.read_marker(name))
-        return len(before), len(_parts(path))
+        self.put(name, sized, part_cols, marker=self._record(d).get("marker"))
+        return len(before), len(_parts(self.path_of(name)))
 
     def branch(self, src: str, dst: str) -> str:
         """Zero-copy table branch (Delta SHALLOW CLONE / Iceberg branch
@@ -664,14 +676,20 @@ class Catalog:
         directory, which no later commit writes into, so it keeps
         reading the same version after later commits until retention
         prunes it (with ``retain_versions=0``, at the next commit to
-        that table). It writes nothing and needs no retry."""
+        that table). It needs no retry, and it writes nothing unless a
+        directory copied in must be adopted first (:meth:`_current`);
+        that happens before it takes the shared lock, because ``flock``
+        is per open file, so the exclusive lock taken while holding the
+        shared one would wait forever."""
+        for n in names:
+            self._current(n)
         with self._locked(exclusive=False):
             pending = self._pending()
             return {
                 n: self._read(
                     self._version_path(n, pending[n])
                     if n in pending
-                    else self._target(n)[1]
+                    else self._target(n)[1] or self.path_of(n)  # raises if missing
                 )
                 for n in names
             }
@@ -718,7 +736,7 @@ class Catalog:
         groups at scan time (the declarative cousin of Z-ordering for
         single-key access patterns)."""
         out = df.repartitionByRange(
-            *( [partitions] if partitions else [] ), *[F_col(c) for c in sort_by]
+            *( [partitions] if partitions else [] ), *[F.col(c) for c in sort_by]
         ).sortWithinPartitions(*sort_by)
         return self.put(name, out)
     def put_zorder(
@@ -740,8 +758,6 @@ class Catalog:
         if len(cols) != 2:
             raise ValueError("z-order layout takes exactly two columns")
         a_col, b_col = cols
-        from pyspark.sql import functions as F
-
         row = df.agg(
             F.min(a_col).alias("amn"), F.max(a_col).alias("amx"),
             F.min(b_col).alias("bmn"), F.max(b_col).alias("bmx"),
@@ -774,7 +790,6 @@ class Catalog:
         df: DataFrame,
         keys: list[str],
         buckets: int = 8,
-        sorted_by_key: bool = True,
     ) -> str:
         """Bucketed layout for repeatedly-joined keys (SURVEY §4): two
         tables bucketed on the same keys with the same bucket count
@@ -787,9 +802,9 @@ class Catalog:
         path = self.path_of(name)
         self.spark.sql(f"DROP TABLE IF EXISTS {name}")
         writer = df.write.mode("overwrite").format("parquet").bucketBy(buckets, *keys)
-        if sorted_by_key:
-            writer = writer.sortBy(*keys)
-        self._commit(name, lambda tmp: writer.option("path", tmp).saveAsTable(name))
+        self._commit(
+            name, lambda tmp: writer.sortBy(*keys).option("path", tmp).saveAsTable(name)
+        )
         self.spark.sql(f"ALTER TABLE {name} SET LOCATION '{path}'")
         return path
 
@@ -817,19 +832,15 @@ class Catalog:
         rides along so downstream joins can skip the shuffle."""
         return self.spark.table(name)
 
-    def put_text(self, name: str, local_path: str) -> str:
-        """``mrput`` for raw text files: one row per line, like
-        Eclipse's newline-record model (``src/common/fileclient.hh:362-431``)."""
-        df = self.spark.read.text(local_path)
-        return self.put(name, df)
-
     def get(self, name: str, version: int | None = None) -> DataFrame:
         """``mrcat``/``Rread`` analogue: read a named table. With
         ``version``, read that version's directory instead — the
         current one, or a snapshot ``retain_versions`` kept —
         time-travel audit reads.
 
-        Raw-input caching (Eclipse C1/C2): the current copy's read is
+        Both read a version directory, so the DataFrame keeps reading
+        that version after later commits until retention prunes it.
+        Raw-input caching (Eclipse C1/C2): the current version's read is
         memoised per commit (:meth:`_resolve`), so a repeat ``get`` of
         an unchanged table returns the same DataFrame without listing
         files or inferring the schema again; any commit, from any
@@ -853,9 +864,8 @@ class Catalog:
         fast path (one footer read determines the schema; at 100 TB a
         full-footer merge over 10^6 files is an expensive planning
         step you opt INTO when the table actually evolved)."""
-        return self.spark.read.option("mergeSchema", "true").parquet(
-            self.path_of(name)
-        )
+        d = self._current(name)[1] or self.path_of(name)  # raises if missing
+        return self.spark.read.option("mergeSchema", "true").parquet(d)
 
     def ls(self) -> list[str]:
         """``mrls`` analogue."""
@@ -874,10 +884,8 @@ class Catalog:
             found = os.path.lexists(p)
             for v in self._versions(name):
                 shutil.rmtree(self._version_path(name, v), ignore_errors=True)
-            if os.path.islink(p):
+            if found:
                 os.unlink(p)
-            elif found:
-                shutil.rmtree(p)
         return found
 
     def write(self, name: str, df: DataFrame) -> str:
@@ -932,40 +940,40 @@ def table_diff(old: DataFrame, new: DataFrame, on: list[str]) -> DataFrame:
     if [c for c in new.columns if c not in on] != non_key:
         raise ValueError("table_diff: snapshots have different schemas")
     o = old.select(
-        *[F_col(c).alias(f"_o_{c}") for c in on],
-        F_struct(*[F_col(c).alias(c) for c in non_key]).alias("_o_v"),
+        *[F.col(c).alias(f"_o_{c}") for c in on],
+        F.struct(*[F.col(c).alias(c) for c in non_key]).alias("_o_v"),
     )
     n = new.select(
-        *[F_col(c).alias(f"_n_{c}") for c in on],
-        F_struct(*[F_col(c).alias(c) for c in non_key]).alias("_n_v"),
+        *[F.col(c).alias(f"_n_{c}") for c in on],
+        F.struct(*[F.col(c).alias(c) for c in non_key]).alias("_n_v"),
     )
     cond = None
     for c in on:
-        eq = F_col(f"_o_{c}").eqNullSafe(F_col(f"_n_{c}"))
+        eq = F.col(f"_o_{c}").eqNullSafe(F.col(f"_n_{c}"))
         cond = eq if cond is None else cond & eq
     j = o.join(n, on=cond, how="full_outer")
-    in_old = F_col(f"_o_{on[0]}").isNotNull()
-    in_new = F_col(f"_n_{on[0]}").isNotNull()
-    same = F_col("_o_v").eqNullSafe(F_col("_n_v"))
+    in_old = F.col(f"_o_{on[0]}").isNotNull()
+    in_new = F.col(f"_n_{on[0]}").isNotNull()
+    same = F.col("_o_v").eqNullSafe(F.col("_n_v"))
 
     def _chg(tag: str, side: str):
-        return F_struct(
-            F_lit(tag).alias("change_type"),
-            *[F_col(f"_{side}_{c}").alias(c) for c in on],
-            F_col(f"_{side}_v").alias("_v"),
+        return F.struct(
+            F.lit(tag).alias("change_type"),
+            *[F.col(f"_{side}_{c}").alias(c) for c in on],
+            F.col(f"_{side}_v").alias("_v"),
         )
 
     changes = (
-        F_when(in_old & ~in_new, F_array(_chg("delete", "o")))
-        .when(~in_old & in_new, F_array(_chg("insert", "n")))
+        F.when(in_old & ~in_new, F.array(_chg("delete", "o")))
+        .when(~in_old & in_new, F.array(_chg("insert", "n")))
         .when(
             in_old & in_new & ~same,
-            F_array(_chg("update_preimage", "o"), _chg("update_postimage", "n")),
+            F.array(_chg("update_preimage", "o"), _chg("update_postimage", "n")),
         )
         # unchanged rows: the when-chain yields NULL and explode(NULL)
         # emits no row — no filter pass needed
     )
-    out = j.select(F_explode(changes).alias("_c")).select(
-        "_c.change_type", *[F_col(f"_c.{c}").alias(c) for c in on], "_c._v.*"
+    out = j.select(F.explode(changes).alias("_c")).select(
+        "_c.change_type", *[F.col(f"_c.{c}").alias(c) for c in on], "_c._v.*"
     )
     return out

@@ -1,9 +1,10 @@
 """Recorded schemas: every Catalog commit record (``_commit.json``) and
 semantic-cache entry record (``_entry.json``) holds the schema a parquet
 read of its directory infers, and reads pass it to Spark instead of
-running a schema-inference job. Copies whose read must still infer
-(hive-partitioned, bucketed, copied in, widened by an append, written by
-older code) carry none and read as before."""
+running a schema-inference job; so does the record a directory copied
+in from outside gets when the Catalog adopts it. Copies whose read must
+still infer (hive-partitioned, bucketed, widened by an append) carry
+none and read as before."""
 
 from __future__ import annotations
 
@@ -89,6 +90,9 @@ def _commit(spark, cat: Catalog, kind: str) -> str:
         cat.put("t", _rich(spark, 10, 14))
     elif kind == "write":
         cat.write("t", _rich(spark, 6, 9))
+    elif kind == "copied_in":
+        _rich(spark, 0, 3).write.parquet(cat.path_of("c"))  # adopted on open
+        return "c"
     elif kind == "write_copied_in":
         _rich(spark, 0, 3).write.parquet(cat.path_of("c"))
         cat.write("c", _rich(spark, 3, 5))
@@ -118,7 +122,7 @@ def _commit(spark, cat: Catalog, kind: str) -> str:
 
 
 _KINDS = [
-    "put", "write", "write_copied_in", "merge", "compact", "put_sorted",
+    "put", "write", "copied_in", "write_copied_in", "merge", "compact", "put_sorted",
     "put_zorder", "put_many", "branch", "promote", "restore",
 ]
 
@@ -206,25 +210,22 @@ def _fallback(spark, cat: Catalog, kind: str) -> str:
     elif kind == "write_partitioned":
         cat.write_partitioned("t", df, ["p"])
         cat.write_partitioned("t", df, ["p"])
-    elif kind == "put_bucketed":
+    else:
+        assert kind == "put_bucketed"
         name = f"bucketed_{uuid.uuid4().hex[:8]}"
         cat.put_bucketed(name, _rich(spark, 0, 6), ["a"], buckets=2)
         spark.sql(f"DROP TABLE IF EXISTS {name}")
         return name
-    else:
-        assert kind == "copied_in"
-        _rich(spark, 0, 6).write.parquet(cat.path_of("t"))
     return "t"
 
 
 @pytest.mark.parametrize(
     "kind",
-    ["widened_append", "partitioned_put", "write_partitioned", "put_bucketed",
-     "copied_in"],
+    ["widened_append", "partitioned_put", "write_partitioned", "put_bucketed"],
 )
 def test_fallback_copies_record_no_schema_and_infer(spark, tmp_path, kind):
-    """Hive-partitioned and bucketed copies, a table copied in from
-    outside and an append that widens the schema record no schema, and
+    """Hive-partitioned and bucketed copies and an append that widens
+    the schema record no schema, and
     ``get`` reads them exactly as an inferring read does (a widened
     table keeps its one-footer schema; ``get_evolved`` merges)."""
     root = str(tmp_path / "cat")

@@ -505,3 +505,39 @@ def test_memoised_hit_follows_peer_rematerialisation(spark, tmp_path):
 
     b.invalidate("fp")
     assert a.lookup("fp") is None
+
+
+def test_cold_run_treats_prefix_evicted_after_peek_as_miss(spark, tmp_path):
+    """A peer cache on the same root evicts the deepest cached prefix
+    right after this run's ``peek`` found it: the lookup that follows
+    misses, the cold run falls back to the leaf, and its result equals
+    the uncached pipeline's."""
+    cat = Catalog(spark, str(tmp_path / "tables"))
+    cat.put("t", spark.range(0, 20))
+    root = str(tmp_path / "cache")
+    cache, peer = SemanticCache(spark, root), SemanticCache(spark, root)
+
+    def prefix():
+        return Pipeline.from_table(cat, "t", app="race").filter("id % 2 = 0")
+
+    prefix().stage().select("id").cached(cache).run()  # caches the prefix
+    fp = prefix().dag.fingerprint()
+    assert cache.peek(fp)
+
+    evicted = []
+    peek = cache.peek
+
+    def racing_peek(fingerprint):
+        found = peek(fingerprint)
+        if found and not evicted:
+            evicted.append(fingerprint)
+            peer.invalidate(fingerprint)
+        return found
+
+    cache.peek = racing_peek
+    tail = prefix().with_column("y", F.col("id") * 3)
+    out, hit = tail.cached(cache).run()
+    assert evicted == [fp] and hit is False
+    assert sorted(map(tuple, out.collect())) == sorted(
+        map(tuple, tail.to_df().collect())
+    )

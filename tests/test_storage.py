@@ -718,38 +718,6 @@ def test_commit_removes_dead_writers_staging(spark, tmp_path):
     assert cat.get("t").count() == 6
 
 
-def test_record_without_commit_id_is_a_bare_marker(spark, tmp_path):
-    """A ``_commit.json`` written before commit records held only the
-    marker, and the version lived outside the copy. Such a record still
-    reads as the marker, so an idempotent sink keeps skipping replayed
-    batches, and the copy counts as one past its newest snapshot."""
-    import json
-
-    from eclipse_spark.streaming.windows import apply_ivm_batch
-
-    cat = Catalog(spark, str(tmp_path / "cat"), retain_versions=1)
-    kw = dict(keys=["k"], sum_cols={"v": "total"})
-    b0 = spark.createDataFrame([("a", 1.0)], ["k", "v"])
-    b1 = spark.createDataFrame([("a", 2.0)], ["k", "v"])
-    assert apply_ivm_batch(cat, "tv", b0, 0, **kw) is True
-    assert apply_ivm_batch(cat, "tv", b1, 1, **kw) is True
-    rows = sorted(cat.get("tv").collect())
-    rec = os.path.join(cat.path_of("tv"), Catalog._RECORD)
-    os.remove(rec)
-    with open(rec, "w") as fh:
-        json.dump({"last_batch": 1}, fh)
-
-    assert cat.read_marker("tv") == {"last_batch": 1}
-    assert cat.info("tv").version == 2
-    assert apply_ivm_batch(cat, "tv", b1, 1, **kw) is False
-    assert sorted(cat.get("tv").collect()) == rows
-    b2 = spark.createDataFrame([("a", 4.0)], ["k", "v"])
-    assert apply_ivm_batch(cat, "tv", b2, 2, **kw) is True
-    assert cat.info("tv").version == 3
-    assert cat.history("tv") == [2]
-    assert cat.read_marker("tv") == {"last_batch": 2}
-
-
 # -- the memoised read: reused per commit, fresh after every commit ----
 
 
@@ -827,16 +795,16 @@ def test_memoised_read_follows_commit_by_second_catalog(spark, tmp_path):
 
 
 def test_memoised_read_follows_recordless_directory_replace(spark, tmp_path):
-    """A table copied in from outside has no commit record; its memo
-    and its scan key follow the directory's stat, so a directory
-    replaced by rename is read afresh and a cached run misses."""
-    import shutil
-
+    """A directory dropped in where the link was replaces the table: the
+    next read adopts it as the next version with a new commit id, so
+    the memo and the scan key move, a cached run misses, and the old
+    version's read is not served again."""
     root = str(tmp_path / "cat")
     cat = Catalog(spark, root)
     cache = SemanticCache(spark, str(tmp_path / "cache"))
     spark.range(0, 3).write.parquet(cat.path_of("t"))
-    assert cat.info("t").commit == ""
+    first = cat.info("t")  # adopted on this first read
+    assert first.version == 0 and first.commit
 
     def run():
         return Pipeline.from_table(cat, "t").cached(cache).run()
@@ -846,15 +814,84 @@ def test_memoised_read_follows_recordless_directory_replace(spark, tmp_path):
 
     staging = os.path.join(root, "incoming")
     spark.range(10, 13).write.parquet(staging)
-    shutil.rmtree(cat.path_of("t"))
+    os.unlink(cat.path_of("t"))
     os.rename(staging, cat.path_of("t"))
     assert _ids(cat.get("t")) == [10, 11, 12]
+    second = cat.info("t")
+    assert second.version == 1 and second.commit not in ("", first.commit)
     out, hit = run()
     assert _ids(out) == [10, 11, 12] and hit is False
 
-    # the first commit turns the directory into its own version
     cat.write("t", spark.range(20, 21))
-    assert cat.info("t").version == 1
+    assert cat.info("t").version == 2
     assert _ids(cat.get("t")) == [10, 11, 12, 20]
-    assert os.path.islink(cat.path_of("t"))
-    assert sorted(os.listdir(root)) == ["t.parquet", "t.parquet.v1"]
+    assert sorted(os.listdir(root)) == ["t.parquet", "t.parquet.v2"]
+
+
+# -- one table identity: adoption and the held-read rule ----------------
+
+
+def test_held_read_keeps_its_version_until_pruned(spark, tmp_path):
+    """``get`` reads the version directory the link names, so a DataFrame
+    held across a ``put`` still returns the rows it was read at while
+    retention keeps that version, and fails once it is pruned."""
+    cat = Catalog(spark, str(tmp_path / "cat"), retain_versions=1)
+    cat.put("t", spark.range(0, 3))
+    held = cat.get("t")
+    cat.put("t", spark.range(10, 13))
+    assert _ids(held) == [0, 1, 2]
+    assert _ids(cat.get("t")) == [10, 11, 12]
+    cat.put("t", spark.range(20, 23))  # prunes version 1
+    with pytest.raises(Exception):
+        _ids(held)
+
+
+def test_directory_copied_in_before_open_is_adopted(spark, tmp_path):
+    """A directory copied into the root before ``Catalog`` opens becomes
+    a link to ``v0``, whose record has a commit id and the inferred
+    schema; a second ``Catalog`` on the root then reads it without one
+    Spark job."""
+    import json
+
+    from pyspark.sql.types import StructType
+    from test_recorded_schema import _jobs
+
+    root = tmp_path / "cat"
+    spark.range(0, 3).write.parquet(str(root / "t.parquet"))
+    cat = Catalog(spark, str(root))
+    assert os.readlink(cat.path_of("t")) == "t.parquet.v0"
+    with open(os.path.join(cat._version_path("t", 0), Catalog._RECORD)) as fh:
+        rec = json.load(fh)
+    assert rec["version"] == 0 and len(rec["commit"]) == 32
+    assert StructType.fromJson(rec["schema"]) == spark.read.parquet(str(root / "t.parquet")).schema
+    assert cat.info("t").version == 0 and cat.info("t").commit == rec["commit"]
+
+    second = Catalog(spark, str(root))
+    assert _jobs(spark, lambda: second.get("t")) == 0
+    assert _ids(second.get("t")) == [0, 1, 2]
+    cat.write("t", spark.range(3, 4))
+    assert cat.info("t").version == 1 and _ids(second.get("t")) == [0, 1, 2, 3]
+
+
+@pytest.mark.parametrize("read", ["get", "get_many", "info", "from_table"])
+def test_directory_copied_in_after_open_is_adopted_on_first_read(
+    spark, tmp_path, read
+):
+    """A directory copied in after ``Catalog`` opened is adopted by the
+    first read that meets it, whichever read that is, and every later
+    read goes to its version directory."""
+    root = str(tmp_path / "cat")
+    cat = Catalog(spark, root)
+    spark.range(0, 3).write.parquet(cat.path_of("t"))
+    assert not os.path.islink(cat.path_of("t"))
+    if read == "get":
+        assert _ids(cat.get("t")) == [0, 1, 2]
+    elif read == "get_many":
+        assert _ids(cat.get_many(["t"])["t"]) == [0, 1, 2]
+    elif read == "info":
+        assert cat.info("t").version == 0
+    else:
+        assert _ids(Pipeline.from_table(cat, "t").to_df()) == [0, 1, 2]
+    assert os.readlink(cat.path_of("t")) == "t.parquet.v0"
+    assert cat.info("t").commit == cat._resolve("t")[0] != ""
+    assert sorted(os.listdir(root)) == ["t.parquet", "t.parquet.v0"]
