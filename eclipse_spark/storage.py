@@ -27,13 +27,14 @@ symlink to its current version directory ``<name>.parquet.v<N>``, and
 each version directory holds one immutable copy of the table plus its
 ``_commit.json`` record: the version, a fresh random commit id and the
 caller's marker, and the schema a parquet read of the copy would
-infer. The root's locked section (see below) keeps this true. It adopts
-a real directory found at ``<name>.parquet`` (copied in from outside)
-as the table's next version (``v0`` for a new table) with a fresh
-commit id, no marker and the schema its read infers, and it links a
-table whose link a crash lost to its newest version directory. A
-``Catalog`` takes the section when it opens, and a read that finds a
-directory in place of the link takes it once.
+infer. A real directory found at ``<name>.parquet`` (copied in from
+outside) is adopted under the root lock (see below) as the table's next
+version (``v0`` for a new table), with a fresh commit id, no marker and
+the schema its read infers: every table a ``Catalog`` finds when it
+opens, and later one name at a time, by the first read that meets it or
+a commit to it. A version directory that no link names is a claim whose
+commit never published; it is never linked, and the next claim of its
+version replaces it.
 
 Reads. Every read goes to the version directory the link names (or, for
 ``get(version=)``, a retained one) and is identified by that
@@ -93,14 +94,17 @@ from dataclasses import dataclass
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.functions import array as F_array
+from pyspark.sql.functions import col as F_col
+from pyspark.sql.functions import explode as F_explode
+from pyspark.sql.functions import lit as F_lit
+from pyspark.sql.functions import struct as F_struct
+from pyspark.sql.functions import when as F_when
 from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 # a writer's staging name, ``<base>.tmp.<pid>.<uuid>``, or an evicted
 # cache entry renamed aside, ``<fp>.del.<uuid>``
 _LEFTOVER = re.compile(r"\.tmp\.(\d+)\.[0-9a-f]{32}$|\.del\.[0-9a-f]{32}$")
-# a Catalog table's link ``<name>.parquet`` or version ``<name>.parquet.v<N>``
-_TABLE = re.compile(r"(.+)\.parquet(?:\.v\d+)?")
 
 
 def _pid_alive(pid: int) -> bool:
@@ -231,8 +235,8 @@ class Catalog:
         # reused until a commit links another version
         self._reads: dict[str, tuple[str, DataFrame]] = {}
         os.makedirs(root, exist_ok=True)
-        with self._locked():  # rolls forward and adopts what it finds
-            pass
+        with self._locked():  # rolls forward, then adopts what it finds
+            self._adopt(self.ls())
 
     # -- paths ----------------------------------------------------------
     def path_of(self, name: str) -> str:
@@ -267,8 +271,8 @@ class Catalog:
         the link (copied in after this ``Catalog`` opened). Never under
         the root lock."""
         if self._target(name)[1] is None and os.path.isdir(self.path_of(name)):
-            with self._locked():  # adopts it
-                pass
+            with self._locked():
+                self._adopt([name])
         return self._target(name)
 
     def _record(self, d: str) -> dict:
@@ -289,8 +293,9 @@ class Catalog:
         """(commit id, DataFrame) of the current version, both from the
         version directory the link names, so they belong together. The
         read is memoised per commit id: a repeat resolve of an unchanged
-        table re-runs no file listing. A version pruned mid-resolve is
-        resolved again. A missing table raises ``AnalysisException``."""
+        table re-runs no file listing. A version pruned mid-resolve (the
+        link names another by then) is resolved again. A missing table,
+        or a link whose directory is gone, raises ``AnalysisException``."""
         d = self._current(name)[1]
         if d is None:  # no such table: Spark's read raises AnalysisException
             self._read(self.path_of(name))
@@ -301,10 +306,8 @@ class Catalog:
             try:
                 df = read_committed(self.spark, d, rec.get("schema"))
             except AnalysisException:
-                if os.path.isdir(d):
-                    raise
-                return self._resolve(name)  # pruned mid-resolve
-            if not os.path.isdir(d):
+                if self._target(name)[1] == d:
+                    raise  # the link names no directory
                 return self._resolve(name)  # pruned mid-resolve
             memo = self._reads[name] = (rec.get("commit"), df)
         return memo
@@ -354,15 +357,13 @@ class Catalog:
     def _locked(self, exclusive: bool = True):
         """Hold ``flock`` on the root directory: shared for
         :meth:`get_many`; exclusive for every commit, which first rolls
-        forward a ``put_many`` whose writer died after its journal and
-        then adopts (:meth:`_adopt`). Not re-entrant: a locked section
-        must never take it again."""
+        forward a ``put_many`` whose writer died after its journal. Not
+        re-entrant: a locked section must never take it again."""
         fd = os.open(self.root, os.O_RDONLY)
         try:
             fcntl.flock(fd, fcntl.LOCK_EX if exclusive else fcntl.LOCK_SH)
             if exclusive:
                 self._roll_forward()
-                self._adopt()
             yield
         finally:
             os.close(fd)  # releases the lock
@@ -375,27 +376,23 @@ class Catalog:
         with contextlib.suppress(FileNotFoundError):
             os.remove(self._journal)
 
-    def _adopt(self) -> None:
-        """Under the root lock: make every table a link to a recorded
-        version directory. A real directory at ``<name>.parquet``
-        becomes the table's next version, with a fresh commit id and the
-        schema its read infers (none when it is hive-partitioned or
-        Spark cannot read it); a table whose link a crash lost is linked
-        to its newest version directory, which is whole."""
-        for f in os.listdir(self.root):
-            m = _TABLE.fullmatch(f)
-            if m is None or os.path.islink(path := self.path_of(m[1])):
+    def _adopt(self, names) -> None:
+        """Under the root lock: make each of ``names`` found as a real
+        directory at ``<name>.parquet`` (copied in from outside) the
+        table's next version, with a fresh commit id and the schema its
+        read infers — none when it is hive-partitioned or the read
+        fails, so one unreadable directory blocks no other table."""
+        for name in names:
+            path = self.path_of(name)
+            if os.path.islink(path) or not os.path.isdir(path):
                 continue
-            versions = self._versions(m[1])
-            if os.path.isdir(path):
-                schema = None
-                if not _partition_keys(path):
-                    with contextlib.suppress(AnalysisException):
-                        schema = read_schema(self.spark.read.parquet(path))
-                version = max(versions, default=-1) + 1
-                self._publish(m[1], self._make_version(m[1], path, version, None, schema))
-            elif versions and not os.path.lexists(path):
-                self._publish(m[1], versions[-1])
+            schema = None
+            if not _partition_keys(path):
+                # whatever fails here, the table's own reads raise again
+                with contextlib.suppress(Exception):
+                    schema = read_schema(self.spark.read.parquet(path))
+            version = max(self._versions(name), default=-1) + 1
+            self._publish(name, self._make_version(name, path, version, None, schema))
 
     def _pending(self) -> dict[str, int]:
         """``{name: version}`` of a ``put_many`` whose journal is written
@@ -446,7 +443,9 @@ class Catalog:
         append is not a new batch of an idempotent sink). The record
         holds ``schema``; with ``base``, only if the base records the
         same one, so a widened append reads as before. A branch or
-        promote stages nothing and takes the base's."""
+        promote stages nothing and takes the base's. Either table found
+        as a directory copied in is adopted first."""
+        self._adopt([name] if base is None else [name, base])
         base_dir = self._target(base)[1] if base is not None else None
         if base_dir is not None:
             base_rec = self._record(base_dir)
@@ -519,12 +518,14 @@ class Catalog:
             raise FileNotFoundError(f"compact: no such table {name!r}")
 
         def _parts(p: str) -> list[str]:
-            return [
-                os.path.join(root, f)
-                for root, _dirs, files in os.walk(p)
-                for f in files
-                if f.endswith(".parquet") and not f.startswith((".", "_"))
-            ]
+            out = []
+            for root, _dirs, files in os.walk(p):
+                out += [
+                    os.path.join(root, f)
+                    for f in files
+                    if f.endswith(".parquet") and not f.startswith((".", "_"))
+                ]
+            return out
 
         before = _parts(d)
         total = sum(os.path.getsize(f) for f in before)
@@ -736,7 +737,7 @@ class Catalog:
         groups at scan time (the declarative cousin of Z-ordering for
         single-key access patterns)."""
         out = df.repartitionByRange(
-            *( [partitions] if partitions else [] ), *[F.col(c) for c in sort_by]
+            *( [partitions] if partitions else [] ), *[F_col(c) for c in sort_by]
         ).sortWithinPartitions(*sort_by)
         return self.put(name, out)
     def put_zorder(
@@ -758,6 +759,8 @@ class Catalog:
         if len(cols) != 2:
             raise ValueError("z-order layout takes exactly two columns")
         a_col, b_col = cols
+        from pyspark.sql import functions as F
+
         row = df.agg(
             F.min(a_col).alias("amn"), F.max(a_col).alias("amx"),
             F.min(b_col).alias("bmn"), F.max(b_col).alias("bmx"),
@@ -881,11 +884,14 @@ class Catalog:
         p = self.path_of(name)
         self._reads.pop(name, None)
         with self._locked():
+            self._adopt([name])  # a directory copied in since open
             found = os.path.lexists(p)
-            for v in self._versions(name):
-                shutil.rmtree(self._version_path(name, v), ignore_errors=True)
+            # the link goes first: a crash then leaves unlinked versions,
+            # which are never published, not a link to a missing one
             if found:
                 os.unlink(p)
+            for v in self._versions(name):
+                shutil.rmtree(self._version_path(name, v), ignore_errors=True)
         return found
 
     def write(self, name: str, df: DataFrame) -> str:
@@ -940,40 +946,40 @@ def table_diff(old: DataFrame, new: DataFrame, on: list[str]) -> DataFrame:
     if [c for c in new.columns if c not in on] != non_key:
         raise ValueError("table_diff: snapshots have different schemas")
     o = old.select(
-        *[F.col(c).alias(f"_o_{c}") for c in on],
-        F.struct(*[F.col(c).alias(c) for c in non_key]).alias("_o_v"),
+        *[F_col(c).alias(f"_o_{c}") for c in on],
+        F_struct(*[F_col(c).alias(c) for c in non_key]).alias("_o_v"),
     )
     n = new.select(
-        *[F.col(c).alias(f"_n_{c}") for c in on],
-        F.struct(*[F.col(c).alias(c) for c in non_key]).alias("_n_v"),
+        *[F_col(c).alias(f"_n_{c}") for c in on],
+        F_struct(*[F_col(c).alias(c) for c in non_key]).alias("_n_v"),
     )
     cond = None
     for c in on:
-        eq = F.col(f"_o_{c}").eqNullSafe(F.col(f"_n_{c}"))
+        eq = F_col(f"_o_{c}").eqNullSafe(F_col(f"_n_{c}"))
         cond = eq if cond is None else cond & eq
     j = o.join(n, on=cond, how="full_outer")
-    in_old = F.col(f"_o_{on[0]}").isNotNull()
-    in_new = F.col(f"_n_{on[0]}").isNotNull()
-    same = F.col("_o_v").eqNullSafe(F.col("_n_v"))
+    in_old = F_col(f"_o_{on[0]}").isNotNull()
+    in_new = F_col(f"_n_{on[0]}").isNotNull()
+    same = F_col("_o_v").eqNullSafe(F_col("_n_v"))
 
     def _chg(tag: str, side: str):
-        return F.struct(
-            F.lit(tag).alias("change_type"),
-            *[F.col(f"_{side}_{c}").alias(c) for c in on],
-            F.col(f"_{side}_v").alias("_v"),
+        return F_struct(
+            F_lit(tag).alias("change_type"),
+            *[F_col(f"_{side}_{c}").alias(c) for c in on],
+            F_col(f"_{side}_v").alias("_v"),
         )
 
     changes = (
-        F.when(in_old & ~in_new, F.array(_chg("delete", "o")))
-        .when(~in_old & in_new, F.array(_chg("insert", "n")))
+        F_when(in_old & ~in_new, F_array(_chg("delete", "o")))
+        .when(~in_old & in_new, F_array(_chg("insert", "n")))
         .when(
             in_old & in_new & ~same,
-            F.array(_chg("update_preimage", "o"), _chg("update_postimage", "n")),
+            F_array(_chg("update_preimage", "o"), _chg("update_postimage", "n")),
         )
         # unchanged rows: the when-chain yields NULL and explode(NULL)
         # emits no row — no filter pass needed
     )
-    out = j.select(F.explode(changes).alias("_c")).select(
-        "_c.change_type", *[F.col(f"_c.{c}").alias(c) for c in on], "_c._v.*"
+    out = j.select(F_explode(changes).alias("_c")).select(
+        "_c.change_type", *[F_col(f"_c.{c}").alias(c) for c in on], "_c._v.*"
     )
     return out

@@ -5,6 +5,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.errors import AnalysisException
 
 from eclipse_spark.pipeline import Pipeline
 from eclipse_spark.semcache import SemanticCache
@@ -291,8 +292,9 @@ def test_put_many_atomic_publish_and_roll_forward(spark, tmp_path, monkeypatch):
     the journal clears. A writer that dies after the journal (the
     commit point) but before the link swaps is rolled forward by the
     next session — both tables publish at the journaled versions; one
-    that dies after claiming both versions but before the journal
-    changes nothing, and the next commit removes its claims."""
+    that dies after claiming every version but before the journal
+    changes nothing, not even for a table it would have created, and
+    the next commit replaces its claims."""
     import json
 
     root = str(tmp_path / "cat")
@@ -338,31 +340,50 @@ def test_put_many_atomic_publish_and_roll_forward(spark, tmp_path, monkeypatch):
     dump = json.dump
 
     def torn_journal(obj, fh):
-        if set(obj) == {"fact", "dim"}:
+        if set(obj) == {"fact", "dim", "newdim"}:
             fh.write(json.dumps(obj)[:9])
             raise RuntimeError("injected crash")
         dump(obj, fh)
 
     monkeypatch.setattr(json, "dump", torn_journal)
     with pytest.raises(RuntimeError, match="injected crash"):
-        cat2.put_many({"fact": spark.range(99), "dim": spark.range(98)})
+        cat2.put_many(
+            {"fact": spark.range(99), "dim": spark.range(98), "newdim": spark.range(97)}
+        )
     monkeypatch.undo()
+    assert os.path.isdir(cat2._version_path("newdim", 1))  # claimed, no link
     cat3 = Catalog(spark, root, retain_versions=1)
     assert cat3.get("fact").count() == 20  # unchanged
     assert cat3.info("fact").version == staged["fact"]
     assert cat3.get("dim").count() == 7
     assert cat3.info("dim").version == staged["dim"]
+    assert not cat3.exists("newdim") and cat3.info("newdim").version == 0
+    with pytest.raises(AnalysisException):
+        cat3.get("newdim")
+    with pytest.raises(AnalysisException):
+        cat3.get_many(["fact", "newdim"])
 
     # the next commits replace the unpublished claims
     cat3.put_many(
-        {"fact": spark.range(4).withColumnRenamed("id", "v"), "dim": spark.range(2)}
+        {
+            "fact": spark.range(4).withColumnRenamed("id", "v"),
+            "dim": spark.range(2),
+            "newdim": spark.range(1),
+        }
     )
     assert cat3.info("fact").version == staged["fact"] + 1
     assert cat3.get("fact").count() == 4 and cat3.get("dim").count() == 2
+    assert cat3.info("newdim").version == 1 and cat3.get("newdim").count() == 1
     assert sorted(os.listdir(root)) == sorted(
-        f"{n}.parquet{v}"
-        for n in ("fact", "dim")
-        for v in ("", f".v{staged[n]}", f".v{staged[n] + 1}")
+        [
+            "newdim.parquet",
+            "newdim.parquet.v1",
+            *(
+                f"{n}.parquet{v}"
+                for n in ("fact", "dim")
+                for v in ("", f".v{staged[n]}", f".v{staged[n] + 1}")
+            ),
+        ]
     )
 
 
@@ -895,3 +916,77 @@ def test_directory_copied_in_after_open_is_adopted_on_first_read(
     assert os.readlink(cat.path_of("t")) == "t.parquet.v0"
     assert cat.info("t").commit == cat._resolve("t")[0] != ""
     assert sorted(os.listdir(root)) == ["t.parquet", "t.parquet.v0"]
+
+
+def test_adoption_touches_only_the_tables_in_play(spark, tmp_path):
+    """A commit adopts only the tables it commits to: a directory copied
+    in after open stays as it is through another table's commit, and
+    the next ``Catalog`` to open adopts it. A directory Spark cannot
+    read is adopted with no schema and blocks nothing else on the root;
+    only its own read fails."""
+    root = tmp_path / "cat"
+    bad = root / "bad.parquet"
+    bad.mkdir(parents=True)
+    (bad / "part-00000.parquet").write_bytes(b"not a parquet file")
+    cat = Catalog(spark, str(root))
+    assert os.readlink(cat.path_of("bad")) == "bad.parquet.v0"
+    assert "schema" not in cat._record(cat._version_path("bad", 0))
+
+    cat.put("t", spark.range(0, 3))
+    spark.range(0, 5).write.parquet(cat.path_of("u"))
+    cat.write("t", spark.range(3, 4))
+    assert os.path.isdir(cat.path_of("u")) and not os.path.islink(cat.path_of("u"))
+    assert _ids(cat.get("t")) == [0, 1, 2, 3]
+
+    other = Catalog(spark, str(root))
+    assert os.readlink(other.path_of("u")) == "u.parquet.v0"
+    assert _ids(other.get("u")) == [0, 1, 2, 3, 4]
+    with pytest.raises(Exception):
+        other.get("bad").collect()
+
+
+def test_link_to_a_removed_version_reads_as_missing(spark, tmp_path):
+    """A link whose version directory was removed by hand raises
+    ``AnalysisException`` on read, as a missing table does, and the
+    next commit links a new version."""
+    import shutil
+
+    cat = Catalog(spark, str(tmp_path / "cat"))
+    cat.put("t", spark.range(0, 3))
+    assert _ids(cat.get("t")) == [0, 1, 2]
+    shutil.rmtree(cat._version_path("t", 1))
+    with pytest.raises(AnalysisException):
+        cat.get("t")
+    with pytest.raises(AnalysisException):
+        Catalog(spark, str(tmp_path / "cat")).get("t")
+    cat.put("t", spark.range(5, 7))
+    assert cat.info("t").version == 2 and _ids(cat.get("t")) == [5, 6]
+
+
+def test_rm_unlinks_before_it_removes_versions(spark, tmp_path, monkeypatch):
+    """``rm`` removes the link before the version directories, so one
+    that dies mid-way leaves a missing table whose leftover versions
+    are never published, and a later put starts it afresh."""
+    import shutil
+
+    root = str(tmp_path / "cat")
+    cat = Catalog(spark, root, retain_versions=1)
+    cat.put("t", spark.range(0, 3))
+    cat.put("t", spark.range(3, 6))
+    rmtree = shutil.rmtree
+
+    def dies_after_first(path, *args, **kwargs):
+        rmtree(path, *args, **kwargs)
+        raise RuntimeError("injected crash")
+
+    monkeypatch.setattr(shutil, "rmtree", dies_after_first)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        cat.rm("t")
+    monkeypatch.undo()
+    assert sorted(os.listdir(root)) == ["t.parquet.v2"]
+    again = Catalog(spark, root, retain_versions=1)
+    assert not again.exists("t") and again.info("t").version == 0
+    with pytest.raises(AnalysisException):
+        again.get("t")
+    again.put("t", spark.range(9, 10))
+    assert again.info("t").version == 1 and _ids(again.get("t")) == [9]
