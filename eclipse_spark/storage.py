@@ -376,7 +376,7 @@ class Catalog:
         with contextlib.suppress(FileNotFoundError):
             os.remove(self._journal)
 
-    def _adopt(self, names) -> None:
+    def _adopt(self, names: list[str]) -> None:
         """Under the root lock: make each of ``names`` found as a real
         directory at ``<name>.parquet`` (copied in from outside) the
         table's next version, with a fresh commit id and the schema its
